@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line. Queries are forced
@@ -13,7 +12,7 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // session tuning (codegen-cache sizing etc.) lives in ONE place —
     // graft.Sessions — shared by every entry point
-    val spark = Sessions.local(cpus).getOrCreate()
+    val spark = Sessions.checked(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // warm the session (parquet footer reads, codegen compiler) so the
     // first measured query isn't charged for JVM warmup

@@ -1,9 +1,8 @@
-import org.apache.spark.sql.SparkSession
 /** Dev tool: dump formatted plans of representative queries to stdout
   * for pushdown/broadcast/codegen review. */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = graft.Sessions.local("4").getOrCreate()
+    val spark = graft.Sessions.checked("4")
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.001"
     val names = if (args.nonEmpty) args.toSeq

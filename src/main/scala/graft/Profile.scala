@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
@@ -63,13 +62,7 @@ object Profile {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "1").toInt
-    val spark = Sessions.local(cpus)
-      // dev-only sweep knobs on top of the shared recipe
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "64m"))
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OHA_FALLBACK", "128"))
-      .getOrCreate()
+    val spark = Sessions.checked(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val acc = new Acc
     spark.sparkContext.addSparkListener(acc)

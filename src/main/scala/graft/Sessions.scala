@@ -2,13 +2,20 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** THE shared SparkSession recipe for every entry point (Bench,
-  * Verify, Profile, PlanAudit, the fingerprint regen main and the
-  * test suites): one definition so a session-level tuning decision —
-  * like the codegen-cache sizing below — cannot silently apply to one
-  * entry point and not another (round-11 verdict item 5: the setting
-  * lived in three mains; a fourth entry point, or a real cluster
-  * driver, would have missed it).
+/** THE SparkSession recipe: the only place in the repo that calls
+  * `SparkSession.builder()`. Every entry point (Bench, Verify,
+  * Profile, PlanAudit, both pos CLIs, the scale and fingerprint mains)
+  * gets its session from [[checked]]; every spec shares the one
+  * session held by `graft.TestSession` (test sources), which is built
+  * by [[checked]] too.
+  *
+  * [[checked]] exists because `Builder.getOrCreate` hands back any
+  * live session it finds and re-applies only the runtime SQL confs:
+  * the master, static confs and extensions of the existing session
+  * win silently. So it compares the session it returns against the
+  * recipe on exactly those settings ([[pinned]]) and throws, naming
+  * every key that differs, instead of running under a config the
+  * caller did not ask for.
   *
   * Master/parallelism stay CALLER-CHOSEN: the driver benches at
   * several core counts via SPARK_GRAFT_CPUS, and the plan-snapshot
@@ -26,14 +33,44 @@ object Sessions {
     *   re-Janino-compiled ~2.5 s of identical source. Scale-neutral:
     *   a driver-side class cache, so the same setting is right on a
     *   real cluster driver.
+    * - `spark.sql.extensions`: the engine's native functions and
+    *   planner rules, registered by class name so an existing
+    *   session's extensions can be compared against the recipe.
     * - UI off: these are headless batch entry points.
     */
   def local(cpus: String): SparkSession.Builder =
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .withExtensions(new functions.GraftExtensions)
+    SparkSession.builder().config((pinned(cpus) ++ Seq(
+      "spark.sql.shuffle.partitions" -> cpus,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false")).toMap)
+
+  /** The recipe's settings that `getOrCreate` will not re-apply to an
+    * existing session. */
+  private def pinned(cpus: String): Seq[(String, String)] = Seq(
+    "spark.master" -> s"local[$cpus]",
+    "spark.sql.codegen.cache.maxEntries" -> "10000",
+    "spark.sql.extensions" -> classOf[functions.GraftExtensions].getName)
+
+  /** The session of [[local]]`(cpus)` plus `conf`, or an
+    * IllegalStateException naming each [[pinned]] key on which the
+    * session `getOrCreate` returns differs from the recipe. A live
+    * session is checked BEFORE `getOrCreate`, which would otherwise
+    * overwrite its runtime confs with this caller's first. */
+  def checked(cpus: String, conf: (String, String)*): SparkSession = {
+    def check(s: SparkSession): SparkSession = {
+      val have = s.sparkContext.getConf
+      val diffs = pinned(cpus).collect {
+        case (k, want) if !have.getOption(k).contains(want) =>
+          s"$k=${have.getOption(k).getOrElse("<unset>")} (recipe: $want)"
+      }
+      if (diffs.nonEmpty) throw new IllegalStateException(
+        "existing SparkSession differs from the graft.Sessions recipe " +
+          "on settings getOrCreate does not re-apply: " +
+          diffs.mkString(", "))
+      s
+    }
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .filterNot(_.sparkContext.isStopped).foreach(check)
+    check(local(cpus).config(conf.toMap).getOrCreate())
+  }
 }

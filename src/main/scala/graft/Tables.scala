@@ -50,7 +50,8 @@ object Tables {
   // hit the defaultParallelism cap exactly as before.
   private val BytesPerScanPartition = 128L << 10
 
-  private def scanPartitions(spark: SparkSession, path: String): Int = {
+  private[graft] def scanPartitions(spark: SparkSession,
+                                    path: String): Int = {
     // Hadoop FileSystem API, not java.io.File (round-11 verdict item
     // 2): on a non-local URI (hdfs://, s3a://) File.length silently
     // returned 0 — n = 1, heavy-per-row fan-out gone — and the
@@ -64,7 +65,9 @@ object Tables {
         p.getFileSystem(spark.sparkContext.hadoopConfiguration)
           .getContentSummary(p).getLength
       } catch { case _: Throwable => Long.MaxValue }
-    val ideal = (bytes + BytesPerScanPartition - 1) / BytesPerScanPartition
+    // overflow-free ceiling: the Long.MaxValue failure path must
+    // reach the defaultParallelism cap (TablesSpec)
+    val ideal = (bytes - 1) / BytesPerScanPartition + 1
     math.max(1L, math.min(
       spark.sparkContext.defaultParallelism.toLong, ideal)).toInt
   }

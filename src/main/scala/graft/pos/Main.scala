@@ -160,14 +160,8 @@ object Main {
       case Right(c) => c
       case Left(m) => System.err.println(s"ERROR: $m"); sys.exit(2)
     }
-    val spark = SparkSession.builder()
-      .appName("build_payments_dataset")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.Sessions.checked(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel(if (cfg.verbose) "INFO" else "WARN")
     val noTransport: Transport = (_, _, _) =>
       throw new ExtractionError(
@@ -330,14 +324,8 @@ object ForecastMain {
       case Right(c) => c
       case Left(m) => System.err.println(s"ERROR: $m"); sys.exit(2)
     }
-    val spark = SparkSession.builder()
-      .appName("payments_forecast_pipeline")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.Sessions.checked(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel(if (cfg.verbose) "INFO" else "WARN")
     val code = run(spark, cfg, println)
     spark.stop()

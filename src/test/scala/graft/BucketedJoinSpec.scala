@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,40 +9,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * has NO Exchange. */
 class BucketedJoinSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val wh = Files.createTempDirectory("warehouse").toString
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", wh)
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-  }
+  lazy val spark: SparkSession = TestSession.spark
 
   test("bucketed tables join without a shuffle") {
     val s = spark
     import s.implicits._
     import org.apache.spark.sql.functions._
     val sf = "/root/testdata/sf0.001"
-
-    // when another suite creates the shared session first, the temp
-    // warehouse config above is ignored and ./spark-warehouse is used;
-    // a previous JVM's leftover table LOCATION then fails saveAsTable
-    // (the fresh in-memory catalog has no table to overwrite) — drop
-    // both name and location before writing
-    val wh = new java.net.URI(s.conf.get("spark.sql.warehouse.dir"))
-    Seq("orders_b", "lineitem_b").foreach { t =>
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      val dir = new java.io.File(
-        new java.io.File(Option(wh.getPath).getOrElse("spark-warehouse")),
-        t)
-      if (dir.exists()) {
-        import scala.reflect.io.Directory
-        new Directory(dir).deleteRecursively()
-      }
-    }
 
     Tables.orders(s, sf)
       .write.mode("overwrite")

@@ -15,13 +15,7 @@ object EngineProperties extends Properties("engine") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(10) // each trial runs Spark jobs
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new graft.functions.GraftExtensions)
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSession.spark
 
   // ---------------------------------------------------- pair generation
   private val pairArr: Gen[List[Long]] =

@@ -4,18 +4,10 @@ import graft.functions.GraftExtensions
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Native expression registration + codegen behavior. Own session —
-  * extensions bind at session build time. */
+/** Native expression registration + codegen behavior. */
 class ExtensionsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("ext")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new GraftExtensions)
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSession.spark
 
   test("simhash64_native matches the 64-fold composed spelling") {
     val s = spark

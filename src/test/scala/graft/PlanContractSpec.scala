@@ -10,13 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class PlanContractSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new graft.functions.GraftExtensions)
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSession.spark
 
   /** Final (AQE-resolved) plan string of a registered query. */
   private def plan(name: String): String = {

@@ -9,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class QueriesSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new graft.functions.GraftExtensions)
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSession.spark
 
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)

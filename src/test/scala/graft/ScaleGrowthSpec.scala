@@ -17,13 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * wall-clock, so it cannot flake on a loaded machine). */
 class ScaleGrowthSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new functions.GraftExtensions)
-    .getOrCreate()
+  private lazy val spark: SparkSession = TestSession.spark
 
   private val sf = ScaleRehearsal.SpecSfDir
   private lazy val ampDir: String = {

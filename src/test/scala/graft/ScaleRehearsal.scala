@@ -382,13 +382,7 @@ object ScaleRehearsal {
       .getOrElse(RehearsalQueries)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new functions.GraftExtensions)
-        .getOrCreate()
+      val s = Sessions.checked(cpus)
       s.sparkContext.setLogLevel("ERROR")
       s
     }

@@ -5,7 +5,6 @@ import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** The ×1024 depth probe WITH per-stage cost decomposition — round-8
   * verdict item 1. The ×256 probe left two α ≈ 1.1 residues (q98
@@ -55,13 +54,7 @@ object ScaleStageProbe {
       .map(p => SparkEntry.queries.keys.find(_.contains(p)).getOrElse(
         sys.error(s"no query matches '$p'")))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new functions.GraftExtensions)
-      .getOrCreate()
+    val spark = Sessions.checked(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     // SPARK_GRAFT_SCALE_SKEW probes the Zipf/dup-family profile (the

@@ -9,38 +9,26 @@ import org.scalatest.funsuite.AnyFunSuite
   * so the (small) local fixture trips the optimization. */
 class SkewJoinSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "true")
-    // skew-trip configs live ONLY in the test body (set/save/restore):
-    // putting them in the builder would make them the session-wide
-    // baseline whenever this suite is the one that creates the shared
-    // JVM session, leaking plan-shape changes into every later suite
-    .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    .withExtensions(new graft.functions.GraftExtensions)
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSession.spark
+
+  /** The skew-trip confs, scoped to one test: the session is shared by
+    * every suite, so none of this may become its baseline. */
+  private def withSkewTrip[T](thresholdBytes: String, advisory: String)
+      (body: => T): T = TestSession.withConf(
+    "spark.sql.shuffle.partitions" -> "8",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" ->
+      thresholdBytes,
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisory)(body)
 
   test("AQE splits the hot key's partitions at runtime") {
     val s = spark
     import s.implicits._
     import org.apache.spark.sql.functions._
-    // the session is JVM-shared across suites: apply the skew-trip
-    // configs for this test only and restore afterwards
-    val saved = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes")
-      .map(k => k -> spark.conf.getOption(k))
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      spark.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16KB")
-      spark.conf.set(
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes", "8KB")
+    withSkewTrip("16KB", "8KB") {
       // 100k rows, 95% on one key vs ~100 rows/key elsewhere
       val skewed = spark.range(100000)
         .select(when($"id" % 100 < 95, 0L).otherwise($"id" % 1000)
@@ -56,9 +44,6 @@ class SkewJoinSpec extends AnyFunSuite {
       // AQE marks split partitions with isSkew=true in the final plan
       assert(plan.contains("skew="),
         s"no skew handling in:\n${plan.take(2000)}")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -73,20 +58,9 @@ class SkewJoinSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     import org.apache.spark.sql.functions._
-    val saved = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes")
-      .map(k => k -> spark.conf.getOption(k))
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      // tighter than the synthetic fixture above: 4k real docs
-      // compress to a few KB per shuffle partition
-      spark.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "2KB")
-      spark.conf.set(
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes", "1KB")
+    // tighter than the synthetic fixture above: 4k real docs
+    // compress to a few KB per shuffle partition
+    withSkewTrip("2KB", "1KB") {
       val d = "target/scale-spec/skew-x8"
       ScaleRehearsal.amplify(spark, ScaleRehearsal.SpecSfDir, d, 8,
         skew = true)
@@ -106,9 +80,6 @@ class SkewJoinSpec extends AnyFunSuite {
       assert(plan.contains("SortMergeJoin"), plan.take(500))
       assert(plan.contains("skew="),
         s"no skew handling on the Zipf-hot source:\n${plan.take(2000)}")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

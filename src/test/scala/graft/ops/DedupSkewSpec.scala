@@ -14,13 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * to the oracle's mirrored cap. */
 class DedupSkewSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new graft.functions.GraftExtensions)
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   private def sigFrame(rows: Seq[(Long, Long)]) = {
     val s = spark

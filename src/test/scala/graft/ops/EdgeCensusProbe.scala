@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-shot diagnostic for the ×1024 q98 residue: counts the three
@@ -14,13 +13,7 @@ object EdgeCensusProbe {
   def main(args: Array[String]): Unit = {
     val amps = args.lift(0).getOrElse("64,256,1024")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.Sessions.checked("32")
     spark.sparkContext.setLogLevel("ERROR")
     // SPARK_GRAFT_SCALE_SKEW reads the skew-profile dirs and also
     // counts the k-NN capped lane (q276's) next to the ε lane (q98's)

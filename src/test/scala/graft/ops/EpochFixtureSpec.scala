@@ -13,12 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class EpochFixtureSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   private def alloc(rows: Seq[(String, Long, Double)])
       : Map[String, org.apache.spark.sql.Row] = {

@@ -10,45 +10,31 @@ import org.scalatest.funsuite.AnyFunSuite
   * reaches. This pins the safe spelling against such keys. */
 class HashSafetySpec extends AnyFunSuite {
 
-  // same builder shape as every other suite — the JVM shares ONE
-  // session via getOrCreate, so a divergent master/extensions config
-  // here would either be ignored or poison later suites
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new graft.functions.GraftExtensions)
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   test("sampling hashes survive 100TB-scale ids under ANSI mode") {
     val s = spark
     import s.implicits._
-    val saved = spark.conf.getOption("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    try {
-    val ids = Seq(1L, 3_470_000_000L, 4_000_000_000L,
-      Long.MaxValue / 2654435761L + 7L, 9_007_199_254_740_993L)
-      .toDF("key")
-    // q81's two-round seeded mix
-    val h1 = (pmod($"key", lit(1000000007L)) * lit(2654435761L) +
-      lit(42L * 40503L)) % lit(1000000007L)
-    val h2 = (h1 * lit(2654435761L)) % lit(1000000007L)
-    // q15's single round and q86's pmod spelling
-    val h15 = (pmod($"key", lit(1000000007L)) * lit(2654435761L)) % 100
-    val h86 = pmod(pmod($"key", lit(1000000007L)) * lit(2654435761L),
-      lit(100))
-    val out = ids.select(h2.as("a"), h15.as("b"), h86.as("c")).collect()
-    assert(out.length == 5) // no ArithmeticException under ANSI
-    // and the naive spelling really does overflow — the fix is load-bearing
-    val ex = intercept[Exception] {
-      ids.select(($"key" * lit(2654435761L)).as("boom")).collect()
-    }
-    assert(ex.getMessage.contains("overflow") ||
-      ex.getCause != null, ex.getMessage)
-    } finally saved match {
-      case Some(v) => spark.conf.set("spark.sql.ansi.enabled", v)
-      case None => spark.conf.unset("spark.sql.ansi.enabled")
+    graft.TestSession.withConf("spark.sql.ansi.enabled" -> "true") {
+      val ids = Seq(1L, 3_470_000_000L, 4_000_000_000L,
+        Long.MaxValue / 2654435761L + 7L, 9_007_199_254_740_993L)
+        .toDF("key")
+      // q81's two-round seeded mix
+      val h1 = (pmod($"key", lit(1000000007L)) * lit(2654435761L) +
+        lit(42L * 40503L)) % lit(1000000007L)
+      val h2 = (h1 * lit(2654435761L)) % lit(1000000007L)
+      // q15's single round and q86's pmod spelling
+      val h15 = (pmod($"key", lit(1000000007L)) * lit(2654435761L)) % 100
+      val h86 = pmod(pmod($"key", lit(1000000007L)) * lit(2654435761L),
+        lit(100))
+      val out = ids.select(h2.as("a"), h15.as("b"), h86.as("c")).collect()
+      assert(out.length == 5) // no ArithmeticException under ANSI
+      // and the naive spelling really does overflow — the fix is load-bearing
+      val ex = intercept[Exception] {
+        ids.select(($"key" * lit(2654435761L)).as("boom")).collect()
+      }
+      assert(ex.getMessage.contains("overflow") ||
+        ex.getCause != null, ex.getMessage)
     }
   }
 

@@ -25,13 +25,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class NbFixtureSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new graft.functions.GraftExtensions)
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   /** (doc_id, text). Stop-list = {the, a, of, and, in, to}. */
   private val docs = Seq(

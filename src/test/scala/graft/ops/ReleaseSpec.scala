@@ -10,13 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class ReleaseSpec extends AnyFunSuite {
   private val sf = graft.ScaleRehearsal.SpecSfDir
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new graft.functions.GraftExtensions)
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   test("writeRelease round-trips: audit green, manifest byte-stable, " +
     "artifact census equals q262") {

@@ -7,15 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * attribute comparison and key disappearance. */
 class Scd2Spec extends AnyFunSuite {
 
-  // standard builder shape — the JVM shares ONE session via
-  // getOrCreate, so every suite must carry the extensions
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new graft.functions.GraftExtensions)
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getAs[Long]("k"), r.getAs[String]("seg"),

@@ -1,5 +1,6 @@
 package graft.plans
 
+import graft.TestSession.withConf
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,13 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * no-match / equal-timestamp edges. */
 class AsOfJoinPlanSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new graft.functions.GraftExtensions)
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
@@ -45,18 +40,13 @@ class AsOfJoinPlanSpec extends AnyFunSuite {
     assert(custom == expected)
   }
 
-  /** Run `body` with the broadcast threshold pinned, restoring after. */
-  private def withThreshold[A](v: String)(body: => A): A = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val saved = spark.conf.get(key)
-    spark.conf.set(key, v)
-    try body finally spark.conf.set(key, saved)
-  }
+  private val Broadcast = "spark.sql.autoBroadcastJoinThreshold"
 
   test("plan: merge exec with exchanges and (key, time) sorts") {
     val s = spark
     import s.implicits._
-    withThreshold("-1") { // disable broadcast → co-partitioned merge
+    // disable broadcast → co-partitioned merge
+    withConf(Broadcast -> "-1") {
       val facts = Seq((1L, 10L, "a"), (2L, 5L, "b")).toDF("k", "t", "x")
         .repartition(4)
       val refs = Seq((1L, 3L, 100.0)).toDF("k", "t", "v").repartition(3)
@@ -96,8 +86,8 @@ class AsOfJoinPlanSpec extends AnyFunSuite {
       .select($"event_id", $"sv").collect()
       .map(r => r.getLong(0) ->
         (if (r.isNullAt(1)) null else r.getDouble(1))).toMap
-    val viaBroadcast = withThreshold("10485760") { run() }
-    val viaMerge = withThreshold("-1") { run() }
+    val viaBroadcast = withConf(Broadcast -> "10485760") { run() }
+    val viaMerge = withConf(Broadcast -> "-1") { run() }
     assert(viaBroadcast == viaMerge && viaBroadcast.nonEmpty)
   }
 
@@ -143,8 +133,8 @@ class AsOfJoinPlanSpec extends AnyFunSuite {
     val expected = Map[Long, Any](1L -> 1.0, 2L -> 1.0, 3L -> 2.0,
       4L -> null, // NULL fact key matches nothing (not key "a"/"b")
       5L -> null) // NULL fact time matches nothing
-    val viaMerge = withThreshold("-1") { run() }
-    val viaBcast = withThreshold("10485760") { run() }
+    val viaMerge = withConf(Broadcast -> "-1") { run() }
+    val viaBcast = withConf(Broadcast -> "10485760") { run() }
     assert(viaMerge == expected, viaMerge)
     assert(viaBcast == expected, viaBcast)
   }

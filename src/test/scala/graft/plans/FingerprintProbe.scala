@@ -13,7 +13,7 @@ object FingerprintProbe {
   def main(args: Array[String]): Unit = {
     val pats = args.filterNot(_.forall(_.isDigit)).toSeq
     val reps = args.find(_.forall(_.isDigit)).map(_.toInt).getOrElse(4)
-    val spark = graft.Sessions.local("4").getOrCreate()
+    val spark = graft.Sessions.checked("4")
     spark.sparkContext.setLogLevel("ERROR")
     graft.SparkEntry.queries.keys.toSeq.sorted
       .filter(n => pats.exists(n.contains)).foreach { name =>

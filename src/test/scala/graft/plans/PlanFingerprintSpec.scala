@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * New queries must be snapshotted the same way. */
 class PlanFingerprintSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = graft.Sessions.local("4").getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   test("every registry plan matches its reviewed fingerprint") {
     val path = java.nio.file.Paths.get(PlanFingerprints.SnapshotPath)

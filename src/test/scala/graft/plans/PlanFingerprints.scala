@@ -129,20 +129,16 @@ object PlanFingerprints {
     * just this query (session conf read at planning time, restored
     * after). Deterministic by construction: no runtime stats, no
     * stage races — the pinning lane for the [[Volatile]] set. */
-  def staticFingerprint(spark: org.apache.spark.sql.SparkSession,
-                        build: => DataFrame): String = {
-    val key = "spark.sql.adaptive.enabled"
-    val saved = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try fingerprint(build) finally spark.conf.set(key, saved)
-  }
+  def staticFingerprint(build: => DataFrame): String =
+    graft.TestSession.withConf("spark.sql.adaptive.enabled" -> "false")(
+      fingerprint(build))
 
   /** All registry fingerprints, sorted by query name. */
   def computeAll(spark: org.apache.spark.sql.SparkSession)
       : Seq[(String, String)] =
     graft.SparkEntry.queries.keys.toSeq.sorted.map { name =>
       if (Volatile(name))
-        name -> ("STATIC " + staticFingerprint(spark,
+        name -> ("STATIC " + staticFingerprint(
           graft.SparkEntry.queries(name)(spark, SfDir)))
       else
         name -> fingerprint(graft.SparkEntry.queries(name)(spark, SfDir))
@@ -157,11 +153,10 @@ object PlanFingerprints {
 
   /** Regen entry point — writes the snapshot file. */
   def main(args: Array[String]): Unit = {
-    // SAME session shape as the test suites — AQE decisions (shuffle
-    // coalescing, broadcast demotion) are config- and stats-driven,
-    // so the snapshot must be generated under the config it is
-    // checked under
-    val spark = graft.Sessions.local("4").getOrCreate()
+    // THE test session — AQE decisions (shuffle coalescing, broadcast
+    // demotion) are config- and stats-driven, so the snapshot must be
+    // generated under the session it is checked under
+    val spark = graft.TestSession.spark
     spark.sparkContext.setLogLevel("ERROR")
     val lines =
       Seq("# AQE-final operator multiset per registry query at sf0.001.",

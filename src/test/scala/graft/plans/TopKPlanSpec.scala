@@ -1,5 +1,6 @@
 package graft.plans
 
+import graft.TestSession.withConf
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -10,13 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class TopKPlanSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new graft.functions.GraftExtensions)
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
+  private val Rewrite = "spark.graft.topk.rewrite"
 
   private def docs = graft.Tables.documents(spark, sf)
     .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -59,8 +55,7 @@ class TopKPlanSpec extends AnyFunSuite {
   }
 
   test("optimizer rewrite plans the heap operator for window top-k SQL") {
-    spark.conf.set("spark.graft.topk.rewrite", "true")
-    try {
+    withConf(Rewrite -> "true") {
       graft.GraftSql.registerTables(spark, sf)
       val sql = """
         SELECT lang, doc_id, rn FROM (
@@ -75,16 +70,16 @@ class TopKPlanSpec extends AnyFunSuite {
       assert(!p.contains("Window"), p.take(2000))
       val rewritten = df.collect()
         .map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSet
-      spark.conf.set("spark.graft.topk.rewrite", "false")
-      val plain = spark.sql(sql).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSet
+      val plain = withConf(Rewrite -> "false") {
+        spark.sql(sql).collect()
+          .map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSet
+      }
       assert(rewritten == plain)
-    } finally spark.conf.set("spark.graft.topk.rewrite", "false")
+    }
   }
 
   test("rewrite leaves non-row_number and compound filters alone") {
-    spark.conf.set("spark.graft.topk.rewrite", "true")
-    try {
+    withConf(Rewrite -> "true") {
       graft.GraftSql.registerTables(spark, sf)
       // rank() is not row_number (ties share ranks) — must keep Window
       val rankDf = spark.sql("""
@@ -106,12 +101,11 @@ class TopKPlanSpec extends AnyFunSuite {
       assert(compound.queryExecution.optimizedPlan.toString
         .contains("windowspecdefinition"),
         compound.queryExecution.optimizedPlan.toString.take(1500))
-    } finally spark.conf.set("spark.graft.topk.rewrite", "false")
+    }
   }
 
   test("rewrite fires through a renamed rank; declines a recomputed one") {
-    spark.conf.set("spark.graft.topk.rewrite", "true")
-    try {
+    withConf(Rewrite -> "true") {
       graft.GraftSql.registerTables(spark, sf)
       // rn renamed to rank, plus a computed passenger column — both
       // flow through one collapsed Project; the rewrite must fire and
@@ -130,12 +124,12 @@ class TopKPlanSpec extends AnyFunSuite {
       val rewritten = df.collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
           r.getInt(3))).toSet
-      spark.conf.set("spark.graft.topk.rewrite", "false")
-      val plain = spark.sql(sql).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-          r.getInt(3))).toSet
+      val plain = withConf(Rewrite -> "false") {
+        spark.sql(sql).collect()
+          .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+            r.getInt(3))).toSet
+      }
       assert(rewritten == plain)
-      spark.conf.set("spark.graft.topk.rewrite", "true")
       // a RECOMPUTED rank (rn + 1) bounds something else — keep Window
       val recomputed = spark.sql("""
         SELECT lang, doc_id, rank FROM (
@@ -147,7 +141,7 @@ class TopKPlanSpec extends AnyFunSuite {
       assert(recomputed.queryExecution.optimizedPlan.toString
         .contains("windowspecdefinition"),
         recomputed.queryExecution.optimizedPlan.toString.take(1500))
-    } finally spark.conf.set("spark.graft.topk.rewrite", "false")
+    }
   }
 
   test("GLOBAL top-k (no group keys) plans AllTuples, not a crash") {
@@ -162,8 +156,7 @@ class TopKPlanSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(ours == ref)
     // and via the rewrite — the no-PARTITION-BY SQL idiom
-    spark.conf.set("spark.graft.topk.rewrite", "true")
-    try {
+    withConf(Rewrite -> "true") {
       graft.GraftSql.registerTables(spark, sf)
       val df = spark.sql("""
         SELECT doc_id, rn FROM (
@@ -175,7 +168,7 @@ class TopKPlanSpec extends AnyFunSuite {
         .toSet == ref)
       assert(df.queryExecution.executedPlan.toString
         .contains("TopKFinal"))
-    } finally spark.conf.set("spark.graft.topk.rewrite", "false")
+    }
   }
 
   test("ascending order and multi-column groups work") {

@@ -7,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Fetch/load idempotence + edge CSV IO. */
 class ApiSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new graft.functions.GraftExtensions)
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   private def payments: DataFrame = {
     val s = spark

@@ -9,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * reference's live e2e tier (tests/test_etl_smoke.py:78-202). */
 class EndToEndSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new graft.functions.GraftExtensions)
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   /** 40 days × 2 payment rows/day as a raw report grid with title
     * junk, EU/US number formats, and a footer. */

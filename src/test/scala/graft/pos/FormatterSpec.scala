@@ -1,7 +1,6 @@
 package graft.pos
 
 import java.time.LocalDate
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden-text contracts for the forecast renderers. The expected
@@ -97,12 +96,7 @@ class FormatterSpec extends AnyFunSuite {
   }
 
   test("ForecastResult.collect round-trips the forecast frames") {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.TestSession.spark
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     // 35 days of history for one branch -> naive 7-day horizon

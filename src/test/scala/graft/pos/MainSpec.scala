@@ -13,13 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * error path) driven off a mart CSV fixture. */
 class MainSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new graft.functions.GraftExtensions)
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   // ------------------------------------------------ fixtures
 

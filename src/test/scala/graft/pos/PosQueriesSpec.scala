@@ -10,12 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * forced re-aggregate when metadata is ok but output missing). */
 class PosQueriesSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   private final class Counters {
     var download = 0

@@ -8,13 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the Spark twin of the reference's own unit tiers (SURVEY §5). */
 class PosSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new graft.functions.GraftExtensions)
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   import scala.jdk.CollectionConverters._
 

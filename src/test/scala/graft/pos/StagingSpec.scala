@@ -8,13 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * rows, duplicate headers, footer rows, dirty values. */
 class StagingSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new graft.functions.GraftExtensions)
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   /** Bronze contract: grid → (_row, _c0.._cN). */
   private def grid(rows: Seq[Seq[String]]): DataFrame = {

@@ -11,12 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * and an explicit schema skipping inference. */
 class XlsxSourceSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   private def writeWorkbooks(): String = {
     val dir = Files.createTempDirectory("xlsx_dsv2").toFile

@@ -9,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * bronze e2e into PaymentsCleaner. */
 class XlsxSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new graft.functions.GraftExtensions)
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
 
   test("writer → reader round trip preserves strings, numbers, gaps") {
     val rows: Seq[Seq[Any]] = Seq(

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.TestSession.withConf
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
@@ -7,13 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Streaming transforms driven through MemoryStream → memory sink. */
 class StreamingSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new graft.functions.GraftExtensions)
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession.spark
+
+  /** The state-v2 API (transformWithState) requires RocksDB state. */
+  private val RocksDbStateStore =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
@@ -103,50 +103,40 @@ class StreamingSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
-    // the state-v2 API requires the RocksDB state store; session-scoped
-    // conf, so save/restore around the query like SkewJoinSpec does
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[EventStreaming.Event]
-    input.addData(
-      EventStreaming.Event(1, ts("2024-01-01 10:00:00"), 1, "click", 1.0),
-      EventStreaming.Event(2, ts("2024-01-01 10:10:00"), 1, "click", 2.0),
-      EventStreaming.Event(3, ts("2024-01-01 12:00:00"), 1, "view", 3.0))
-    val q = EventStreaming.sessionizeTws(input.toDS())
-      .writeStream.format("memory").queryName("tws_sess")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      // burst 1 closed by DATA (event 3 arrived past the gap)
-      val afterData = spark.table("tws_sess").collect()
-      assert(afterData.length == 1)
-      assert(afterData(0).getAs[Long]("n_events") == 2 &&
-        afterData(0).getAs[Double]("total_value") == 3.0)
-      // push the watermark past 12:00 + 30 min via an unrelated user;
-      // the TIMER (not data) must close user 1's open session. Two
-      // rounds: watermark computed at end of batch N applies in N+1.
-      input.addData(EventStreaming.Event(4,
-        ts("2024-01-01 23:00:00"), 99, "click", 7.0))
-      q.processAllAvailable()
-      input.addData(EventStreaming.Event(5,
-        ts("2024-01-01 23:01:00"), 99, "click", 1.0))
-      q.processAllAvailable()
-      val rows = spark.table("tws_sess").collect()
-        .filter(_.getAs[Long]("user_id") == 1)
-        .sortBy(_.getAs[java.sql.Timestamp]("session_start").getTime)
-      assert(rows.length == 2, rows.mkString(";"))
-      assert(rows(1).getAs[Long]("n_events") == 1 &&
-        rows(1).getAs[Double]("total_value") == 3.0)
-      assert(rows(1).getAs[java.sql.Timestamp]("session_end").toString
-        .startsWith("2024-01-01 12:00"))
-    } finally {
-      q.stop()
-      saved match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withConf(RocksDbStateStore) {
+      val input = MemoryStream[EventStreaming.Event]
+      input.addData(
+        EventStreaming.Event(1, ts("2024-01-01 10:00:00"), 1, "click", 1.0),
+        EventStreaming.Event(2, ts("2024-01-01 10:10:00"), 1, "click", 2.0),
+        EventStreaming.Event(3, ts("2024-01-01 12:00:00"), 1, "view", 3.0))
+      val q = EventStreaming.sessionizeTws(input.toDS())
+        .writeStream.format("memory").queryName("tws_sess")
+        .outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        // burst 1 closed by DATA (event 3 arrived past the gap)
+        val afterData = spark.table("tws_sess").collect()
+        assert(afterData.length == 1)
+        assert(afterData(0).getAs[Long]("n_events") == 2 &&
+          afterData(0).getAs[Double]("total_value") == 3.0)
+        // push the watermark past 12:00 + 30 min via an unrelated user;
+        // the TIMER (not data) must close user 1's open session. Two
+        // rounds: watermark computed at end of batch N applies in N+1.
+        input.addData(EventStreaming.Event(4,
+          ts("2024-01-01 23:00:00"), 99, "click", 7.0))
+        q.processAllAvailable()
+        input.addData(EventStreaming.Event(5,
+          ts("2024-01-01 23:01:00"), 99, "click", 1.0))
+        q.processAllAvailable()
+        val rows = spark.table("tws_sess").collect()
+          .filter(_.getAs[Long]("user_id") == 1)
+          .sortBy(_.getAs[java.sql.Timestamp]("session_start").getTime)
+        assert(rows.length == 2, rows.mkString(";"))
+        assert(rows(1).getAs[Long]("n_events") == 1 &&
+          rows(1).getAs[Double]("total_value") == 3.0)
+        assert(rows(1).getAs[java.sql.Timestamp]("session_end").toString
+          .startsWith("2024-01-01 12:00"))
+      } finally q.stop()
     }
   }
 
@@ -154,59 +144,51 @@ class StreamingSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // batch backfill left user 1 with an OPEN session (2 events, last
-    // seen 09:50) and user 2 with one (last seen 08:00)
-    val initial = Seq(
-      1L -> EventStreaming.SessionState(
-        ts("2024-01-01 09:40:00").getTime,
-        ts("2024-01-01 09:50:00").getTime, 2, 4.0),
-      2L -> EventStreaming.SessionState(
-        ts("2024-01-01 08:00:00").getTime,
-        ts("2024-01-01 08:00:00").getTime, 1, 9.0)).toDS()
-    val input = MemoryStream[EventStreaming.Event]
-    // user 1's first STREAM event lands within the gap of the
-    // bootstrapped session → must extend it, not start a new one
-    input.addData(
-      EventStreaming.Event(1, ts("2024-01-01 10:00:00"), 1, "click", 1.0))
-    val q = EventStreaming
-      .sessionizeBootstrapped(input.toDS(), initial)
-      .writeStream.format("memory").queryName("boot_sess")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      // advance the watermark far past both deadlines (two rounds: the
-      // watermark computed at the end of batch N applies in N+1)
-      input.addData(EventStreaming.Event(9,
-        ts("2024-01-01 23:00:00"), 99, "click", 0.0))
-      q.processAllAvailable()
-      input.addData(EventStreaming.Event(10,
-        ts("2024-01-01 23:01:00"), 99, "click", 0.0))
-      q.processAllAvailable()
-      val rows = spark.table("boot_sess").collect()
-      val u1 = rows.filter(_.getAs[Long]("user_id") == 1)
-      assert(u1.length == 1, rows.mkString(";"))
-      // bootstrapped 2 events + 1 stream event, values 4.0 + 1.0,
-      // session start preserved from the BATCH state
-      assert(u1(0).getAs[Long]("n_events") == 3)
-      assert(u1(0).getAs[Double]("total_value") == 5.0)
-      assert(u1(0).getAs[java.sql.Timestamp]("session_start").toString
-        .startsWith("2024-01-01 09:40"))
-      // user 2 saw NO stream events: the bootstrap-armed timer alone
-      // must close it
-      val u2 = rows.filter(_.getAs[Long]("user_id") == 2)
-      assert(u2.length == 1, rows.mkString(";"))
-      assert(u2(0).getAs[Long]("n_events") == 1 &&
-        u2(0).getAs[Double]("total_value") == 9.0)
-    } finally {
-      q.stop()
-      saved match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withConf(RocksDbStateStore) {
+      // batch backfill left user 1 with an OPEN session (2 events, last
+      // seen 09:50) and user 2 with one (last seen 08:00)
+      val initial = Seq(
+        1L -> EventStreaming.SessionState(
+          ts("2024-01-01 09:40:00").getTime,
+          ts("2024-01-01 09:50:00").getTime, 2, 4.0),
+        2L -> EventStreaming.SessionState(
+          ts("2024-01-01 08:00:00").getTime,
+          ts("2024-01-01 08:00:00").getTime, 1, 9.0)).toDS()
+      val input = MemoryStream[EventStreaming.Event]
+      // user 1's first STREAM event lands within the gap of the
+      // bootstrapped session → must extend it, not start a new one
+      input.addData(
+        EventStreaming.Event(1, ts("2024-01-01 10:00:00"), 1, "click", 1.0))
+      val q = EventStreaming
+        .sessionizeBootstrapped(input.toDS(), initial)
+        .writeStream.format("memory").queryName("boot_sess")
+        .outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        // advance the watermark far past both deadlines (two rounds: the
+        // watermark computed at the end of batch N applies in N+1)
+        input.addData(EventStreaming.Event(9,
+          ts("2024-01-01 23:00:00"), 99, "click", 0.0))
+        q.processAllAvailable()
+        input.addData(EventStreaming.Event(10,
+          ts("2024-01-01 23:01:00"), 99, "click", 0.0))
+        q.processAllAvailable()
+        val rows = spark.table("boot_sess").collect()
+        val u1 = rows.filter(_.getAs[Long]("user_id") == 1)
+        assert(u1.length == 1, rows.mkString(";"))
+        // bootstrapped 2 events + 1 stream event, values 4.0 + 1.0,
+        // session start preserved from the BATCH state
+        assert(u1(0).getAs[Long]("n_events") == 3)
+        assert(u1(0).getAs[Double]("total_value") == 5.0)
+        assert(u1(0).getAs[java.sql.Timestamp]("session_start").toString
+          .startsWith("2024-01-01 09:40"))
+        // user 2 saw NO stream events: the bootstrap-armed timer alone
+        // must close it
+        val u2 = rows.filter(_.getAs[Long]("user_id") == 2)
+        assert(u2.length == 1, rows.mkString(";"))
+        assert(u2(0).getAs[Long]("n_events") == 1 &&
+          u2(0).getAs[Double]("total_value") == 9.0)
+      } finally q.stop()
     }
   }
 
@@ -214,61 +196,53 @@ class StreamingSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[EventStreaming.Event]
-    // user 1 interleaves clicks and views; the 11:00 click is > 30 min
-    // past the last CLICK (10:10) so the click session closes even
-    // though a view arrived in between at 10:20
-    input.addData(
-      EventStreaming.Event(1, ts("2024-01-01 10:00:00"), 1, "click", 1.0),
-      EventStreaming.Event(2, ts("2024-01-01 10:10:00"), 1, "click", 2.0),
-      EventStreaming.Event(3, ts("2024-01-01 10:20:00"), 1, "view", 4.0),
-      EventStreaming.Event(4, ts("2024-01-01 11:00:00"), 1, "click", 8.0))
-    val q = EventStreaming.sessionizeByChannel(input.toDS())
-      .writeStream.format("memory").queryName("ch_sess")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      // click #1 closes by DATA (the 11:00 click is past its gap); the
-      // view closes by TIMER already here — the 11:00 event pushes the
-      // 0-delay watermark past the view's 10:50 idle deadline
-      val firstBatch = spark.table("ch_sess").collect()
-        .sortBy(_.getAs[String]("channel"))
-      assert(firstBatch.length == 2, firstBatch.mkString(";"))
-      assert(firstBatch(0).getAs[String]("channel") == "click" &&
-        firstBatch(0).getAs[Long]("n_events") == 2 &&
-        firstBatch(0).getAs[Double]("total_value") == 3.0)
-      assert(firstBatch(1).getAs[String]("channel") == "view" &&
-        firstBatch(1).getAs[Double]("total_value") == 4.0)
-      // watermark past every deadline → the timer closes the still-open
-      // second click session
-      input.addData(EventStreaming.Event(9,
-        ts("2024-01-01 23:00:00"), 99, "click", 0.0))
-      q.processAllAvailable()
-      input.addData(EventStreaming.Event(10,
-        ts("2024-01-01 23:01:00"), 99, "click", 0.0))
-      q.processAllAvailable()
-      val u1 = spark.table("ch_sess").collect()
-        .filter(_.getAs[Long]("user_id") == 1)
-        .sortBy(r => (r.getAs[String]("channel"),
-          r.getAs[java.sql.Timestamp]("session_start").getTime))
-      assert(u1.length == 3, u1.mkString(";"))
-      // click #2: the lone 11:00 event; view: the lone 10:20 event
-      assert(u1(1).getAs[String]("channel") == "click" &&
-        u1(1).getAs[Long]("n_events") == 1 &&
-        u1(1).getAs[Double]("total_value") == 8.0)
-      assert(u1(2).getAs[String]("channel") == "view" &&
-        u1(2).getAs[Long]("n_events") == 1 &&
-        u1(2).getAs[Double]("total_value") == 4.0)
-    } finally {
-      q.stop()
-      saved match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withConf(RocksDbStateStore) {
+      val input = MemoryStream[EventStreaming.Event]
+      // user 1 interleaves clicks and views; the 11:00 click is > 30 min
+      // past the last CLICK (10:10) so the click session closes even
+      // though a view arrived in between at 10:20
+      input.addData(
+        EventStreaming.Event(1, ts("2024-01-01 10:00:00"), 1, "click", 1.0),
+        EventStreaming.Event(2, ts("2024-01-01 10:10:00"), 1, "click", 2.0),
+        EventStreaming.Event(3, ts("2024-01-01 10:20:00"), 1, "view", 4.0),
+        EventStreaming.Event(4, ts("2024-01-01 11:00:00"), 1, "click", 8.0))
+      val q = EventStreaming.sessionizeByChannel(input.toDS())
+        .writeStream.format("memory").queryName("ch_sess")
+        .outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        // click #1 closes by DATA (the 11:00 click is past its gap); the
+        // view closes by TIMER already here — the 11:00 event pushes the
+        // 0-delay watermark past the view's 10:50 idle deadline
+        val firstBatch = spark.table("ch_sess").collect()
+          .sortBy(_.getAs[String]("channel"))
+        assert(firstBatch.length == 2, firstBatch.mkString(";"))
+        assert(firstBatch(0).getAs[String]("channel") == "click" &&
+          firstBatch(0).getAs[Long]("n_events") == 2 &&
+          firstBatch(0).getAs[Double]("total_value") == 3.0)
+        assert(firstBatch(1).getAs[String]("channel") == "view" &&
+          firstBatch(1).getAs[Double]("total_value") == 4.0)
+        // watermark past every deadline → the timer closes the still-open
+        // second click session
+        input.addData(EventStreaming.Event(9,
+          ts("2024-01-01 23:00:00"), 99, "click", 0.0))
+        q.processAllAvailable()
+        input.addData(EventStreaming.Event(10,
+          ts("2024-01-01 23:01:00"), 99, "click", 0.0))
+        q.processAllAvailable()
+        val u1 = spark.table("ch_sess").collect()
+          .filter(_.getAs[Long]("user_id") == 1)
+          .sortBy(r => (r.getAs[String]("channel"),
+            r.getAs[java.sql.Timestamp]("session_start").getTime))
+        assert(u1.length == 3, u1.mkString(";"))
+        // click #2: the lone 11:00 event; view: the lone 10:20 event
+        assert(u1(1).getAs[String]("channel") == "click" &&
+          u1(1).getAs[Long]("n_events") == 1 &&
+          u1(1).getAs[Double]("total_value") == 8.0)
+        assert(u1(2).getAs[String]("channel") == "view" &&
+          u1(2).getAs[Long]("n_events") == 1 &&
+          u1(2).getAs[Double]("total_value") == 4.0)
+      } finally q.stop()
     }
   }
 
@@ -359,48 +333,40 @@ class StreamingSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[EventStreaming.Event]
-    input.addData(
-      EventStreaming.Event(2, ts("2024-01-01 10:05:00"), 1, "purchase", 20.0),
-      EventStreaming.Event(1, ts("2024-01-01 10:00:00"), 1, "click", 10.0),
-      EventStreaming.Event(3, ts("2024-01-01 10:06:00"), 2, "view", 5.0))
-    val q = EventStreaming.maintainFeatures(input.toDS())
-      .writeStream.format("memory").queryName("feat")
-      .outputMode("update").start()
-    try {
-      q.processAllAvailable()
-      val b1 = spark.table("feat").collect()
-        .map(r => r.getAs[Long]("user_id") -> r).toMap
-      // out-of-order rows within the batch fold in ts order
-      assert(b1(1L).getAs[Long]("n_events") == 2 &&
-        b1(1L).getAs[Long]("n_purchases") == 1 &&
-        b1(1L).getAs[Double]("total_value") == 30.0 &&
-        b1(1L).getAs[java.sql.Timestamp]("last_seen") ==
-          ts("2024-01-01 10:05:00"))
-      assert(b1(2L).getAs[Long]("n_events") == 1)
-      // second batch touches only user 1 → exactly one new upsert row
+    withConf(RocksDbStateStore) {
+      val input = MemoryStream[EventStreaming.Event]
       input.addData(
-        EventStreaming.Event(4, ts("2024-01-01 11:00:00"), 1, "purchase", 7.5))
-      q.processAllAvailable()
-      val rows = spark.table("feat").collect()
-      assert(rows.length == 3, s"expected 3 upserts, got ${rows.length}")
-      val last = rows.filter(_.getAs[Long]("user_id") == 1L)
-        .maxBy(_.getAs[Long]("n_events"))
-      assert(last.getAs[Long]("n_events") == 3 &&
-        last.getAs[Long]("n_purchases") == 2 &&
-        last.getAs[Double]("total_value") == 37.5 &&
-        last.getAs[java.sql.Timestamp]("last_seen") ==
-          ts("2024-01-01 11:00:00"))
-    } finally {
-      q.stop()
-      saved match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+        EventStreaming.Event(2, ts("2024-01-01 10:05:00"), 1, "purchase", 20.0),
+        EventStreaming.Event(1, ts("2024-01-01 10:00:00"), 1, "click", 10.0),
+        EventStreaming.Event(3, ts("2024-01-01 10:06:00"), 2, "view", 5.0))
+      val q = EventStreaming.maintainFeatures(input.toDS())
+        .writeStream.format("memory").queryName("feat")
+        .outputMode("update").start()
+      try {
+        q.processAllAvailable()
+        val b1 = spark.table("feat").collect()
+          .map(r => r.getAs[Long]("user_id") -> r).toMap
+        // out-of-order rows within the batch fold in ts order
+        assert(b1(1L).getAs[Long]("n_events") == 2 &&
+          b1(1L).getAs[Long]("n_purchases") == 1 &&
+          b1(1L).getAs[Double]("total_value") == 30.0 &&
+          b1(1L).getAs[java.sql.Timestamp]("last_seen") ==
+            ts("2024-01-01 10:05:00"))
+        assert(b1(2L).getAs[Long]("n_events") == 1)
+        // second batch touches only user 1 → exactly one new upsert row
+        input.addData(
+          EventStreaming.Event(4, ts("2024-01-01 11:00:00"), 1, "purchase", 7.5))
+        q.processAllAvailable()
+        val rows = spark.table("feat").collect()
+        assert(rows.length == 3, s"expected 3 upserts, got ${rows.length}")
+        val last = rows.filter(_.getAs[Long]("user_id") == 1L)
+          .maxBy(_.getAs[Long]("n_events"))
+        assert(last.getAs[Long]("n_events") == 3 &&
+          last.getAs[Long]("n_purchases") == 2 &&
+          last.getAs[Double]("total_value") == 37.5 &&
+          last.getAs[java.sql.Timestamp]("last_seen") ==
+            ts("2024-01-01 11:00:00"))
+      } finally q.stop()
     }
   }
 
@@ -408,51 +374,43 @@ class StreamingSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[EventStreaming.Event]
-    input.addData(
-      // user 1 (out of order in the batch): view → click → purchase
-      EventStreaming.Event(3, ts("2024-01-01 10:02:00"), 1, "purchase", 50.0),
-      EventStreaming.Event(1, ts("2024-01-01 10:00:00"), 1, "view", 0.0),
-      EventStreaming.Event(2, ts("2024-01-01 10:01:00"), 1, "click", 0.0),
-      // user 2: purchase with NO prior touch → gated
-      EventStreaming.Event(4, ts("2024-01-01 10:03:00"), 2, "purchase", 9.0))
-    val q = EventStreaming.attributeStream(input.toDS())
-      .writeStream.format("memory").queryName("attr")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val b1 = spark.table("attr").collect()
-      assert(b1.length == 1, b1.mkString(";"))
-      assert(b1(0).getAs[Long]("purchase_id") == 3L &&
-        b1(0).getAs[String]("first_touch") == "view" &&
-        b1(0).getAs[String]("last_touch") == "click" &&
-        b1(0).getAs[Double]("value") == 50.0)
-      // batch 2: state persisted — a new touch moves last but not
-      // first; user 2's first touch arrives, then converts
+    withConf(RocksDbStateStore) {
+      val input = MemoryStream[EventStreaming.Event]
       input.addData(
-        EventStreaming.Event(5, ts("2024-01-01 11:00:00"), 1, "signup", 0.0),
-        EventStreaming.Event(6, ts("2024-01-01 11:01:00"), 1, "purchase", 25.0),
-        EventStreaming.Event(7, ts("2024-01-01 11:02:00"), 2, "view", 0.0),
-        EventStreaming.Event(8, ts("2024-01-01 11:03:00"), 2, "purchase", 8.0))
-      q.processAllAvailable()
-      val rows = spark.table("attr").collect()
-        .map(r => r.getAs[Long]("purchase_id") -> r).toMap
-      assert(rows.size == 3, rows.keySet.toString)
-      assert(rows(6L).getAs[String]("first_touch") == "view" &&
-        rows(6L).getAs[String]("last_touch") == "signup")
-      assert(rows(8L).getAs[String]("first_touch") == "view" &&
-        rows(8L).getAs[String]("last_touch") == "view" &&
-        rows(8L).getAs[Double]("value") == 8.0)
-    } finally {
-      q.stop()
-      saved match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+        // user 1 (out of order in the batch): view → click → purchase
+        EventStreaming.Event(3, ts("2024-01-01 10:02:00"), 1, "purchase", 50.0),
+        EventStreaming.Event(1, ts("2024-01-01 10:00:00"), 1, "view", 0.0),
+        EventStreaming.Event(2, ts("2024-01-01 10:01:00"), 1, "click", 0.0),
+        // user 2: purchase with NO prior touch → gated
+        EventStreaming.Event(4, ts("2024-01-01 10:03:00"), 2, "purchase", 9.0))
+      val q = EventStreaming.attributeStream(input.toDS())
+        .writeStream.format("memory").queryName("attr")
+        .outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        val b1 = spark.table("attr").collect()
+        assert(b1.length == 1, b1.mkString(";"))
+        assert(b1(0).getAs[Long]("purchase_id") == 3L &&
+          b1(0).getAs[String]("first_touch") == "view" &&
+          b1(0).getAs[String]("last_touch") == "click" &&
+          b1(0).getAs[Double]("value") == 50.0)
+        // batch 2: state persisted — a new touch moves last but not
+        // first; user 2's first touch arrives, then converts
+        input.addData(
+          EventStreaming.Event(5, ts("2024-01-01 11:00:00"), 1, "signup", 0.0),
+          EventStreaming.Event(6, ts("2024-01-01 11:01:00"), 1, "purchase", 25.0),
+          EventStreaming.Event(7, ts("2024-01-01 11:02:00"), 2, "view", 0.0),
+          EventStreaming.Event(8, ts("2024-01-01 11:03:00"), 2, "purchase", 8.0))
+        q.processAllAvailable()
+        val rows = spark.table("attr").collect()
+          .map(r => r.getAs[Long]("purchase_id") -> r).toMap
+        assert(rows.size == 3, rows.keySet.toString)
+        assert(rows(6L).getAs[String]("first_touch") == "view" &&
+          rows(6L).getAs[String]("last_touch") == "signup")
+        assert(rows(8L).getAs[String]("first_touch") == "view" &&
+          rows(8L).getAs[String]("last_touch") == "view" &&
+          rows(8L).getAs[Double]("value") == 8.0)
+      } finally q.stop()
     }
   }
 
@@ -460,54 +418,46 @@ class StreamingSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[EventStreaming.Event]
-    // baseline mu=10, sigma=2 → k=1, h=8; values at 15 add 4 per event
-    // to the up-side, so the 3rd shifted event crosses (12 > 8),
-    // alarms, resets — and the next 3 cross again exactly once
-    val q = EventStreaming.monitorDrift(input.toDS(),
-        Map("click" -> (10.0, 2.0)))
-      .writeStream.format("memory").queryName("drift")
-      .outputMode("append").start()
-    try {
-      // in-baseline values: no alarm
-      input.addData((1 to 4).map(i => EventStreaming.Event(
-        i.toLong, ts(s"2024-01-01 10:0$i:00"), 1, "click", 10.0)): _*)
-      q.processAllAvailable()
-      assert(spark.table("drift").count() == 0)
-      // sustained +5 shift across two micro-batches (state carries)
-      input.addData((5 to 7).map(i => EventStreaming.Event(
-        i.toLong, ts(s"2024-01-01 10:1${i - 5}:00"), 1, "click", 15.0)): _*)
-      q.processAllAvailable()
-      input.addData((8 to 10).map(i => EventStreaming.Event(
-        i.toLong, ts(s"2024-01-01 10:2${i - 8}:00"), 1, "click", 15.0)): _*)
-      q.processAllAvailable()
-      val alarms = spark.table("drift").collect()
-      assert(alarms.length == 2, alarms.mkString(","))
-      assert(alarms.forall(_.getAs[String]("side") == "up"))
-      assert(alarms.forall(_.getAs[Double]("cusum") == 12.0))
-      // a type with no baseline emits nothing
-      input.addData(EventStreaming.Event(11,
-        ts("2024-01-01 10:30:00"), 1, "view", 999.0))
-      q.processAllAvailable()
-      assert(spark.table("drift").count() == 2)
-      // downward shift: values at 4 add 10-4-1=5 per event to dn;
-      // crosses on the 2nd (10 > 8)
-      input.addData((12 to 13).map(i => EventStreaming.Event(
-        i.toLong, ts(s"2024-01-01 10:4${i - 12}:00"), 1, "click", 4.0)): _*)
-      q.processAllAvailable()
-      val down = spark.table("drift").collect()
-        .filter(_.getAs[String]("side") == "down")
-      assert(down.length == 1 && down.head.getAs[Double]("cusum") == 10.0)
-    } finally {
-      q.stop()
-      saved match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withConf(RocksDbStateStore) {
+      val input = MemoryStream[EventStreaming.Event]
+      // baseline mu=10, sigma=2 → k=1, h=8; values at 15 add 4 per event
+      // to the up-side, so the 3rd shifted event crosses (12 > 8),
+      // alarms, resets — and the next 3 cross again exactly once
+      val q = EventStreaming.monitorDrift(input.toDS(),
+          Map("click" -> (10.0, 2.0)))
+        .writeStream.format("memory").queryName("drift")
+        .outputMode("append").start()
+      try {
+        // in-baseline values: no alarm
+        input.addData((1 to 4).map(i => EventStreaming.Event(
+          i.toLong, ts(s"2024-01-01 10:0$i:00"), 1, "click", 10.0)): _*)
+        q.processAllAvailable()
+        assert(spark.table("drift").count() == 0)
+        // sustained +5 shift across two micro-batches (state carries)
+        input.addData((5 to 7).map(i => EventStreaming.Event(
+          i.toLong, ts(s"2024-01-01 10:1${i - 5}:00"), 1, "click", 15.0)): _*)
+        q.processAllAvailable()
+        input.addData((8 to 10).map(i => EventStreaming.Event(
+          i.toLong, ts(s"2024-01-01 10:2${i - 8}:00"), 1, "click", 15.0)): _*)
+        q.processAllAvailable()
+        val alarms = spark.table("drift").collect()
+        assert(alarms.length == 2, alarms.mkString(","))
+        assert(alarms.forall(_.getAs[String]("side") == "up"))
+        assert(alarms.forall(_.getAs[Double]("cusum") == 12.0))
+        // a type with no baseline emits nothing
+        input.addData(EventStreaming.Event(11,
+          ts("2024-01-01 10:30:00"), 1, "view", 999.0))
+        q.processAllAvailable()
+        assert(spark.table("drift").count() == 2)
+        // downward shift: values at 4 add 10-4-1=5 per event to dn;
+        // crosses on the 2nd (10 > 8)
+        input.addData((12 to 13).map(i => EventStreaming.Event(
+          i.toLong, ts(s"2024-01-01 10:4${i - 12}:00"), 1, "click", 4.0)): _*)
+        q.processAllAvailable()
+        val down = spark.table("drift").collect()
+          .filter(_.getAs[String]("side") == "down")
+        assert(down.length == 1 && down.head.getAs[Double]("cusum") == 10.0)
+      } finally q.stop()
     }
   }
 
@@ -515,49 +465,41 @@ class StreamingSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[CorpusStreaming.DocEvent]
-    // batch 1: three docs for s0 (cap 2 → third rejected), one for s1
-    input.addData(
-      CorpusStreaming.DocEvent(3, ts("2024-01-01 10:02:00"), "c", "s0"),
-      CorpusStreaming.DocEvent(1, ts("2024-01-01 10:00:00"), "a", "s0"),
-      CorpusStreaming.DocEvent(2, ts("2024-01-01 10:01:00"), "b", "s0"),
-      CorpusStreaming.DocEvent(4, ts("2024-01-01 10:00:00"), "d", "s1"))
-    val q = CorpusStreaming.quotaBySource(input.toDS(), cap = 2)
-      .writeStream.format("memory").queryName("quota")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val r1 = spark.table("quota").collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.getAs[Boolean]("admitted"))
-        .toMap
-      // (ts, doc_id) fold order: docs 1,2 admitted, 3 over cap
-      assert(r1 == Map(1L -> true, 2L -> true, 3L -> false, 4L -> true),
-        r1.toString)
-      // batch 2: counter SURVIVES for s0 (still full); s1 has room
+    withConf(RocksDbStateStore) {
+      val input = MemoryStream[CorpusStreaming.DocEvent]
+      // batch 1: three docs for s0 (cap 2 → third rejected), one for s1
       input.addData(
-        CorpusStreaming.DocEvent(5, ts("2024-01-01 11:00:00"), "e", "s0"),
-        CorpusStreaming.DocEvent(6, ts("2024-01-01 11:00:00"), "f", "s1"))
-      q.processAllAvailable()
-      val r2 = spark.table("quota").collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.getAs[Boolean]("admitted"))
-        .toMap
-      assert(!r2(5L) && r2(6L), r2.toString)
-      // admitted totals never exceed the cap
-      val maxBySrc = spark.table("quota").collect()
-        .groupBy(_.getAs[String]("source"))
-        .map { case (src, rs) =>
-          src -> rs.map(_.getAs[Long]("n_admitted")).max }
-      assert(maxBySrc.values.forall(_ <= 2), maxBySrc.toString)
-    } finally {
-      q.stop()
-      saved match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+        CorpusStreaming.DocEvent(3, ts("2024-01-01 10:02:00"), "c", "s0"),
+        CorpusStreaming.DocEvent(1, ts("2024-01-01 10:00:00"), "a", "s0"),
+        CorpusStreaming.DocEvent(2, ts("2024-01-01 10:01:00"), "b", "s0"),
+        CorpusStreaming.DocEvent(4, ts("2024-01-01 10:00:00"), "d", "s1"))
+      val q = CorpusStreaming.quotaBySource(input.toDS(), cap = 2)
+        .writeStream.format("memory").queryName("quota")
+        .outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        val r1 = spark.table("quota").collect()
+          .map(r => r.getAs[Long]("doc_id") -> r.getAs[Boolean]("admitted"))
+          .toMap
+        // (ts, doc_id) fold order: docs 1,2 admitted, 3 over cap
+        assert(r1 == Map(1L -> true, 2L -> true, 3L -> false, 4L -> true),
+          r1.toString)
+        // batch 2: counter SURVIVES for s0 (still full); s1 has room
+        input.addData(
+          CorpusStreaming.DocEvent(5, ts("2024-01-01 11:00:00"), "e", "s0"),
+          CorpusStreaming.DocEvent(6, ts("2024-01-01 11:00:00"), "f", "s1"))
+        q.processAllAvailable()
+        val r2 = spark.table("quota").collect()
+          .map(r => r.getAs[Long]("doc_id") -> r.getAs[Boolean]("admitted"))
+          .toMap
+        assert(!r2(5L) && r2(6L), r2.toString)
+        // admitted totals never exceed the cap
+        val maxBySrc = spark.table("quota").collect()
+          .groupBy(_.getAs[String]("source"))
+          .map { case (src, rs) =>
+            src -> rs.map(_.getAs[Long]("n_admitted")).max }
+        assert(maxBySrc.values.forall(_ <= 2), maxBySrc.toString)
+      } finally q.stop()
     }
   }
 
@@ -566,65 +508,57 @@ class StreamingSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // token counts chosen to cross the 64-token window boundary:
-    // s0: 40 + 40 (straddles) + 100 (spans 3 windows);
-    // "a  b " exercises the split(" ", -1) ≡ Spark size(split) edge
-    // (double + trailing spaces count empty tokens)
-    def doc(id: Long, t: String, n: Int, src: String) =
-      CorpusStreaming.DocEvent(id, ts(t), Seq.fill(n)("x").mkString(" "),
-        src)
-    val input = MemoryStream[CorpusStreaming.DocEvent]
-    input.addData(
-      doc(2, "2024-01-01 10:01:00", 40, "s0"),
-      doc(1, "2024-01-01 10:00:00", 40, "s0"),
-      CorpusStreaming.DocEvent(10, ts("2024-01-01 10:00:00"),
-        "a  b ", "s1"))
-    val q = CorpusStreaming.packBySource(input.toDS())
-      .writeStream.format("memory").queryName("packer")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      // batch 2: s0 continues from offset 80
-      input.addData(doc(3, "2024-01-01 11:00:00", 100, "s0"))
-      q.processAllAvailable()
-      val rows = spark.table("packer").collect()
-        .map(r => r.getAs[Long]("doc_id") ->
-          (r.getAs[Long]("n_tokens"), r.getAs[Long]("off"),
-            r.getAs[Long]("window_lo"), r.getAs[Long]("window_hi"),
-            r.getAs[Long]("span"))).toMap
-      // (ts, doc_id) fold: doc 1 at 0, doc 2 at 40 (straddles the
-      // 64-boundary), doc 3 continues at 80 across the batch gap
-      assert(rows(1L) == ((40L, 0L, 0L, 0L, 1L)), rows(1L).toString)
-      assert(rows(2L) == ((40L, 40L, 0L, 1L, 2L)), rows(2L).toString)
-      assert(rows(3L) == ((100L, 80L, 1L, 2L, 2L)), rows(3L).toString)
-      // the tricky text: Spark's size(split("a  b ", " ")) = 4
-      val sparkN = Seq("a  b ").toDF("text")
-        .select(org.apache.spark.sql.functions.size(
-          org.apache.spark.sql.functions.split($"text", " ")))
-        .as[Int].head()
-      assert(rows(10L)._1 == sparkN.toLong, s"${rows(10L)} vs $sparkN")
-      // batch parity: stream offsets per source = prefix sums of
-      // n_tokens in fold order (the q233 packedOffsets contract)
-      val bySrc = spark.table("packer").collect()
-        .groupBy(_.getAs[String]("source"))
-      for ((_, rs) <- bySrc) {
-        val sorted = rs.sortBy(_.getAs[Long]("off"))
-        var expect = 0L
-        for (r <- sorted) {
-          assert(r.getAs[Long]("off") == expect, r.toString)
-          expect += r.getAs[Long]("n_tokens")
+    withConf(RocksDbStateStore) {
+      // token counts chosen to cross the 64-token window boundary:
+      // s0: 40 + 40 (straddles) + 100 (spans 3 windows);
+      // "a  b " exercises the split(" ", -1) ≡ Spark size(split) edge
+      // (double + trailing spaces count empty tokens)
+      def doc(id: Long, t: String, n: Int, src: String) =
+        CorpusStreaming.DocEvent(id, ts(t), Seq.fill(n)("x").mkString(" "),
+          src)
+      val input = MemoryStream[CorpusStreaming.DocEvent]
+      input.addData(
+        doc(2, "2024-01-01 10:01:00", 40, "s0"),
+        doc(1, "2024-01-01 10:00:00", 40, "s0"),
+        CorpusStreaming.DocEvent(10, ts("2024-01-01 10:00:00"),
+          "a  b ", "s1"))
+      val q = CorpusStreaming.packBySource(input.toDS())
+        .writeStream.format("memory").queryName("packer")
+        .outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        // batch 2: s0 continues from offset 80
+        input.addData(doc(3, "2024-01-01 11:00:00", 100, "s0"))
+        q.processAllAvailable()
+        val rows = spark.table("packer").collect()
+          .map(r => r.getAs[Long]("doc_id") ->
+            (r.getAs[Long]("n_tokens"), r.getAs[Long]("off"),
+              r.getAs[Long]("window_lo"), r.getAs[Long]("window_hi"),
+              r.getAs[Long]("span"))).toMap
+        // (ts, doc_id) fold: doc 1 at 0, doc 2 at 40 (straddles the
+        // 64-boundary), doc 3 continues at 80 across the batch gap
+        assert(rows(1L) == ((40L, 0L, 0L, 0L, 1L)), rows(1L).toString)
+        assert(rows(2L) == ((40L, 40L, 0L, 1L, 2L)), rows(2L).toString)
+        assert(rows(3L) == ((100L, 80L, 1L, 2L, 2L)), rows(3L).toString)
+        // the tricky text: Spark's size(split("a  b ", " ")) = 4
+        val sparkN = Seq("a  b ").toDF("text")
+          .select(org.apache.spark.sql.functions.size(
+            org.apache.spark.sql.functions.split($"text", " ")))
+          .as[Int].head()
+        assert(rows(10L)._1 == sparkN.toLong, s"${rows(10L)} vs $sparkN")
+        // batch parity: stream offsets per source = prefix sums of
+        // n_tokens in fold order (the q233 packedOffsets contract)
+        val bySrc = spark.table("packer").collect()
+          .groupBy(_.getAs[String]("source"))
+        for ((_, rs) <- bySrc) {
+          val sorted = rs.sortBy(_.getAs[Long]("off"))
+          var expect = 0L
+          for (r <- sorted) {
+            assert(r.getAs[Long]("off") == expect, r.toString)
+            expect += r.getAs[Long]("n_tokens")
+          }
         }
-      }
-    } finally {
-      q.stop()
-      saved match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+      } finally q.stop()
     }
   }
 
@@ -632,57 +566,49 @@ class StreamingSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val b1 = Seq(
-      CorpusStreaming.DocEvent(1, ts("2024-01-01 10:00:00"),
-        "join hash join scan", "s0"),
-      CorpusStreaming.DocEvent(2, ts("2024-01-01 10:01:00"),
-        "row batch row row", "s0"))
-    val b2 = Seq(
-      CorpusStreaming.DocEvent(3, ts("2024-01-01 11:00:00"),
-        "join scan scan", "s1"))
-    val input = MemoryStream[CorpusStreaming.DocEvent]
-    val q = CorpusStreaming.countMinStream(input.toDS())
-      .writeStream.format("memory").queryName("cmcells")
-      .outputMode("append").start()
-    try {
-      input.addData(b1: _*)
-      q.processAllAvailable()
-      input.addData(b2: _*)
-      q.processAllAvailable()
-      // totals are monotone → max per cell is the current grid
-      val streamed = spark.table("cmcells").collect()
-        .groupBy(r => (r.getAs[Int]("depth"), r.getAs[Long]("bucket")))
-        .map { case (k, rs) => k -> rs.map(_.getAs[Long]("total")).max }
-      // batch grid over the SAME docs via the q221 SQL spelling —
-      // pins the Scala tokenizer against the oracle-facing hash
-      val gridArms = graft.ops.CorpusOps.cmAb.zipWithIndex.map {
-        case ((a, b), d) =>
-          s"""SELECT $d AS depth,
-                (CAST(ascii(term) * 131 + length(term) AS BIGINT) * $a
-                 + $b) % 1000000007 % ${graft.ops.CorpusOps.CmWidth}
-                  AS bucket
-              FROM toks"""
-      }.mkString(" UNION ALL ")
-      (b1 ++ b2).map(e => e.doc_id -> e.text).toDF("doc_id", "text")
-        .createOrReplaceTempView("cmdocs")
-      val batch = spark.sql(
-        s"""WITH toks AS (SELECT explode(split(text, ' ')) AS term
-                          FROM cmdocs)
-            SELECT depth, bucket, COUNT(*) AS total
-            FROM ($gridArms) GROUP BY 1, 2""").collect()
-        .map(r => (r.getAs[Int]("depth"), r.getAs[Long]("bucket"))
-          -> r.getAs[Long]("total")).toMap
-      assert(streamed == batch, s"stream=$streamed batch=$batch")
-    } finally {
-      q.stop()
-      saved match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withConf(RocksDbStateStore) {
+      val b1 = Seq(
+        CorpusStreaming.DocEvent(1, ts("2024-01-01 10:00:00"),
+          "join hash join scan", "s0"),
+        CorpusStreaming.DocEvent(2, ts("2024-01-01 10:01:00"),
+          "row batch row row", "s0"))
+      val b2 = Seq(
+        CorpusStreaming.DocEvent(3, ts("2024-01-01 11:00:00"),
+          "join scan scan", "s1"))
+      val input = MemoryStream[CorpusStreaming.DocEvent]
+      val q = CorpusStreaming.countMinStream(input.toDS())
+        .writeStream.format("memory").queryName("cmcells")
+        .outputMode("append").start()
+      try {
+        input.addData(b1: _*)
+        q.processAllAvailable()
+        input.addData(b2: _*)
+        q.processAllAvailable()
+        // totals are monotone → max per cell is the current grid
+        val streamed = spark.table("cmcells").collect()
+          .groupBy(r => (r.getAs[Int]("depth"), r.getAs[Long]("bucket")))
+          .map { case (k, rs) => k -> rs.map(_.getAs[Long]("total")).max }
+        // batch grid over the SAME docs via the q221 SQL spelling —
+        // pins the Scala tokenizer against the oracle-facing hash
+        val gridArms = graft.ops.CorpusOps.cmAb.zipWithIndex.map {
+          case ((a, b), d) =>
+            s"""SELECT $d AS depth,
+                  (CAST(ascii(term) * 131 + length(term) AS BIGINT) * $a
+                   + $b) % 1000000007 % ${graft.ops.CorpusOps.CmWidth}
+                    AS bucket
+                FROM toks"""
+        }.mkString(" UNION ALL ")
+        (b1 ++ b2).map(e => e.doc_id -> e.text).toDF("doc_id", "text")
+          .createOrReplaceTempView("cmdocs")
+        val batch = spark.sql(
+          s"""WITH toks AS (SELECT explode(split(text, ' ')) AS term
+                            FROM cmdocs)
+              SELECT depth, bucket, COUNT(*) AS total
+              FROM ($gridArms) GROUP BY 1, 2""").collect()
+          .map(r => (r.getAs[Int]("depth"), r.getAs[Long]("bucket"))
+            -> r.getAs[Long]("total")).toMap
+        assert(streamed == batch, s"stream=$streamed batch=$batch")
+      } finally q.stop()
     }
   }
 
@@ -777,47 +703,39 @@ class StreamingSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[EventStreaming.Event]
-    // user 1: three events inside 5 min → burst; user 2: two events
-    // 30 min apart → never inside one window, no burst. Later phases
-    // use LATER timestamps — the 0-delay watermark advances to each
-    // batch's max and would drop backdated events as late.
-    input.addData(
-      EventStreaming.Event(1, ts("2024-01-01 10:00:00"), 1, "click", 1.0),
-      EventStreaming.Event(2, ts("2024-01-01 10:01:00"), 1, "click", 1.0),
-      EventStreaming.Event(3, ts("2024-01-01 10:02:00"), 1, "click", 1.0),
-      EventStreaming.Event(4, ts("2024-01-01 10:00:00"), 2, "click", 1.0),
-      EventStreaming.Event(5, ts("2024-01-01 10:30:00"), 2, "click", 1.0))
-    val q = EventStreaming.detectBursts(input.toDS(), n = 3)
-      .writeStream.format("memory").queryName("bursts")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val rows = spark.table("bursts").collect()
-      assert(rows.length == 1, rows.mkString(";"))
-      assert(rows(0).getAs[Long]("user_id") == 1 &&
-        rows(0).getAs[Long]("n_events") == 3)
-      // the ring was cleared on alert: two MORE events alone must not
-      // re-alert (need a full n again), a third re-alerts
+    withConf(RocksDbStateStore) {
+      val input = MemoryStream[EventStreaming.Event]
+      // user 1: three events inside 5 min → burst; user 2: two events
+      // 30 min apart → never inside one window, no burst. Later phases
+      // use LATER timestamps — the 0-delay watermark advances to each
+      // batch's max and would drop backdated events as late.
       input.addData(
-        EventStreaming.Event(6, ts("2024-01-01 10:31:00"), 1, "click", 1.0),
-        EventStreaming.Event(7, ts("2024-01-01 10:32:00"), 1, "click", 1.0))
-      q.processAllAvailable()
-      assert(spark.table("bursts").count() == 1)
-      input.addData(
-        EventStreaming.Event(8, ts("2024-01-01 10:33:00"), 1, "click", 1.0))
-      q.processAllAvailable()
-      assert(spark.table("bursts").count() == 2)
-    } finally {
-      q.stop()
-      saved match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+        EventStreaming.Event(1, ts("2024-01-01 10:00:00"), 1, "click", 1.0),
+        EventStreaming.Event(2, ts("2024-01-01 10:01:00"), 1, "click", 1.0),
+        EventStreaming.Event(3, ts("2024-01-01 10:02:00"), 1, "click", 1.0),
+        EventStreaming.Event(4, ts("2024-01-01 10:00:00"), 2, "click", 1.0),
+        EventStreaming.Event(5, ts("2024-01-01 10:30:00"), 2, "click", 1.0))
+      val q = EventStreaming.detectBursts(input.toDS(), n = 3)
+        .writeStream.format("memory").queryName("bursts")
+        .outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        val rows = spark.table("bursts").collect()
+        assert(rows.length == 1, rows.mkString(";"))
+        assert(rows(0).getAs[Long]("user_id") == 1 &&
+          rows(0).getAs[Long]("n_events") == 3)
+        // the ring was cleared on alert: two MORE events alone must not
+        // re-alert (need a full n again), a third re-alerts
+        input.addData(
+          EventStreaming.Event(6, ts("2024-01-01 10:31:00"), 1, "click", 1.0),
+          EventStreaming.Event(7, ts("2024-01-01 10:32:00"), 1, "click", 1.0))
+        q.processAllAvailable()
+        assert(spark.table("bursts").count() == 1)
+        input.addData(
+          EventStreaming.Event(8, ts("2024-01-01 10:33:00"), 1, "click", 1.0))
+        q.processAllAvailable()
+        assert(spark.table("bursts").count() == 2)
+      } finally q.stop()
     }
   }
 
@@ -825,43 +743,35 @@ class StreamingSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[EventStreaming.Event]
-    input.addData(
-      EventStreaming.Event(1, ts("2024-01-01 10:10:00"), 1, "click", 1.0))
-    val q = EventStreaming.detectBursts(input.toDS(), n = 2,
-      watermark = "10 minutes")
-      .writeStream.format("memory").queryName("ooo_bursts")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      // 10:04 arrives LATE but inside the watermark slack: it is 6 min
-      // before 10:10 — outside the 5-min window, so NO burst (an
-      // unsorted ring would have paired them start-after-end)
+    withConf(RocksDbStateStore) {
+      val input = MemoryStream[EventStreaming.Event]
       input.addData(
-        EventStreaming.Event(2, ts("2024-01-01 10:04:00"), 1, "click", 1.0))
-      q.processAllAvailable()
-      assert(spark.table("ooo_bursts").count() == 0)
-      // 10:08, also out of order, IS within 5 min of 10:10 → burst
-      // with a correctly ordered span
-      input.addData(
-        EventStreaming.Event(3, ts("2024-01-01 10:08:00"), 1, "click", 1.0))
-      q.processAllAvailable()
-      val rows = spark.table("ooo_bursts").collect()
-      assert(rows.length == 1, rows.mkString(";"))
-      assert(rows(0).getAs[java.sql.Timestamp]("burst_start").toString
-        .startsWith("2024-01-01 10:08"))
-      assert(rows(0).getAs[java.sql.Timestamp]("burst_end").toString
-        .startsWith("2024-01-01 10:10"))
-    } finally {
-      q.stop()
-      saved match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+        EventStreaming.Event(1, ts("2024-01-01 10:10:00"), 1, "click", 1.0))
+      val q = EventStreaming.detectBursts(input.toDS(), n = 2,
+        watermark = "10 minutes")
+        .writeStream.format("memory").queryName("ooo_bursts")
+        .outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        // 10:04 arrives LATE but inside the watermark slack: it is 6 min
+        // before 10:10 — outside the 5-min window, so NO burst (an
+        // unsorted ring would have paired them start-after-end)
+        input.addData(
+          EventStreaming.Event(2, ts("2024-01-01 10:04:00"), 1, "click", 1.0))
+        q.processAllAvailable()
+        assert(spark.table("ooo_bursts").count() == 0)
+        // 10:08, also out of order, IS within 5 min of 10:10 → burst
+        // with a correctly ordered span
+        input.addData(
+          EventStreaming.Event(3, ts("2024-01-01 10:08:00"), 1, "click", 1.0))
+        q.processAllAvailable()
+        val rows = spark.table("ooo_bursts").collect()
+        assert(rows.length == 1, rows.mkString(";"))
+        assert(rows(0).getAs[java.sql.Timestamp]("burst_start").toString
+          .startsWith("2024-01-01 10:08"))
+        assert(rows(0).getAs[java.sql.Timestamp]("burst_end").toString
+          .startsWith("2024-01-01 10:10"))
+      } finally q.stop()
     }
   }
 
@@ -1039,11 +949,7 @@ class StreamingSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(RocksDbStateStore) {
       val textA = "alpha beta gamma delta epsilon zeta eta theta"
       val textB = "one two three four five six seven"
       val input = MemoryStream[CorpusStreaming.DocEvent]
@@ -1083,11 +989,6 @@ class StreamingSpec extends AnyFunSuite {
         assert(spark.table("lsh_cand").collect()
           .count(!_.getAs[Boolean]("saturated")) == 2)
       } finally q.stop()
-    } finally {
-      saved match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
@@ -1096,11 +997,7 @@ class StreamingSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(RocksDbStateStore) {
       val textA = "alpha beta gamma delta epsilon zeta eta theta " +
         "iota kappa lambda mu nu xi omicron pi rho sigma tau"
       val textB = "Q" + textA.substring(1) // q254's planted edit
@@ -1128,11 +1025,6 @@ class StreamingSpec extends AnyFunSuite {
           .map(_._1).toSet
         assert(Set(1, 2, 3).subsetOf(pairBands), rows.mkString(";"))
       } finally q.stop()
-    } finally {
-      saved match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
@@ -1141,11 +1033,7 @@ class StreamingSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(RocksDbStateStore) {
       // q105 hash buckets: id 1 -> 98 (test), 2 -> 38 (train),
       // 3 -> 85 (val), 4 -> 25 (train)
       val textA = "alpha beta gamma delta epsilon zeta eta theta"
@@ -1189,11 +1077,6 @@ class StreamingSpec extends AnyFunSuite {
           assert(leak == (batch(a) != batch(b)))
         }
       } finally q.stop()
-    } finally {
-      saved match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
@@ -1242,11 +1125,7 @@ class StreamingSpec extends AnyFunSuite {
     // streaming side: one micro-batch of data, then a far-future
     // sentinel (twice — the watermark computed in batch N applies in
     // N+1) so event-time timers flush every open session.
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(RocksDbStateStore) {
       val input = MemoryStream[EventStreaming.Event]
       input.addData(events)
       val q = EventStreaming.sessionizeTws(input.toDS())
@@ -1274,11 +1153,6 @@ class StreamingSpec extends AnyFunSuite {
             s"onlyBatch=${(batch -- stream).take(3)} " +
             s"onlyStream=${(stream -- batch).take(3)}")
       } finally q.stop()
-    } finally {
-      saved match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
