@@ -21,9 +21,11 @@ import org.apache.spark.sql.functions._
   *    transport — the live POS socket stays behind that seam exactly
   *    as in S1–S3 (sandbox constraint; `main` wires a transport that
   *    raises the reference's extraction error).
-  *  - clean: per-branch-directory xlsx staging
-  *    ([[staging.PaymentsXlsx.clean]]) → parquet fact store
-  *    partitioned by operating_date (S11 pruning on later reads).
+  *  - clean: one xlsx staging scan per branch directory
+  *    ([[staging.PaymentsXlsx.clean]]: every workbook's header,
+  *    sucursal and eliminations resolved inside the executor parse) →
+  *    parquet fact store partitioned by operating_date (S11 pruning on
+  *    later reads).
   *  - aggregate: partition-pruned fact slice → [[PaymentsDaily]] mart.
   *
   * `run` is side-effect-parameterized (out/err sinks, injected
@@ -101,7 +103,7 @@ object Main {
           throw new ExtractionError(
             s"no raw payments exports under $rawDir")
         // per-branch-directory loop: the directory name is the
-        // sucursal hint, per-workbook header scan inside
+        // sucursal hint; each directory is one executor scan
         val fact = dirs.map { d =>
           staging.PaymentsXlsx.clean(spark, d.toString, d.getName,
             chunkStart = Some(start), chunkEnd = Some(end))

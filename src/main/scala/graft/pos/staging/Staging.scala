@@ -8,10 +8,19 @@ import org.apache.spark.sql.functions._
 /** Silver-layer cleaners. Bronze input contract: a raw report grid as
   * a DataFrame with `_row` (0-based sheet row order, assigned by the
   * bronze reader) and `_c0.._cN` string cells — what an Excel/CSV
-  * export looks like before headers are known. Header detection and
-  * mapping are DRIVER-SIDE over `limit(50)` (the reference's nrows=50
-  * two-phase read, payments_cleaner.py:294-316); everything after is a
-  * distributed DataFrame transform.
+  * export looks like before headers are known.
+  *
+  * Each cleaner is split in two. Its pure head functions (`layout`
+  * over a sheet's first rows: header row, logical columns, sucursal)
+  * resolve one export's layout; its body functions (`cleanBody`, or
+  * `typedBody` then `flagBody` for payments) are the distributed
+  * DataFrame transform over the projected body rows. The grid entry
+  * points (`clean(grid, …)`) run the head functions DRIVER-SIDE over
+  * `limit(50)` (the reference's nrows=50 two-phase read,
+  * payments_cleaner.py:294-316). The workbook stagers
+  * ([[PaymentsXlsx]] and its siblings) run the same head functions
+  * inside the executor task that parses each workbook, and one body
+  * transform covers every workbook of the scan.
   */
 object Headers {
   /** Driver-side strip_invisibles (cleaning_utils.py:52-81). */
@@ -62,6 +71,32 @@ object Headers {
       .replaceAll("^[-_]+|[-_]+$", "").toLowerCase
     if (slug.isEmpty) "unknown" else slug
   }
+}
+
+/** One sheet's resolved head, as the cleaners' `layout` functions
+  * return it: the header row, the logical columns kept with their raw
+  * cell positions, the Cajero/Mesero positions the payments sucursal
+  * fallback votes over, and the sales sheet's sucursal. */
+final case class Layout(headerIdx: Int, named: Seq[(String, Int)],
+                        candidates: Seq[Int] = Nil, sucursal: String = "") {
+  def names: Seq[String] = named.map(_._1)
+}
+
+/** The grid entry points' DRIVER-SIDE two-phase read (the reference's
+  * nrows=50 read, payments_cleaner.py:294-316): the first `n` rows
+  * (nulls as "") for the head functions, then the rows below the
+  * header. */
+private[staging] final class GridHead(raw: DataFrame, n: Int) {
+  private val cellCols = raw.columns.filter(_.startsWith("_c")).toSeq
+    .sortBy(_.drop(2).toInt)
+  val rows: Seq[Seq[String]] = raw.orderBy(col("_row")).limit(n).collect()
+    .toIndexedSeq.map(r => cellCols.map(c =>
+      Option(r.getAs[String](c)).getOrElse("")))
+  def cell(i: Int): Column = col(cellCols(i))
+  def below(lay: Layout): DataFrame = raw.filter(col("_row") > lay.headerIdx)
+  /** The body rows projected to the layout's logical columns. */
+  def body(lay: Layout): DataFrame =
+    below(lay).select(lay.named.map { case (n, i) => cell(i).as(n) }: _*)
 }
 
 /** "Detalle por forma de pago" cleaner
@@ -135,6 +170,59 @@ object PaymentsCleaner {
     i
   }
 
+  /** Resolve a sheet's layout from its first rows (nulls as ""): the
+    * named, non-dropped columns (P1) and the F16 candidates. */
+  def layout(head: Seq[Seq[String]]): Layout = {
+    val headerIdx = detectHeaderRow(head)
+    val rawHeaders = head(headerIdx)
+    val named = normalizeHeaders(rawHeaders).zipWithIndex
+      .filter { case (_, i) =>
+        val h = Headers.stripInvisibles(rawHeaders(i))
+        h.nonEmpty &&
+          !DropColsNormalized.contains(Headers.normalizeSpanish(h))
+      }
+    if (named.isEmpty)
+      throw new DataQualityError("payments header row names no columns")
+    val candidates = rawHeaders.indices.filter { i =>
+      val n = Headers.stripInvisibles(rawHeaders(i))
+      n == "Cajero" || n == "Mesero"
+    }
+    Layout(headerIdx, named, candidates)
+  }
+
+  /** Column names of the F16 vote frame [[modalSucursal]] reads, and
+    * of its result. */
+  val FirstCell = "_first"
+  val Candidates = "_cand"
+  val Sucursal = "_sucursal"
+
+  /** F16 sucursal fallback: the modal value of each Cajero/Mesero
+    * column (ties → smallest value), then across those columns prefer
+    * non-numeric, then shorter, then header order
+    * (payments_cleaner.py:220-248). `votes` carries one row per body
+    * row: its raw first kept cell ([[FirstCell]]) and its raw
+    * candidate cells ([[Candidates]]); footer/junk rows (blank first
+    * kept cell) do not vote, like the reference, which samples AFTER
+    * footer filtering. One result row per `scope` value, column
+    * [[Sucursal]]. */
+  def modalSucursal(votes: DataFrame, scope: Seq[String]): DataFrame = {
+    val keys = scope.map(col)
+    val counted = votes
+      .filter(Cleaning.stripInvisibles(col(FirstCell)) =!= "")
+      .select(keys :+ posexplode(col(Candidates)).as(Seq("slot", "v")): _*)
+      .withColumn("v", Cleaning.stripInvisibles(col("v")))
+      .filter(col("v").isNotNull && col("v") =!= "")
+      .groupBy(keys :+ col("slot") :+ col("v"): _*).count()
+    counted
+      .groupBy(keys :+ col("slot"): _*)
+      .agg(min(struct((-col("count")).as("n"), col("v"))).getField("v")
+        .as("v"))
+      .groupBy(keys: _*)
+      .agg(min(struct(col("v").rlike("^\\d+$").as("numeric"),
+        length(col("v")).as("len"), col("slot"), col("v")))
+        .getField("v").as(Sucursal))
+  }
+
   /** Clean one raw payments grid into fact rows. `eliminations` is the
     * parsed "Pagos Eliminados" block with raw `Fecha de operación` /
     * `Orden` columns. */
@@ -142,109 +230,94 @@ object PaymentsCleaner {
             eliminations: Option[DataFrame] = None,
             chunkStart: Option[String] = None,
             chunkEnd: Option[String] = None): DataFrame = {
-    val spark = raw.sparkSession
-    import spark.implicits._
+    val grid = new GridHead(raw, 50)
+    val lay = layout(grid.rows)
+    // sucursal: hint first, else the F16 fallback, collected to a literal
+    val hint = Headers.normalizeBranchName(sucursalHint)
+    val sucursal =
+      if (hint.nonEmpty || lay.candidates.isEmpty) hint
+      else modalSucursal(grid.below(lay).select(
+          grid.cell(lay.named.head._2).as(FirstCell),
+          array(lay.candidates.map(grid.cell): _*).as(Candidates)), Nil)
+        .collect().headOption.flatMap(r => Option(r.getString(0)))
+        .getOrElse("")
+    flagBody(typedBody(grid.body(lay), lay.names), lay.names, lit(sucursal),
+      eliminations, Nil, chunkStart, chunkEnd)
+  }
 
-    val cellCols = raw.columns.filter(_.startsWith("_c")).toSeq
-      .sortBy(_.drop(2).toInt)
-    // two-phase: header detection over the first 50 rows only
-    val head = raw.orderBy($"_row").limit(50).collect()
-      .map(r => cellCols.map(c =>
-        Option(r.getAs[String](c)).getOrElse("")))
-    val headerIdx = detectHeaderRow(head.toIndexedSeq)
-    val rawHeaders = head(headerIdx)
-
-    // keep only named, non-dropped columns (P1), by position
-    val named = normalizeHeaders(rawHeaders).zipWithIndex
-      .filter { case (_, i) =>
-        val h = Headers.stripInvisibles(rawHeaders(i))
-        h.nonEmpty &&
-          !DropColsNormalized.contains(Headers.normalizeSpanish(h))
-      }
-
-    val body = raw.filter($"_row" > headerIdx)
-    val projected = body.select(named.map { case (n, i) =>
-      col(cellCols(i)).as(n) }: _*)
-
-    // F1/F2 cleanup, P2 drop empty/footer rows
-    val strCols = named.map(_._1)
-    val cleaned0 = strCols.foldLeft(projected)((df, c) =>
-      df.withColumn(c,
-        Cleaning.neutralize(Cleaning.stripInvisibles(col(c)))))
-    val firstCol = strCols.head
-    val nonEmpty = cleaned0
+  /** The distributed body of the payments cleaner, in two halves
+    * shared by the grid entry point and the workbook scan. This half
+    * drops empty/footer rows (P2) and cleans and types the raw logical
+    * columns `strCols` of `projected`; other columns ride along. P2
+    * reads the raw cells — cleanup keeps null as null and blank as "" —
+    * so no filter re-evaluates the cleanup expressions. */
+  private[staging] def typedBody(projected: DataFrame,
+                                 strCols: Seq[String]): DataFrame = {
+    val nonEmpty = projected
       .na.drop("all", strCols)
-      .filter(col(firstCol).isNotNull && col(firstCol) =!= "")
-
-    // type coercion: F5 dates, F3 money, F4 ints — only for columns
-    // the report actually carries (reference guards each with `in df`)
+      .filter(Cleaning.stripInvisibles(col(strCols.head)) =!= "")
+    // F1/F2 cleanup, then type coercion: F5 dates, F3 money, F4 ints —
+    // only for columns the report actually carries (reference guards
+    // each with `in df`)
+    val cleaned = nonEmpty.withColumns(strCols.map(c =>
+      c -> Cleaning.neutralize(Cleaning.stripInvisibles(col(c)))).toMap)
     val typed0 =
       if (strCols.contains("operating_date"))
-        nonEmpty.withColumn("operating_date",
+        cleaned.withColumn("operating_date",
           Cleaning.parseDateMulti(col("operating_date")))
-      else nonEmpty
+      else cleaned
     val typed =
       if (strCols.contains("order_index"))
         typed0.withColumn("order_index",
           Cleaning.parseIntMoney(col("order_index")))
       else typed0
-    val coerced = NumericColumns.filter(strCols.contains)
-      .foldLeft(typed)((df, c) =>
-        df.withColumn(c, Cleaning.parseMoney(col(c))))
+    typed.withColumns(NumericColumns.filter(strCols.contains)
+      .map(c => c -> Cleaning.parseMoney(col(c))).toMap)
+  }
 
+  /** The second half of the payments body: P3 chunk range, sucursal and
+    * J1 eliminations over [[typedBody]]'s output. `scope` names the
+    * columns that identify one export — none for a single grid,
+    * `_file` for a workbook scan — so an elimination only flags rows of
+    * its own export. */
+  private[staging] def flagBody(typed: DataFrame, strCols: Seq[String],
+                                sucursal: Column,
+                                eliminations: Option[DataFrame],
+                                scope: Seq[String],
+                                chunkStart: Option[String],
+                                chunkEnd: Option[String]): DataFrame = {
     // P3 chunk-range filter (dedups overlapping exports)
     val ranged = (chunkStart, chunkEnd) match {
       case (Some(s0), Some(e0)) if strCols.contains("operating_date") =>
-        coerced.filter(col("operating_date")
+        typed.filter(col("operating_date")
           .between(lit(s0).cast("date"), lit(e0).cast("date")))
-      case _ => coerced
+      case _ => typed
     }
+    val withSucursal = ranged.withColumn("sucursal", sucursal)
 
-    // sucursal: hint first; F16 fallback = modal value of the Cajero/
-    // Mesero columns (read BEFORE they are dropped), preferring
-    // non-numeric, shorter candidates (payments_cleaner.py:220-248)
-    val sucursal0 = Headers.normalizeBranchName(sucursalHint)
-    val sucursal =
-      if (sucursal0.nonEmpty) sucursal0
-      else {
-        val cands = rawHeaders.zipWithIndex.filter { case (h, _) =>
-          val n = Headers.stripInvisibles(h)
-          n == "Cajero" || n == "Mesero"
-        }.flatMap { case (_, i) =>
-          // exclude footer/junk rows (blank first kept column), like
-          // the reference which samples AFTER footer filtering
-          val firstCell = cellCols(named.head._2)
-          body
-            .filter(Cleaning.stripInvisibles(col(firstCell)) =!= "")
-            .select(Cleaning.stripInvisibles(col(cellCols(i))).as("v"))
-            .filter(col("v").isNotNull && col("v") =!= "")
-            .groupBy("v").count()
-            .orderBy(col("count").desc, col("v").asc)
-            .limit(1).collect().headOption.map(_.getString(0))
-        }
-        cands.sortBy(v => (if (v.matches("\\d+")) 1 else 0, v.length))
-          .headOption.getOrElse("")
-      }
-    val withSucursal = ranged.withColumn("sucursal", lit(sucursal))
-
-    // J1: eliminations flag — dedup on (date, order), left join,
-    // null → false (payments_cleaner.py:597-650)
+    // J1: eliminations flag — dedup on (scope, date, order), left
+    // join, null → false (payments_cleaner.py:597-650)
     eliminations match {
       case Some(elim) =>
+        val scoped = scope.map(c => c -> s"e$c")
         val e = elim
           .withColumn("e_date",
             Cleaning.parseDateMulti(col("Fecha de operación")))
           .withColumn("e_order", Cleaning.parseIntMoney(col("Orden")))
-          .select("e_date", "e_order").na.drop()
-          .dropDuplicates("e_date", "e_order")
+          .select(scoped.map { case (c, e) => col(c).as(e) } ++
+            Seq(col("e_date"), col("e_order")): _*)
+          .na.drop()
+          .dropDuplicates(scoped.map(_._2) ++ Seq("e_date", "e_order"))
           .withColumn("e_flag", lit(true))
+        val on = scoped.foldLeft(
+          col("operating_date") === col("e_date") &&
+            col("order_index") === col("e_order")) {
+          case (cond, (c, e)) => cond && col(c) === col(e) }
         withSucursal
-          .join(broadcast(e),
-            col("operating_date") === col("e_date") &&
-              col("order_index") === col("e_order"), "left")
+          .join(broadcast(e), on, "left")
           .withColumn("elimination_present",
             coalesce(col("e_flag"), lit(false)))
-          .drop("e_date", "e_order", "e_flag")
+          .drop(scoped.map(_._2) ++ Seq("e_date", "e_order", "e_flag"): _*)
       case None =>
         withSucursal.withColumn("elimination_present", lit(false))
     }
@@ -278,15 +351,9 @@ object TransfersCleaner {
     "sucursal_destino", "almacen_destino", "fecha", "estatus",
     "cantidad", "departamento", "clave", "producto", "presentacion")
 
-  def clean(raw: DataFrame): DataFrame = {
-    val spark = raw.sparkSession
-    import spark.implicits._
-    val cellCols = raw.columns.filter(_.startsWith("_c")).toSeq
-      .sortBy(_.drop(2).toInt)
-    val head = raw.orderBy($"_row").limit(40).collect()
-      .map(r => cellCols.map(c =>
-        Option(r.getAs[String](c)).getOrElse("")))
-    val headerIdx = detectHeaderRow(head.toIndexedSeq)
+  /** Resolve a sheet's layout from its first rows (nulls as ""). */
+  def layout(head: Seq[Seq[String]]): Layout = {
+    val headerIdx = detectHeaderRow(head)
     val rawHeaders = head(headerIdx)
     // snake_case + uniquify → costo, costo_2 (unit variant) etc.
     val snake = Headers.uniquify(rawHeaders.map(h =>
@@ -318,19 +385,28 @@ object TransfersCleaner {
     if (missing.nonEmpty)
       throw new DataQualityError(
         s"missing required columns: ${missing.mkString(", ")}")
+    Layout(headerIdx, colMap.collect { case (n, Some(i)) => n -> i })
+  }
 
-    val body = raw.filter($"_row" > headerIdx)
-    val projected = body.select(colMap.collect {
-      case (n, Some(i)) => col(cellCols(i)).as(n) }: _*)
-    val present = colMap.collect { case (n, Some(_)) => n }
+  def clean(raw: DataFrame): DataFrame = {
+    val grid = new GridHead(raw, 40)
+    val lay = layout(grid.rows)
+    cleanBody(grid.body(lay), lay.names)
+  }
 
+  /** The distributed body of the transfers cleaner, shared by the grid
+    * entry point and the workbook scan: `projected` holds the raw
+    * logical columns `present`. */
+  private[staging] def cleanBody(projected: DataFrame,
+                                 present: Seq[String]): DataFrame = {
     val textCols = Seq("orden", "almacen_origen", "sucursal_destino",
       "almacen_destino", "estatus", "departamento", "clave",
       "producto", "presentacion").filter(present.contains)
-    val cleaned0 = textCols.foldLeft(projected)((df, c) =>
-      df.withColumn(c,
-        Cleaning.neutralize(Cleaning.stripInvisibles(col(c)))))
-      .filter(col("orden").isNotNull && col("orden") =!= "")
+    // the orden filter reads the raw cell, as in the payments body
+    val cleaned0 = projected
+      .filter(Cleaning.stripInvisibles(col("orden")) =!= "")
+      .withColumns(textCols.map(c =>
+        c -> Cleaning.neutralize(Cleaning.stripInvisibles(col(c)))).toMap)
 
     val numCols = Seq("cantidad", "costo_ext", "iva_unit", "ieps_unit")
       .filter(present.contains)
@@ -436,34 +512,40 @@ object SalesCleaner {
       (for (a <- Seq("subtotal", "iva", "ieps", "total");
             b <- BlockLabels) yield s"${a}_$b")
 
-  def clean(raw: DataFrame, sucursalHint: Option[String] = None)
-      : DataFrame = {
-    val spark = raw.sparkSession
-    import spark.implicits._
-    val cellCols = raw.columns.filter(_.startsWith("_c")).toSeq
-      .sortBy(_.drop(2).toInt)
-    val head = raw.orderBy($"_row").limit(50).collect()
-      .map(r => cellCols.map(c =>
-        Option(r.getAs[String](c)).getOrElse("")))
-    val headerIdx = detectHeaderRow(head.toIndexedSeq)
+  /** Resolve a sheet's layout from its first rows (nulls as ""); the
+    * sucursal is the hint, else the sheet's own `Sucursal:` line. */
+  def layout(head: Seq[Seq[String]], sucursalHint: Option[String]): Layout = {
+    val headerIdx = detectHeaderRow(head)
     val sucursal = sucursalHint
-      .orElse(extractSucursal(head.toIndexedSeq))
+      .orElse(extractSucursal(head))
       .map(Headers.normalizeBranchName).getOrElse("")
     val rawHeaders = head(headerIdx)
-
     val named = normalizeHeaders(rawHeaders).zipWithIndex
       .filter { case (_, i) =>
         Headers.stripInvisibles(rawHeaders(i)).nonEmpty }
+    if (named.isEmpty)
+      throw new DataQualityError("sales header row names no columns")
+    Layout(headerIdx, named, sucursal = sucursal)
+  }
 
-    val body = raw.filter($"_row" > headerIdx)
-    val projected = body.select(named.map { case (n, i) =>
-      col(cellCols(i)).as(n) }: _*)
-    val strCols = named.map(_._1)
-    val cleaned0 = strCols.foldLeft(projected)((df, c) =>
-      df.withColumn(c,
-        Cleaning.neutralize(Cleaning.stripInvisibles(col(c)))))
-    val nonEmpty = cleaned0.na.drop("all", strCols)
-      .filter(col(strCols.head).isNotNull && col(strCols.head) =!= "")
+  def clean(raw: DataFrame, sucursalHint: Option[String] = None)
+      : DataFrame = {
+    val grid = new GridHead(raw, 50)
+    val lay = layout(grid.rows, sucursalHint)
+    cleanBody(grid.body(lay), lay.names, lit(lay.sucursal))
+  }
+
+  /** The distributed body of the sales cleaner, shared by the grid
+    * entry point and the workbook scan: `projected` holds the raw
+    * logical columns `strCols`. */
+  private[staging] def cleanBody(projected: DataFrame, strCols: Seq[String],
+                                 sucursal: Column): DataFrame = {
+    // P2 reads the raw cells, as in the payments body
+    val nonEmpty = projected
+      .na.drop("all", strCols)
+      .filter(Cleaning.stripInvisibles(col(strCols.head)) =!= "")
+      .withColumns(strCols.map(c =>
+        c -> Cleaning.neutralize(Cleaning.stripInvisibles(col(c)))).toMap)
 
     val typed = nonEmpty
       .withColumn("operating_date",
@@ -476,6 +558,6 @@ object SalesCleaner {
     val coerced = NumericColumns.filter(strCols.contains)
       .foldLeft(withBool)((df, c) =>
         df.withColumn(c, Cleaning.parseMoney(col(c))))
-    coerced.withColumn("sucursal", lit(sucursal))
+    coerced.withColumn("sucursal", sucursal)
   }
 }

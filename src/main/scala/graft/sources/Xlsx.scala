@@ -5,8 +5,10 @@ import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType,
+  StructField, StructType}
 
 /** Dependency-free XLSX reader/writer (SURVEY §2.1 S6/S13) built on
   * the JDK's `java.util.zip` + StAX — an .xlsx file is a zip of small
@@ -23,8 +25,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: ONE export workbook is a bounded artifact (a day's
   * report), so parsing happens per file inside executors via the
-  * `binaryFile` source + flatMap — many files parallelize across the
-  * cluster, and no workbook is ever collected to the driver.
+  * `binaryFile` source + flatMap ([[Xlsx.scanWorkbooks]]) — many files
+  * parallelize across the cluster, and no workbook is ever collected
+  * to the driver.
   */
 object Xlsx {
 
@@ -34,6 +37,11 @@ object Xlsx {
     def grid(name: String): Vector[Vector[String]] =
       sheets.find(_._1 == name).map(_._2)
         .getOrElse(sys.error(s"no sheet '$name'"))
+    /** The sheet [[findSheet]] picks for `target`. */
+    def gridLike(target: String): Vector[Vector[String]] =
+      grid(findSheet(sheetNames, target).getOrElse(sys.error(
+        s"Sheet like '$target' not found. " +
+          s"Available: ${sheetNames.mkString(", ")}")))
   }
 
   /** Reference sheet lookup: exact case-insensitive match first, then
@@ -526,42 +534,56 @@ object Xlsx {
   }
 
   // ------------------------------------------------- bronze grid read
-  /** S6 bronze reader: every .xlsx under `path` → the row-indexed raw
-    * grid `(\_file, \_row, \_c0.._cN)` of the sheet matching
-    * `sheetTarget` (reference lookup rules). Parsing runs inside
-    * executors off the `binaryFile` source — files parallelize across
-    * the cluster; only the max column count (one tiny agg) reaches the
-    * driver, to fix the bronze schema width. */
-  def readGrid(spark: SparkSession, path: String,
-               sheetTarget: String): DataFrame =
-    readGridWith(spark, path, names => findSheet(names, sheetTarget)
-      .getOrElse(sys.error(s"Sheet like '$sheetTarget' not found. " +
-        s"Available: ${names.mkString(", ")}")))
-
-  /** As [[readGrid]] but with a caller-supplied (serializable) sheet
-    * chooser — the transfers flow, for instance, wants exact
-    * "Transferencias" else the FIRST sheet (transfer_cleaner.py:144).
-    *
-    * Two-phase like the reference's pandas read: the schema width (max
-    * column count) is fixed first, then the cells are delivered. The
-    * parsed grid is localCheckpointed so the zip+StAX parse runs ONCE
-    * per workbook — the width agg and the downstream read both hit
-    * executor storage (MEMORY_AND_DISK, freed when the plan is GC'd),
-    * not a second parse. */
-  def readGridWith(spark: SparkSession, path: String,
-                   choose: Seq[String] => String): DataFrame = {
+  /** Every .xlsx under `path` → rows of `schema`, in one `binaryFile`
+    * scan: each workbook is parsed once, inside the executor task that
+    * reads its bytes, and `rows` turns the parsed workbook into output
+    * rows there. Files parallelize across the cluster, and no
+    * workbook is ever collected to the driver. */
+  def scanWorkbooks(spark: SparkSession, path: String, schema: StructType)(
+      rows: (String, Workbook) => Iterator[Row]): DataFrame = {
     import spark.implicits._
-    val raw = spark.read.format("binaryFile")
+    spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.xlsx")
       .load(path)
       .select($"path", $"content")
       .as[(String, Array[Byte])]
-    val grids = raw.flatMap { case (file, bytes) =>
-      val wb = read(bytes)
-      wb.grid(choose(wb.sheetNames)).zipWithIndex.map { case (cells, i) =>
-        (file, i.toLong, cells)
+      .flatMap { case (file, bytes) => rows(file, read(bytes)) }(
+        Encoders.row(schema))
+  }
+
+  /** The first .xlsx under `path` (by name), parsed on the driver
+    * through the Hadoop FS — no Spark job — for callers that fix a
+    * schema from it, as [[XlsxDataSource]]'s inference does. */
+  def firstWorkbook(spark: SparkSession, path: String): (String, Workbook) = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val file = XlsxDataSource.listXlsx(path, conf).headOption.getOrElse(
+      throw new IllegalArgumentException(s"no .xlsx workbooks under $path"))
+    file -> read(XlsxDataSource.readBytes(file, conf))
+  }
+
+  private val GridCells = StructType(Seq(
+    StructField("_file", StringType),
+    StructField("_row", LongType, nullable = false),
+    StructField("cells", ArrayType(StringType))))
+
+  /** S6 bronze reader: every .xlsx under `path` → the row-indexed raw
+    * grid `(\_file, \_row, \_c0.._cN)` of the sheet matching
+    * `sheetTarget` (reference lookup rules).
+    *
+    * Two-phase like the reference's pandas read: the schema width (max
+    * column count, one tiny agg) is fixed first, then the cells are
+    * delivered. The parsed grid is localCheckpointed so the zip+StAX
+    * parse runs ONCE per workbook — the width agg and the downstream
+    * read both hit executor storage (MEMORY_AND_DISK, freed when the
+    * plan is GC'd), not a second parse. */
+  def readGrid(spark: SparkSession, path: String,
+               sheetTarget: String): DataFrame = {
+    import spark.implicits._
+    val grids = scanWorkbooks(spark, path, GridCells) { (file, wb) =>
+      wb.gridLike(sheetTarget).iterator.zipWithIndex.map {
+        case (cells, i) => Row(file, i.toLong, cells)
       }
-    }.toDF("_file", "_row", "cells").localCheckpoint()
+    }.localCheckpoint()
     val nCols = Option(grids.agg(max(size($"cells"))).head().get(0))
       .map(_.asInstanceOf[Int])
       .getOrElse(throw new IllegalArgumentException(
@@ -569,17 +591,5 @@ object Xlsx {
     (0 until nCols).foldLeft(grids) { (d, i) =>
       d.withColumn(s"_c$i", $"cells".getItem(i))
     }.drop("cells")
-  }
-
-  /** The .xlsx files under `path`, for flows that must process each
-    * workbook separately (header rows, embedded metadata, and
-    * eliminations are PER-WORKBOOK facts — a union of grids would
-    * smear one file's header offset onto another's rows). */
-  def listFiles(spark: SparkSession, path: String): Seq[String] = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.xlsx")
-      .load(path)
-      .select($"path").as[String].collect().toSeq.sorted
   }
 }

@@ -31,7 +31,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Schema inference parses each workbook's chosen sheet ONCE on the
   * driver to fix the grid width (the same two-phase contract as
-  * `readGridWith`; pandas' read_excel does the equivalent). For
+  * `readGrid`; pandas' read_excel does the equivalent). For
   * many-workbook directories pass the schema explicitly —
   * `.schema(...)` — and inference is skipped entirely.
   *

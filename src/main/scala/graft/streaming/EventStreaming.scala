@@ -50,20 +50,6 @@ object EventStreaming {
       .map(_.numRowsDroppedByWatermark)
       .sum
 
-  /** Late-tolerant daily mart: the streaming twin of the batch daily
-    * aggregation — same grain, watermark instead of a chunk filter. */
-  def dailyByType(events: DataFrame,
-                  watermark: String = "1 day"): DataFrame = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window($"ts", "1 day"), $"event_type")
-      .agg(sum($"value").as("total_value"),
-        count(lit(1)).as("n_events"))
-      .select($"window.start".cast("date").as("d"),
-        $"event_type", $"total_value", $"n_events")
-  }
-
   final case class Event(event_id: Long, ts: java.sql.Timestamp,
                          user_id: Long, event_type: String,
                          value: Double)

@@ -2,6 +2,7 @@ package graft.pos
 
 import java.nio.file.{Files, Paths}
 import java.time.LocalDate
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -152,6 +153,40 @@ class MainSpec extends AnyFunSuite {
         dataRoot = root), stages, sink.out, sink.err) == 1)
     assert(sink.errs.exists(_.startsWith("ERROR:")))
     assert(sink.errs.exists(_.contains("transport down")))
+  }
+
+  test("Main: workbooks that disagree on their columns fail the clean " +
+    "stage, naming the workbook, and leave earlier silver untouched") {
+    val root = Files.createTempDirectory("mainlayout").toString
+    val (start, end) = ("2025-01-01", "2025-02-09")
+    val stages = Main.defaultStages(spark, root, 180, Seq("Kavia"),
+      (_, s0, e0) => workbookBytes(s0, e0))
+    val queries = new PosQueries(spark, root)
+    assert(queries.getPayments(stages, start, end).count() == 40)
+    val silver = Paths.get(root, "clean/payments/data")
+    def snapshot(): Map[String, (Long, Seq[Byte])] = {
+      val files = Files.walk(silver)
+      try files.iterator().asScala.filter(Files.isRegularFile(_)).map { p =>
+        silver.relativize(p).toString ->
+          (Files.getLastModifiedTime(p).toMillis, Files.readAllBytes(p).toSeq)
+      }.toMap
+      finally files.close()
+    }
+    val before = snapshot()
+    // a second export in the branch directory with one more column
+    val rows = gridRows(LocalDate.parse(start), LocalDate.parse(end))
+    val wider = rows.take(2) ++ Seq(rows(2) :+ "Total Cobrado") ++
+      rows.drop(3).map(_ :+ "1.00")
+    Files.write(Paths.get(root, "raw/payments/Kavia/zz_wider.xlsx"),
+      graft.sources.Xlsx.writeBytes(Seq(("Detalle por forma de pago", wider))))
+    val e = intercept[Exception](
+      queries.getPayments(stages, start, end, refresh = true))
+    val dq = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).collectFirst { case d: DataQualityError => d }
+    assert(dq.exists(_.getMessage.contains("zz_wider.xlsx")), e)
+    assert(new StageManifests(s"$root/clean/payments").read(start, end)
+      .map(_.status).contains("failed"))
+    assert(snapshot() == before)
   }
 
   // ------------------------------------------------ forecast CLI

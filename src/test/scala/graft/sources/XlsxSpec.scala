@@ -191,15 +191,27 @@ class XlsxSpec extends AnyFunSuite {
         "Subtotal", "IVA", "Total"),
       Seq("Miércoles", "15/01/2025", "1001", "CAFE", "No",
         "1", "100.00", "16.00", "116.00", "45.00", "7.20", "52.20"))
-    val sf = dir.resolve("ventas.xlsx")
-    val fos = new java.io.FileOutputStream(sf.toFile)
-    try Xlsx.write(Seq("detalle de ventas " -> sales), fos)
-    finally fos.close()
+    // a second export from another branch: its own Sucursal line, and
+    // its header one row lower
+    val sales2: Seq[Seq[Any]] = Seq(Seq("Reporte"), Seq(),
+      Seq("Sucursal: Kavia_OLD")) ++ sales.drop(2).map(_.map {
+        case "1001" => "2002"
+        case v => v
+      })
+    def writeSales(name: String, rows: Seq[Seq[Any]]): Unit = {
+      val fos = new java.io.FileOutputStream(dir.resolve(name).toFile)
+      try Xlsx.write(Seq("detalle de ventas " -> rows), fos)
+      finally fos.close()
+    }
+    writeSales("ventas.xlsx", sales)
+    writeSales("ventas2.xlsx", sales2)
     val sOut = graft.pos.staging.SalesXlsx.clean(s, dir.toString)
     val sRows = sOut.collect()
-    assert(sRows.length == 1)
-    assert(sRows(0).getAs[String]("sucursal") == "Plaza Nativa")
-    assert(sRows(0).getAs[Double]("subtotal_item") == 45.0)
+    assert(sRows.length == 2)
+    assert(sRows.map(r => r.getAs[String]("order_id") ->
+      r.getAs[String]("sucursal")).toMap ==
+      Map("1001" -> "Plaza Nativa", "2002" -> "Kavia"))
+    assert(sRows.forall(_.getAs[Double]("subtotal_item") == 45.0))
 
     // transfers: no "Transferencias" sheet → FIRST sheet wins
     val tDir = java.nio.file.Files.createTempDirectory("xlsx_transf")
@@ -235,10 +247,12 @@ class XlsxSpec extends AnyFunSuite {
     val aElim: Seq[Seq[Any]] = Seq(
       Seq(null, "Fecha de operación", "Orden"),
       Seq(null, "2025-01-15", "1001"))
-    // file B: header on sheet row 1 (no junk above), NO eliminations
+    // file B: header on sheet row 1 (no junk above), NO eliminations,
+    // and a row with the same (Fecha, Orden) as file A's eliminated one
     val b: Seq[Seq[Any]] = Seq(
       Seq("Fecha", "Orden", "Forma de pago", "Propina", "Total"),
-      Seq("2025-01-16", "2002", "Tarjeta", "2.00", "200.00"))
+      Seq("2025-01-16", "2002", "Tarjeta", "2.00", "200.00"),
+      Seq("2025-01-15", "1001", "Tarjeta", "3.00", "300.00"))
     def writeWb(name: String, sheets: Seq[(String, Seq[Seq[Any]])]): Unit = {
       val fos = new java.io.FileOutputStream(dir.resolve(name).toFile)
       try Xlsx.write(sheets, fos) finally fos.close()
@@ -249,10 +263,48 @@ class XlsxSpec extends AnyFunSuite {
     val out = graft.pos.staging.PaymentsXlsx.clean(s, dir.toString, "K")
     val rows = out.collect().map(r =>
       (r.getAs[Long]("order_index"), r.getAs[Double]("day_total"),
-        r.getAs[Boolean]("elimination_present"))).sortBy(_._1)
+        r.getAs[Boolean]("elimination_present"))).sortBy(r => (r._1, r._2))
     // both files' fact rows survive their own header offsets, and
     // file A's eliminations flag only file A's order
-    assert(rows.toSeq == Seq((1001L, 100.0, true), (2002L, 200.0, false)))
+    assert(rows.toSeq == Seq((1001L, 100.0, true), (1001L, 300.0, false),
+      (2002L, 200.0, false)))
+  }
+
+  test("PaymentsXlsx.clean + partitioned write: the job count does not " +
+    "grow with the number of workbooks") {
+    val s = spark
+    val sc = s.sparkContext
+    def jobsFor(workbooks: Int): Int = {
+      val dir = java.nio.file.Files.createTempDirectory("xlsx_jobs")
+      for (w <- 1 to workbooks) {
+        val day = f"2025-01-$w%02d"
+        val detail: Seq[Seq[Any]] = Seq(Seq("Reporte"), Seq(),
+          Seq("Fecha", "Orden", "Forma de pago", "Propina", "Total"),
+          Seq(day, s"${w}01", "Efectivo", "1.00", "100.00"),
+          Seq(day, s"${w}02", "Tarjeta", "1.00", "50.00"))
+        val elim: Seq[Seq[Any]] = Seq(
+          Seq(null, "Fecha de operación", "Orden"), Seq(null, day, s"${w}02"))
+        val fos = new java.io.FileOutputStream(
+          dir.resolve(s"pagos_$w.xlsx").toFile)
+        try Xlsx.write(Seq("Detalle por forma de pago" -> detail,
+          "Pagos Eliminados" -> elim), fos)
+        finally fos.close()
+      }
+      val out = java.nio.file.Files.createTempDirectory("xlsx_jobs_out")
+      val group = s"xlsx-jobs-$workbooks-${System.nanoTime}"
+      sc.setJobGroup(group, "staging job-count contract")
+      try graft.pos.staging.PaymentsXlsx.clean(s, dir.toString, "K")
+        .write.mode("overwrite").partitionBy("operating_date")
+        .parquet(out.resolve("data").toString)
+      finally sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+      assert(s.read.parquet(out.resolve("data").toString)
+        .filter("elimination_present").count() == workbooks)
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    val one = jobsFor(1)
+    val three = jobsFor(3)
+    assert(one == three, s"1 workbook: $one jobs, 3 workbooks: $three jobs")
   }
 
   test("S13 edge export: mart DataFrame → xlsx → re-read") {
