@@ -623,15 +623,17 @@ object DomainParity {
           AS DOUBLE) AS ingreso_debito
       FROM events GROUP BY 1, 2),
     longm AS (
-      SELECT sucursal, fecha, 'ingreso_efectivo' AS metric,
-             ingreso_efectivo AS valor FROM mart
-      UNION ALL SELECT sucursal, fecha, 'ingreso_credito',
-             ingreso_credito FROM mart
-      UNION ALL SELECT sucursal, fecha, 'ingreso_debito',
-             ingreso_debito FROM mart
-      UNION ALL SELECT sucursal, fecha, 'ingreso_total',
-             ingreso_efectivo + ingreso_credito + ingreso_debito
-             FROM mart),
+      SELECT * FROM (
+        SELECT sucursal, fecha, 'ingreso_efectivo' AS metric,
+               ingreso_efectivo AS valor FROM mart
+        UNION ALL SELECT sucursal, fecha, 'ingreso_credito',
+               ingreso_credito FROM mart
+        UNION ALL SELECT sucursal, fecha, 'ingreso_debito',
+               ingreso_debito FROM mart
+        UNION ALL SELECT sucursal, fecha, 'ingreso_total',
+               ingreso_efectivo + ingreso_credito + ingreso_debito
+               FROM mart)
+      WHERE sucursal IS NOT NULL),
     cal AS (
       SELECT sucursal, metric, unnest(generate_series(min(fecha),
              max(fecha), INTERVAL 1 DAY))::DATE AS fecha

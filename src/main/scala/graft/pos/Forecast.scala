@@ -2,24 +2,27 @@ package graft.pos
 
 import java.time.LocalDate
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Payments forecasting + banking deposit schedule
-  * (`/root/reference/src/pos_core/forecasting/`), set-based:
+  * (reference `pos_core/forecasting/`):
   *
-  *  - series densification (W3) via `sequence`/`explode`;
-  *  - NaiveLastWeek (W7): for each target date, the nearest k ∈ 1..52
-  *    with source = target − 7k on/before the branch's last data date
-  *    and not holiday-adjacent, value from the densified series else 0
-  *    — expressed as a candidate explode + `row_number`, no per-row
-  *    driver loop (naive.py:19-56,92-176);
-  *  - deposit schedule (W5/W6): weekday-conditional batching over
-  *    hist-else-forecast daily totals (deposit_schedule.py:31-155,
-  *    cash_flow.py:19-85).
+  *  - forecast (W3/W7/W8): the mart is stacked to (sucursal, metric,
+  *    fecha, valor) and shuffled once by (sucursal, metric); one
+  *    `flatMapGroups` kernel per series densifies it (gaps 0.0,
+  *    duplicate days summed in a fixed order — preparation.py:12-39),
+  *    drops it below `minObs` days (api.py:296-299) and runs the model:
+  *    NaiveLastWeek, the nearest k ∈ 1..52 whose source target − 7k is
+  *    on/before the last data date and not holiday-adjacent, value from
+  *    the dense series else 0 (naive.py:19-56,92-176), or
+  *    [[ArimaLite.forecastLog1p]] (arima.py:31-185);
+  *  - deposit schedule (W5/W6): each deposit date explodes its
+  *    weekday-conditional cash and card source days once, joins the
+  *    hist-else-forecast daily rows once and aggregates once
+  *    (deposit_schedule.py:31-155, cash_flow.py:19-85).
   *
-  * Parallelism is (branch × metric × date) — every step is a
-  * DataFrame op that scales with partitions, not branches.
+  * Parallelism is (branch × metric) series for the forecast and daily
+  * rows for the schedule; neither job count grows with the branches.
   */
 object Forecast {
 
@@ -34,131 +37,92 @@ object Forecast {
       cols.map(c => coalesce(col(c), lit(0.0))).reduce(_ + _))
   }
 
-  /** Long (sucursal, metric, fecha, valor) densified to every day in
-    * each branch's [min, max] range, gaps = 0.0 (preparation.py:12-39). */
-  def buildDailySeries(mart: DataFrame, metrics: Seq[String]): DataFrame = {
+  /** W6 holiday adjacency: the holidays and the days either side. */
+  private def adjacentDays(holidays: Set[LocalDate]): Set[LocalDate] =
+    holidays.flatMap(h => Seq(h.minusDays(1), h, h.plusDays(1)))
+
+  /** [[adjacentDays]] as a column predicate (the set is tiny and fixed,
+    * so it goes in as string literals). */
+  def holidayAdjacent(d: Column, holidays: Set[LocalDate]): Column =
+    if (holidays.isEmpty) lit(false)
+    else d.cast("string")
+      .isin(adjacentDays(holidays).toSeq.map(_.toString): _*)
+
+  /** One daily observation, or one forecast day, of a series. */
+  private[pos] final case class SeriesRow(sucursal: String,
+    metric: String, fecha: LocalDate, valor: Double)
+
+  /** A model: the next `horizon` values after a dense daily series
+    * whose first day is the given date. */
+  private type Model = (Array[Double], LocalDate) => Array[Double]
+
+  /** NaiveLastWeek: each target takes its nearest valid lag-7 source. */
+  private def naive(horizon: Int, holidays: Set[LocalDate],
+                    maxWeeksBack: Int = 52): Model = {
+    val adjacent = adjacentDays(holidays)
+    (v, d0) => {
+      val last = d0.plusDays(v.length - 1L)
+      Array.tabulate(horizon) { i =>
+        val target = last.plusDays(i + 1L)
+        (1 to maxWeeksBack).iterator.map(k => target.minusDays(7L * k))
+          .find(src => !src.isAfter(last) && !adjacent(src))
+          .fold(0.0) { src =>
+            val j = src.toEpochDay - d0.toEpochDay
+            if (j >= 0) v(j.toInt) else 0.0
+          }
+      }
+    }
+  }
+
+  /** Log-AR (W8), fitted on each series where it lies. */
+  private def arima(horizon: Int): Model =
+    (v, _) => ArimaLite.forecastLog1p(v, horizon)
+
+  /** The model's forecast days after the last data date of every
+    * (sucursal, metric) series spanning ≥ `minObs` days, as (sucursal,
+    * fecha, metric, valor) ordered by those keys. Rows with a null
+    * sucursal or fecha belong to no series (pandas drops null group
+    * keys; QA counts them as `null_key_rows`). */
+  private def forecast(mart: DataFrame, metrics: Seq[String],
+                       minObs: Int, model: Model): DataFrame = {
     val spark = mart.sparkSession
     import spark.implicits._
     val present = metrics.filter(mart.columns.contains)
     if (present.isEmpty)
       throw new DataQualityError(s"none of $metrics present")
-    val stackArgs = present.map(m => s"'$m', coalesce(`$m`, 0.0)")
-      .mkString(", ")
-    val long = mart.select($"sucursal", $"fecha".cast("date").as("fecha"),
-      expr(s"stack(${present.size}, $stackArgs) as (metric, valor)"))
-    val cal = long.groupBy($"sucursal", $"metric")
-      .agg(min($"fecha").as("d0"), max($"fecha").as("d1"))
-      .select($"sucursal", $"metric",
-        explode(sequence($"d0", $"d1", expr("interval 1 day"))).as("fecha"))
-    cal.join(long, Seq("sucursal", "metric", "fecha"), "left")
-      .groupBy($"sucursal", $"metric", $"fecha")
-      .agg(coalesce(sum($"valor"), lit(0.0)).as("valor"))
-  }
-
-  /** W6 holiday adjacency: date is a holiday or ±1 day from one
-    * (holiday set broadcast as literals — it is tiny and fixed). */
-  def holidayAdjacent(d: Column,
-                      holidays: Set[LocalDate]): Column =
-    if (holidays.isEmpty) lit(false)
-    else {
-      val hs = holidays.map(_.toString).toSeq
-      d.cast("string").isin(hs: _*) ||
-        date_add(d, 1).cast("string").isin(hs: _*) ||
-        date_sub(d, 1).cast("string").isin(hs: _*)
-    }
-
-  /** NaiveLastWeek forecast: `horizonDays` rows per (sucursal, metric)
-    * after each branch's last data date. Guard: ≥ minObs observed days
-    * (api.py:296-299); under-observed combinations are dropped, and if
-    * ALL drop a [[DataQualityError]] is thrown (api.py:332-336). */
-  def naiveForecast(series: DataFrame, horizonDays: Int,
-                    holidays: Set[LocalDate] = Set.empty,
-                    minObs: Int = 30,
-                    maxWeeksBack: Int = 52): DataFrame = {
-    val spark = series.sparkSession
-    import spark.implicits._
-    val bounds = series.groupBy($"sucursal", $"metric")
-      .agg(max($"fecha").as("last_date"), count(lit(1)).as("n_obs"))
-      .filter($"n_obs" >= minObs)
-    if (bounds.isEmpty)
-      throw new DataQualityError(
-        s"no (sucursal, metric) series with >= $minObs observations")
-
-    // target dates × candidate weeks-back, first valid candidate wins
-    val targets = bounds.select($"sucursal", $"metric", $"last_date",
-      explode(sequence(lit(1), lit(horizonDays))).as("step"))
-      .withColumn("fecha", expr("date_add(last_date, step)"))
-    val cands = targets.select($"sucursal", $"metric", $"last_date",
-        $"fecha", explode(sequence(lit(1), lit(maxWeeksBack))).as("k"))
-      .withColumn("src", expr("date_sub(fecha, 7 * k)"))
-      .filter($"src" <= $"last_date" &&
-        !holidayAdjacent($"src", holidays))
-    val w = Window.partitionBy($"sucursal", $"metric", $"fecha")
-      .orderBy($"k")
-    val first = cands.withColumn("rn", row_number().over(w))
-      .filter($"rn" === 1)
-    first
-      .join(series.select($"sucursal", $"metric",
-          $"fecha".as("src"), $"valor"),
-        Seq("sucursal", "metric", "src"), "left")
-      .select($"sucursal", $"fecha", $"metric",
-        coalesce($"valor", lit(0.0)).as("valor"))
-      // fallback rows for targets with no valid candidate at all → 0.0
-      .unionByName(
-        targets.join(first.select($"sucursal", $"metric", $"fecha"),
-            Seq("sucursal", "metric", "fecha"), "left_anti")
-          .select($"sucursal", $"fecha", $"metric",
-            lit(0.0).as("valor")))
-      .orderBy($"sucursal", $"fecha", $"metric")
-  }
-
-  /** One daily observation of a (branch, metric) series. */
-  final case class SeriesRow(sucursal: String, metric: String,
-                             fecha: java.sql.Date, valor: Double)
-
-  /** Log-AR forecast (W8): per-(sucursal, metric) series collected
-    * INSIDE `flatMapGroups` on executors — the cluster parallelizes
-    * across branch × metric, each tiny series fits locally
-    * (arima.py:31-185 contract; see [[ArimaLite]]). Combinations with
-    * < minObs observations are skipped; all-skipped raises
-    * (api.py:296-336). */
-  def arimaForecast(series: DataFrame, horizonDays: Int,
-                    minObs: Int = 30): DataFrame = {
-    val spark = series.sparkSession
-    import spark.implicits._
-    // emptiness guard runs on the tiny bounds aggregate, NOT on the
-    // fitted output — out.isEmpty would execute the whole per-series
-    // grid twice (once for the check, once for the caller's action)
-    val anyEligible = !series.groupBy($"sucursal", $"metric")
-      .agg(count(lit(1)).as("n")).filter($"n" >= minObs).isEmpty
-    if (!anyEligible)
-      throw new DataQualityError(
-        s"no (sucursal, metric) series with >= $minObs observations")
-    val out = series.select($"sucursal", $"metric",
-        $"fecha".cast("date").as("fecha"), $"valor".cast("double"))
-      .as[SeriesRow]
-      .groupByKey(r => (r.sucursal, r.metric))
-      .flatMapGroups { (key: (String, String),
-                        it: Iterator[SeriesRow]) =>
-        val (suc, m) = key
-        val rows = it.toArray.sortBy(_.fecha.getTime)
-        if (rows.length < minObs) Iterator.empty
+    mart.select($"sucursal", $"fecha".cast("date").as("fecha"),
+        PaymentsDaily.stacked(present, "metric", "valor"))
+      .filter($"sucursal".isNotNull && $"fecha".isNotNull)
+      .groupBy($"sucursal", $"metric").as[(String, String), SeriesRow]
+      .flatMapGroups { (key: (String, String), rows: Iterator[SeriesRow]) =>
+        // sorted by (day, value): a day's duplicates sum in one order
+        val obs = rows.map(r => (r.fecha.toEpochDay, r.valor)).toArray
+          .sorted(Ordering.Tuple2(Ordering.Long,
+            Ordering.Double.TotalOrdering))
+        val d0 = obs.head._1
+        val n = (obs.last._1 - d0 + 1).toInt
+        if (n < minObs) Iterator.empty
         else {
-          val fc = ArimaLite.forecastLog1p(rows.map(_.valor), horizonDays)
-          val last = rows.last.fecha.toLocalDate
-          fc.iterator.zipWithIndex.map { case (v, i) =>
-            SeriesRow(suc, m,
-              java.sql.Date.valueOf(last.plusDays(i + 1L)), v)
-          }
+          val dense = new Array[Double](n)
+          obs.foreach { case (d, v) => dense((d - d0).toInt) += v }
+          model(dense, LocalDate.ofEpochDay(d0)).iterator.zipWithIndex
+            .map { case (v, i) =>
+              SeriesRow(key._1, key._2, LocalDate.ofEpochDay(d0 + n + i), v)
+            }
         }
-      }.toDF()
-    out.orderBy($"sucursal", $"fecha", $"metric")
+      }
+      .select($"sucursal", $"fecha", $"metric", $"valor")
+      // series × horizon rows: one sorted partition, gathered without
+      // the sampling pass (and second kernel run) of a range sort
+      .repartition(1)
+      .sortWithinPartitions($"sucursal", $"fecha", $"metric")
   }
 
   /** Deposit schedule over the forecast window: cash batched Mon/Wed/
     * Fri, cards next-business-day; values from historical where the
     * source date ≤ last historical date, else from the forecast
-    * (summed across branches — cash_flow.py:19-85). Output
+    * (summed across branches — cash_flow.py:19-85). Money is summed as
+    * decimal(18,2), so the result does not depend on row order. Output
     * (fecha, efectivo, credito, debito, total). */
   def depositSchedule(forecastLong: DataFrame,
                       historicalMart: DataFrame): DataFrame = {
@@ -175,27 +139,20 @@ object Forecast {
       throw new DataQualityError(
         "depositSchedule: historical mart has no rows (no last date)")
 
+    // hist-else-forecast daily rows: hist ≤ lastHist, forecast after;
     // absent metric columns count as zero (cash_flow.py:42-57)
+    def cents(c: Column) = coalesce(c, lit(0.0)).cast("decimal(18,2)")
     val histCols = historicalMart.columns.toSet
-    val histDaily = historicalMart
-      .select(($"fecha".cast("date").as("d") +:
-        metrics.map(m =>
-          (if (histCols(m)) coalesce(col(m), lit(0.0))
-           else lit(0.0)).as(m))): _*)
-      .groupBy($"d")
-      .agg(sum(col(metrics.head)).as(metrics.head),
-        metrics.tail.map(m => sum(col(m)).as(m)): _*)
-    val fcDaily = forecastLong.filter($"metric".isin(metrics: _*))
-      .groupBy($"fecha".cast("date").as("d"))
-      .pivot("metric", metrics).sum("valor")
-      .na.fill(0.0, metrics)
+    val hist = historicalMart
+      .select(($"fecha".cast("date").as("d") +: metrics.map(m =>
+        cents(if (histCols(m)) col(m) else lit(0.0)).as(m))): _*)
+      .filter($"d" <= lit(lastHist))
+    val fcst = forecastLong
+      .filter($"metric".isin(metrics: _*) &&
+        $"fecha".cast("date") > lit(lastHist))
+      .select(($"fecha".cast("date").as("d") +: metrics.map(m =>
+        cents(when($"metric" === m, $"valor")).as(m))): _*)
 
-    // hist-else-forecast union: hist rows ≤ lastHist, forecast after
-    val daily = histDaily.filter($"d" <= lit(lastHist))
-      .unionByName(fcDaily.filter($"d" > lit(lastHist)))
-
-    val deposits = forecastLong.select($"fecha".cast("date").as("dep"))
-      .distinct()
     // dayofweek: 1=Sun..7=Sat. Cash sources (deposit_schedule.py:31-67):
     // Mon←{-3,-2,-1}, Wed←{-2,-1}, Fri←{-2,-1}, else none.
     val cashSrcs = expr("""CASE dayofweek(dep)
@@ -209,31 +166,31 @@ object Forecast {
         WHEN 1 THEN array(date_sub(dep,2))
         WHEN 7 THEN array(date_sub(dep,1))
         ELSE array(date_sub(dep,1)) END""")
+    // the deposit dates are few (horizon + the spread of the branches'
+    // last dates), so the schedule is built in one partition: no
+    // exchange to dedupe them, to group by them or to sort by them.
+    // Every deposit has a card source, so each keeps at least one row.
+    val sources = forecastLong.select($"fecha".cast("date").as("dep"))
+      .coalesce(1).distinct()
+      .select($"dep", cashSrcs.as("cash"), cardSrcs.as("card"))
+      .select($"dep", $"cash", $"card",
+        explode(array_union($"cash", $"card")).as("d"))
 
-    def total(srcs: Column, metric: String, alias: String) = {
-      deposits.select($"dep", explode(srcs).as("d"))
-        .join(daily, Seq("d"), "left")
-        .groupBy($"dep")
-        .agg(coalesce(sum(coalesce(col(metric), lit(0.0))), lit(0.0))
-          .as(alias))
-    }
-    val cash = total(cashSrcs, "ingreso_efectivo", "efectivo")
-    val cred = total(cardSrcs, "ingreso_credito", "credito")
-    val deb = total(cardSrcs, "ingreso_debito", "debito")
-
-    deposits
-      .join(cash, Seq("dep"), "left").join(cred, Seq("dep"), "left")
-      .join(deb, Seq("dep"), "left")
-      .select($"dep".as("fecha"),
-        coalesce($"efectivo", lit(0.0)).as("efectivo"),
-        coalesce($"credito", lit(0.0)).as("credito"),
-        coalesce($"debito", lit(0.0)).as("debito"))
+    def total(in: String, metric: String, alias: String) =
+      coalesce(sum(when(array_contains(col(in), $"d"), col(metric))),
+        lit(0)).cast("double").as(alias)
+    sources.join(hist.unionByName(fcst), Seq("d"), "left")
+      .groupBy($"dep".as("fecha"))
+      .agg(total("cash", "ingreso_efectivo", "efectivo"),
+        total("card", "ingreso_credito", "credito"),
+        total("card", "ingreso_debito", "debito"))
       .withColumn("total", $"efectivo" + $"credito" + $"debito")
       .orderBy($"fecha")
   }
 
-  /** End-to-end: mart → ingreso_total → densified series → naive
-    * forecast → deposit schedule (api.py:179-362 shape). */
+  /** End-to-end: mart → ingreso_total → per-series forecast → deposit
+    * schedule (api.py:179-362 shape). Raises a [[DataQualityError]]
+    * when every series falls below `minObs` (api.py:332-336). */
   def runPaymentsForecast(mart: DataFrame, horizonDays: Int = 7,
                           metrics: Seq[String] = DefaultMetrics,
                           holidays: Set[LocalDate] = Set.empty,
@@ -241,19 +198,18 @@ object Forecast {
                           minObs: Int = 30)
       : (DataFrame, DataFrame) = {
     val withTotal = withIngresoTotal(mart)
-    val series = buildDailySeries(withTotal, metrics)
-    val fc = model match {
-      case "naive" => naiveForecast(series, horizonDays, holidays, minObs)
-      case "arima" => arimaForecast(series, horizonDays, minObs)
+    val m = model match {
+      case "naive" => naive(horizonDays, holidays)
+      case "arima" => arima(horizonDays)
       case other => throw new ConfigError(s"unknown model: $other")
     }
-    // The schedule derives deposits + all three bucket totals from the
-    // forecast frame — five references, each of which would re-execute
-    // the entire candidate-walk subtree. The forecast output is tiny
-    // (branches x metrics x horizon), so materialize it once; at
-    // cluster scale this is the same call the q82 curation capstone
-    // makes on its shared shingle basis.
-    val fcM = fc.localCheckpoint()
-    (fcM, depositSchedule(fcM, withTotal))
+    // the schedule reads the forecast twice; it is tiny
+    // (series × horizon), so it is materialized once
+    val fc = forecast(withTotal, metrics, minObs, m)
+      .localCheckpoint()
+    if (fc.isEmpty)
+      throw new DataQualityError(
+        s"no (sucursal, metric) series with >= $minObs observations")
+    (fc, depositSchedule(fc, withTotal))
   }
 }

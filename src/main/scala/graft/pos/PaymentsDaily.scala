@@ -28,6 +28,12 @@ object PaymentsDaily {
     "ingreso_amex", "ingreso_ubereats", "ingreso_rappi",
     "ingreso_transferencia", "ingreso_SubsidioTEC", "ingreso_otros")
 
+  /** Generator over mart columns `cols`: one (name, value) row per
+    * column, nulls as 0.0 — the long form QA and the forecast read. */
+  def stacked(cols: Seq[String], name: String, value: String): Column =
+    expr(cols.map(c => s"'$c', coalesce(CAST(`$c` AS DOUBLE), 0.0)")
+      .mkString(s"stack(${cols.size}, ", ", ", s") as ($name, $value)"))
+
   /** Ordered substring bucketing over the normalized method — rule
     * order matters (rappi before credito etc.,
     * payments_daily.py:157-194). One when-chain → codegen'd. */

@@ -1,19 +1,21 @@
 package graft.pos
 
-import org.apache.spark.sql.{DataFrame}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Data-quality engine over `mart_payments_daily`
-  * (`/root/reference/src/pos_core/qa/qa_payments.py`), level-gated like
+  * (reference `pos_core/qa/qa_payments.py`), level-gated like
   * `qa/api.py:105-134`:
   *   0 schema, 1 nulls, 2 non-negativity + consistency,
   *   3 missing/duplicate days + zero-method flags, 4 z-score anomalies.
   *
   * Every check is a lazy DataFrame; [[PaymentsQaResult.summary]]
-  * forces only the counts. The z-score window is the same
-  * exact-integer construction as the oracle queries: rolling 60-row
-  * mean/sample-stddev per sucursal (qa_payments.py:331-407).
+  * forces only the counts, in two queries: one two-level grouped
+  * aggregate (per (sucursal, fecha), then per sucursal) for levels 1–3,
+  * and one window over the nine money columns stacked to (sucursal,
+  * metric, fecha, value) for level 4. The z-score is the rolling 60-row
+  * mean/sample-stddev per (sucursal, metric) (qa_payments.py:331-407).
   */
 final case class PaymentsQaResult(
     summary: Map[String, Long],
@@ -45,39 +47,47 @@ object Qa {
 
     var summary = Map.empty[String, Long]
 
-    // Levels 1–3 row-level counts in ONE aggregation job: each check
-    // stays a lazy DataFrame for callers, but the summary numbers come
-    // from a single scan of the mart (sum-of-flags with map-side
-    // partial aggregation) instead of one count() job per check —
-    // at scale the mart is read once, not six times.
-    val negPred = MoneyCols.map(c => col(c) < -1e-6).reduce(_ || _)
     val revenue = MoneyCols.map(c => coalesce(col(c), lit(0.0)))
       .reduce(_ + _)
     val zeroPred = $"num_tickets" > 0 &&
       $"ingreso_credito" === 0.0 && $"ingreso_debito" === 0.0
-    def flag(p: org.apache.spark.sql.Column) =
-      sum(when(p, 1L).otherwise(0L))
+
+    // Levels 1–3 in ONE grouped aggregate: per (sucursal, fecha) the
+    // row count and each row flag's sum, per sucursal the days its span
+    // misses and the days it repeats, then the totals. The job count
+    // does not depend on the number of branches or checks.
     if (level >= 1) {
-      val aggs =
-        Seq(flag($"sucursal".isNull || $"fecha".isNull).as("nk")) ++
-          (if (level >= 2) Seq(flag(negPred).as("neg"),
-            flag($"num_tickets" > 0 && revenue <= 1e-6).as("tnr"),
-            flag(revenue > 1e-6 && $"num_tickets" <= 0).as("rnt"))
+      val flags: Seq[(String, Column)] =
+        Seq("null_key_rows" -> ($"sucursal".isNull || $"fecha".isNull)) ++
+          (if (level >= 2) Seq(
+            "negative_rows" -> MoneyCols.map(c => col(c) < -1e-6)
+              .reduce(_ || _),
+            "tickets_no_revenue" -> ($"num_tickets" > 0 && revenue <= 1e-6),
+            "revenue_no_tickets" -> (revenue > 1e-6 && $"num_tickets" <= 0))
            else Nil) ++
-          (if (level >= 3) Seq(flag(zeroPred).as("zero")) else Nil)
-      val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-      def get(n: String): Long =
-        if (r.isNullAt(r.fieldIndex(n))) 0L else r.getAs[Long](n)
-      summary += "null_key_rows" -> get("nk")
-      if (level >= 2) {
-        summary += "negative_rows" -> get("neg")
-        summary += "tickets_no_revenue" -> get("tnr")
-        summary += "revenue_no_tickets" -> get("rnt")
+          (if (level >= 3) Seq("zero_method_days" -> zeroPred) else Nil)
+      val perBranch = flags.map { case (k, _) => sum(col(k)).as(k) } ++
+        (if (level >= 3) Seq(
+          (datediff(max($"fecha"), min($"fecha")) + 1 - count(lit(1)))
+            .cast("long").as("missing_days"),
+          sum(when($"n" > 1, 1L).otherwise(0L)).as("duplicate_days"))
+         else Nil)
+      val counts = flags.map(_._1) ++
+        (if (level >= 3) Seq("missing_days", "duplicate_days") else Nil)
+      val r = df.groupBy($"sucursal", $"fecha")
+        .agg(count(lit(1)).as("n"), flags.map { case (k, p) =>
+          sum(when(p, 1L).otherwise(0L)).as(k) }: _*)
+        .groupBy($"sucursal").agg(perBranch.head, perBranch.tail: _*)
+        .agg(sum(counts.head).as(counts.head),
+          counts.tail.map(k => sum(k).as(k)): _*)
+        .collect()(0)
+      counts.foreach { k =>
+        summary += k -> (if (r.isNullAt(r.fieldIndex(k))) 0L
+                         else r.getAs[Long](k))
       }
-      if (level >= 3) summary += "zero_method_days" -> get("zero")
     }
 
-    // W4/W2/Q5 level 3
+    // W4/W2/Q5 level 3: the rows behind the counts, lazy for callers
     val (missingDays, dupDays, zeroFlags) = if (level >= 3) {
       val cal = df.groupBy($"sucursal")
         .agg(min($"fecha").as("d0"), max($"fecha").as("d1"))
@@ -85,41 +95,25 @@ object Qa {
           explode(sequence($"d0", $"d1", expr("interval 1 day"))).as("fecha"))
       val md = cal.join(df.select($"sucursal", $"fecha"),
         Seq("sucursal", "fecha"), "left_anti")
-      // ONE grouped pass yields both the duplicate-day count and the
-      // missing-day count (per-branch span minus days present equals
-      // the calendar anti-join count) — md/dd stay lazy for callers
       val dd = df.groupBy($"sucursal", $"fecha")
         .agg(count(lit(1)).as("n")).filter($"n" > 1)
       val zf = df.filter(zeroPred)
         .select($"sucursal", $"fecha", $"num_tickets")
-      val grouped = df.groupBy($"sucursal", $"fecha")
-        .agg(count(lit(1)).as("n"))
-        .groupBy($"sucursal")
-        .agg((datediff(max($"fecha"), min($"fecha")) + 1 -
-          count(lit(1))).cast("long").as("gap_days"),
-          sum(when($"n" > 1, 1L).otherwise(0L)).as("dup_days"))
-        .agg(coalesce(sum($"gap_days"), lit(0L)).as("md"),
-          coalesce(sum($"dup_days"), lit(0L)).as("dd"))
-        .collect()(0)
-      summary += "missing_days" -> grouped.getAs[Long]("md")
-      summary += "duplicate_days" -> grouped.getAs[Long]("dd")
       (Some(md), Some(dd), Some(zf))
     } else (None, None, None)
 
-    // W1 level 4: rolling z-score per sucursal × money column
+    // W1 level 4: rolling z-score per sucursal × money column, one
+    // window over the stacked columns
     val zs = if (level >= 4) {
-      val w = Window.partitionBy($"sucursal").orderBy($"fecha")
+      val w = Window.partitionBy($"sucursal", $"metric").orderBy($"fecha")
         .rowsBetween(-(zWindow - 1), 0)
-      val perCol = MoneyCols.map { c =>
-        val v = coalesce(col(c), lit(0.0))
-        val mu = avg(v).over(w)
-        val sd = stddev_samp(v).over(w) // ddof=1, matches pandas
-        df.select($"sucursal", $"fecha", lit(c).as("metric"),
-            v.as("value"), mu.as("mu"), sd.as("sd"))
-          .withColumn("z", when($"sd" > 0, ($"value" - $"mu") / $"sd"))
-          .filter(abs($"z") >= zThreshold)
-      }
-      val all = perCol.reduce(_ unionByName _)
+      val all = df.select($"sucursal", $"fecha",
+          PaymentsDaily.stacked(MoneyCols, "metric", "value"))
+        .select($"sucursal", $"fecha", $"metric", $"value",
+          avg($"value").over(w).as("mu"),
+          stddev_samp($"value").over(w).as("sd")) // ddof=1, matches pandas
+        .withColumn("z", when($"sd" > 0, ($"value" - $"mu") / $"sd"))
+        .filter(abs($"z") >= zThreshold)
       summary += "zscore_anomalies" -> all.count()
       Some(all)
     } else None

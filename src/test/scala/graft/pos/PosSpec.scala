@@ -224,7 +224,31 @@ class PosSpec extends AnyFunSuite {
     assert(r.summary("negative_rows") == 0)
     assert(r.summary("missing_days") == 1)
     assert(r.summary("duplicate_days") == 1)
-    assert(r.summary("zscore_anomalies") >= 1) // the spike
+    // the anomaly rows, recomputed in plain Scala from the rule: per
+    // (sucursal, money column) in date order, the mean and sample
+    // stddev of the last 60 rows; |z| >= 4 flags the row
+    val money = PaymentsDaily.BucketCols :+ "propinas"
+    val want = dup.collect().toSeq.groupBy(_.getAs[String]("sucursal"))
+      .toSeq.flatMap { case (suc, rs) =>
+        val byDay = rs.sortBy(_.getAs[java.sql.Date]("fecha").getTime)
+        for {
+          m <- money
+          vs = byDay.map(_.getAs[Double](m))
+          i <- vs.indices
+          win = vs.slice(math.max(0, i - 59), i + 1)
+          if win.length > 1
+          mu = win.sum / win.length
+          sd = math.sqrt(win.map(v => (v - mu) * (v - mu)).sum /
+            (win.length - 1))
+          if sd > 0 && math.abs((vs(i) - mu) / sd) >= 4.0
+        } yield (suc, byDay(i).getAs[java.sql.Date]("fecha").toString, m)
+      }.sorted
+    assert(want.contains(("Kavia", "2025-03-11", "ingreso_efectivo")))
+    val anomalies = r.zscoreAnomalies.get
+    val got = anomalies.collect().toSeq.map(a => (a.getAs[String]("sucursal"),
+      a.getAs[java.sql.Date]("fecha").toString, a.getAs[String]("metric")))
+    assert(got.sorted == want)
+    assert(r.summary("zscore_anomalies") == anomalies.count())
     assert(!r.hasErrors)
     // zero-method: tickets but no card income
     val zm = Qa.runPaymentsQa(padMart(martFixture(5, spike = false))
@@ -235,18 +259,33 @@ class PosSpec extends AnyFunSuite {
   }
 
   test("forecast: naive lag-7 values, holiday skip, deposit schedule") {
-    val mart = padMart(martFixture(35, spike = false))
-    // value pattern repeats weekly → forecast = last week's values
-    val (fc, dep) = Forecast.runPaymentsForecast(mart, horizonDays = 7)
+    val s = spark
+    import s.implicits._
+    // a second Kavia row on 2025-01-22 (efectivo 7.0): the series sums it
+    val extra = Seq(("Kavia", "2025-01-22", 7.0, 0.0, 0.0, 0L))
+      .toDF("sucursal", "fecha", "ingreso_efectivo", "ingreso_credito",
+        "ingreso_debito", "num_tickets")
+      .withColumn("fecha", $"fecha".cast("date"))
+    val mart = padMart(martFixture(35, spike = false).unionByName(extra))
+    // the 2025-01-29 holiday makes 01-28..01-30 adjacent, so the targets
+    // 02-05 and 02-06 skip their k = 1 sources and take k = 2
+    val (fc, dep) = Forecast.runPaymentsForecast(mart, horizonDays = 7,
+      holidays = Set(LocalDate.parse("2025-01-29")))
     import org.apache.spark.sql.functions._
     val fcRows = fc.filter(col("sucursal") === "Kavia" &&
       col("metric") === "ingreso_efectivo").collect()
     assert(fcRows.length == 7)
-    // last data date = 2025-02-04 (day 34, i%7 = 34%7 = 6 → 1600.0);
-    // forecast for 2025-02-05 = value of 2025-01-29 (i=28, 28%7=0 → 1000)
-    val f1 = fcRows.find(_.getAs[java.sql.Date]("fecha").toString ==
-      "2025-02-05").get
-    assert(f1.getAs[Double]("valor") == 1000.0)
+    // last data date = 2025-02-04 (day 34); the value pattern repeats
+    // weekly (1000 + 100 * (i % 7)), so every lag-7 source repeats it
+    // too, except 2025-01-22 (i = 21, 1000.0), which carries the
+    // duplicate's 7.0: 02-05's k = 2 source. Its k = 1 source would
+    // give 1000.0.
+    val got = fcRows.map(r => r.getAs[java.sql.Date]("fecha").toString ->
+      r.getAs[Double]("valor")).toMap
+    assert(got == Map("2025-02-05" -> 1007.0, "2025-02-06" -> 1100.0,
+      "2025-02-07" -> 1200.0, "2025-02-08" -> 1300.0,
+      "2025-02-09" -> 1400.0, "2025-02-10" -> 1500.0,
+      "2025-02-11" -> 1600.0))
     // deposit schedule: every forecast date has a row; totals consistent
     val depRows = dep.collect()
     assert(depRows.length == 7)
@@ -303,6 +342,22 @@ class PosSpec extends AnyFunSuite {
       col("metric") === "ingreso_efectivo")
       .collect().map(_.getAs[Double]("valor"))
     ef.foreach(v => assert(v > 300.0 && v < 5000.0, s"got $v"))
+    // every row is ArimaLite on the fixture series, fitted in plain Scala
+    val fixture = mart.collect()
+    val want = for {
+      suc <- Seq("Kavia", "Nativa")
+      m <- Forecast.DefaultMetrics
+      series = fixture.filter(_.getAs[String]("sucursal") == suc)
+        .sortBy(_.getAs[java.sql.Date]("fecha").getTime)
+        .map(r => if (m == "ingreso_total")
+          PaymentsDaily.BucketCols.map(c => r.getAs[Double](c)).reduce(_ + _)
+          else r.getAs[Double](m))
+      (v, i) <- ArimaLite.forecastLog1p(series, 7).zipWithIndex
+    } yield (suc, LocalDate.parse("2025-02-04").plusDays(i + 1L).toString,
+      m, v)
+    assert(rows.map(r => (r.getAs[String]("sucursal"),
+      r.getAs[java.sql.Date]("fecha").toString, r.getAs[String]("metric"),
+      r.getAs[Double]("valor"))).sorted.toSeq == want.sorted)
     assert(dep.count() == 7)
   }
 
@@ -312,5 +367,94 @@ class PosSpec extends AnyFunSuite {
       Forecast.runPaymentsForecast(tiny, horizonDays = 3)
     }
     assert(e.getMessage.contains("observations"))
+  }
+
+  test("forecast: rows with a null sucursal stay out of the series") {
+    val s = spark
+    import s.implicits._
+    // a whole branch without a name: enough days to pass the guard
+    val mart = padMart(martFixture(35, spike = false)
+      .withColumn("sucursal", org.apache.spark.sql.functions.when(
+        $"sucursal" === "Kavia", $"sucursal")))
+    val (fc, _) = Forecast.runPaymentsForecast(mart, horizonDays = 7)
+    val keys = fc.collect().toSeq.map(r => (r.getAs[String]("sucursal"),
+      r.getAs[java.sql.Date]("fecha").toString, r.getAs[String]("metric")))
+    assert(keys.size == 4 * 7)
+    assert(keys.distinct.size == keys.size)
+    assert(keys.forall(_._1 == "Kavia"))
+  }
+
+  test("deposit schedule: the same bits whatever the mart's row order") {
+    val s = spark
+    import s.implicits._
+    // cent values over many branches: a double sum would depend on the
+    // order in which the branches' rows meet
+    val base = LocalDate.parse("2025-01-01")
+    val rows = for (b <- 0 until 12; i <- 0 until 35) yield {
+      val c = (b * 7919 + i * 104729) % 100000
+      (s"B$b", base.plusDays(i.toLong).toString, 1000.0 + c / 100.0,
+        300.0 + (c % 997) / 100.0, 0.1 + (c % 89) / 100.0, 10L)
+    }
+    val mart = padMart(rows.toDF("sucursal", "fecha", "ingreso_efectivo",
+        "ingreso_credito", "ingreso_debito", "num_tickets")
+      .withColumn("fecha", $"fecha".cast("date")))
+    val reversed = s.createDataFrame(
+      mart.collect().reverse.toSeq.asJava, mart.schema).coalesce(1)
+    def schedule(m: DataFrame) =
+      Forecast.runPaymentsForecast(m, horizonDays = 7)._2.collect().toSeq
+    val a = schedule(mart.repartition(8))
+    assert(a.size == 7)
+    assert(a == schedule(reversed))
+  }
+
+  /** A `branches`-branch mart of 35 days, read back from parquet like
+    * the pipeline's own mart. */
+  private def branchMart(branches: Int): DataFrame = {
+    val s = spark
+    import s.implicits._
+    val base = LocalDate.parse("2025-01-01")
+    val rows = for (b <- 0 until branches; i <- 0 until 35)
+      yield (s"B$b", base.plusDays(i.toLong).toString,
+        1000.0 + 100.0 * (i % 7) + b, 500.0, 300.0, 50L)
+    val dir = java.nio.file.Files.createTempDirectory("pos_mart").toString
+    padMart(rows.toDF("sucursal", "fecha", "ingreso_efectivo",
+        "ingreso_credito", "ingreso_debito", "num_tickets")
+      .withColumn("fecha", $"fecha".cast("date")))
+      .write.mode("overwrite").parquet(dir)
+    s.read.parquet(dir)
+  }
+
+  test("forecast + deposit schedule: at most 10 jobs, whatever the " +
+    "number of branches") {
+    def jobs(branches: Int): Int = {
+      val mart = branchMart(branches)
+      val ((fc, dep), n) = graft.JobCount(spark, s"forecast-$branches") {
+        val out = Forecast.runPaymentsForecast(mart, horizonDays = 7)
+        out._1.collect()
+        out._2.collect()
+        out
+      }
+      assert(fc.count() == branches * 4 * 7 && dep.count() == 7)
+      n
+    }
+    val one = jobs(1)
+    val six = jobs(6)
+    assert(one == six, s"1 branch: $one jobs, 6 branches: $six jobs")
+    assert(six <= 10, s"$six jobs")
+  }
+
+  test("QA level 4: at most 7 jobs, whatever the number of branches") {
+    def jobs(branches: Int): Int = {
+      val mart = branchMart(branches)
+      val (r, n) = graft.JobCount(spark, s"qa-$branches") {
+        Qa.runPaymentsQa(mart, level = 4)
+      }
+      assert(r.summary("missing_days") == 0)
+      n
+    }
+    val one = jobs(1)
+    val six = jobs(6)
+    assert(one == six, s"1 branch: $one jobs, 6 branches: $six jobs")
+    assert(six <= 7, s"$six jobs")
   }
 }

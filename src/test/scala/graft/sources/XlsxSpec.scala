@@ -273,7 +273,6 @@ class XlsxSpec extends AnyFunSuite {
   test("PaymentsXlsx.clean + partitioned write: the job count does not " +
     "grow with the number of workbooks") {
     val s = spark
-    val sc = s.sparkContext
     def jobsFor(workbooks: Int): Int = {
       val dir = java.nio.file.Files.createTempDirectory("xlsx_jobs")
       for (w <- 1 to workbooks) {
@@ -291,16 +290,14 @@ class XlsxSpec extends AnyFunSuite {
         finally fos.close()
       }
       val out = java.nio.file.Files.createTempDirectory("xlsx_jobs_out")
-      val group = s"xlsx-jobs-$workbooks-${System.nanoTime}"
-      sc.setJobGroup(group, "staging job-count contract")
-      try graft.pos.staging.PaymentsXlsx.clean(s, dir.toString, "K")
-        .write.mode("overwrite").partitionBy("operating_date")
-        .parquet(out.resolve("data").toString)
-      finally sc.clearJobGroup()
-      org.apache.spark.ListenerBusDrain(sc)
+      val (_, jobs) = graft.JobCount(s, s"xlsx-jobs-$workbooks") {
+        graft.pos.staging.PaymentsXlsx.clean(s, dir.toString, "K")
+          .write.mode("overwrite").partitionBy("operating_date")
+          .parquet(out.resolve("data").toString)
+      }
       assert(s.read.parquet(out.resolve("data").toString)
         .filter("elimination_present").count() == workbooks)
-      sc.statusTracker.getJobIdsForGroup(group).length
+      jobs
     }
     val one = jobsFor(1)
     val three = jobsFor(3)
