@@ -1,5 +1,12 @@
 package graft
 
+import java.net.URI
+import java.security.PrivilegedExceptionAction
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.FileSystem
+import org.apache.hadoop.fs.local.LocalFs
+import org.apache.hadoop.security.UserGroupInformation
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The session recipe is enforced, not advisory: a caller whose
@@ -26,5 +33,40 @@ class SessionsSpec extends AnyFunSuite {
     // registered by conf, the extensions are live: native functions bind
     assert(TestSession.spark.sql("SELECT strip_accents_native('café')")
       .head().getString(0) == "cafe")
+  }
+
+  /** Runs `body` as another Hadoop user, whose cached FileSystems are
+    * apart from the shared session's and are closed afterwards. */
+  private def asUser[T](name: String)(body: => T): T = {
+    val ugi = UserGroupInformation.createRemoteUser(name)
+    try ugi.doAs(new PrivilegedExceptionAction[T] { def run(): T = body })
+    finally FileSystem.closeAllForUGI(ugi)
+  }
+
+  private val local = URI.create("file:///")
+
+  test("checked names a stock file: FileSystem cached before the session") {
+    val live = TestSession.spark
+    asUser("stock-fs") {
+      // made from a conf without the recipe, it lands in Hadoop's cache
+      val stock = FileSystem.get(local, new Configuration()).getClass
+      assert(stock != classOf[sources.GraftLocalFileSystem])
+      val ex = intercept[IllegalStateException](Sessions.checked("4"))
+      assert(ex.getMessage.contains(s"fs.file.impl=${stock.getName}"),
+        ex.getMessage)
+      assert(!ex.getMessage.contains("AbstractFileSystem"), ex.getMessage)
+      // the FileContext side is resolved from the conf on every call
+      assert(Sessions.localFsDiffs(new Configuration()).last.startsWith(
+        s"fs.AbstractFileSystem.file.impl=${classOf[LocalFs].getName}"))
+    }
+    assert(Sessions.checked("4") eq live)
+  }
+
+  test("the session's file: filesystems are the recipe's, for any user") {
+    asUser("fresh-fs") {
+      assert(Sessions.checked("4") eq TestSession.spark)
+      assert(FileSystem.get(local, TestSession.spark.sparkContext
+        .hadoopConfiguration).isInstanceOf[sources.GraftLocalFileSystem])
+    }
   }
 }

@@ -189,6 +189,28 @@ class MainSpec extends AnyFunSuite {
     assert(snapshot() == before)
   }
 
+  test("Main: a backfill starts no process, whatever the number of " +
+    "branches") {
+    def forks(branches: Int): Seq[String] = {
+      val root = Files.createTempDirectory(s"mainforks$branches").toString
+      val stages = Main.defaultStages(spark, root, 180,
+        (1 to branches).map(b => s"Branch$b"),
+        (_, s0, e0) => workbookBytes(s0, e0))
+      // download, clean, 40-day partitioned silver, mart and read-back
+      val (rows, cmds) = graft.ProcessCount {
+        new PosQueries(spark, root)
+          .getPayments(stages, "2025-01-01", "2025-02-09").count()
+      }
+      assert(rows == 40L * branches)
+      cmds
+    }
+    // once per JVM, Spark's executor metrics start `getconf PAGESIZE`
+    forks(1)
+    val (one, six) = (forks(1), forks(6))
+    assert(one.isEmpty && six.isEmpty, s"1 branch: ${one.size} " +
+      s"processes, 6 branches: ${six.size}, e.g. ${(one ++ six).take(3)}")
+  }
+
   // ------------------------------------------------ forecast CLI
 
   /** 40-day mart CSV fixture (the aggregated_payments_daily shape). */

@@ -1,7 +1,10 @@
 package graft.streaming
 
+import java.nio.file.Files
+
 import graft.TestSession.withConf
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -1394,5 +1397,34 @@ class StreamingSpec extends AnyFunSuite {
       // non-vacuous: the planted replicas cross the tau=0.99 gate
       assert(streamed.values.map(_._3).sum > 0)
     } finally q.stop()
+  }
+
+  test("a checkpointed stateful query's batches start no process") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[EventStreaming.Event]
+    val cp = Files.createTempDirectory("cpforks")
+    var q: StreamingQuery = null
+    try {
+      // offsets, commits and state files go through FileContext
+      val (_, cmds) = graft.ProcessCount {
+        q = input.toDF().groupBy("event_type").count()
+          .writeStream.format("memory").queryName("cpforks")
+          .outputMode("complete")
+          .option("checkpointLocation", cp.toString).start()
+        input.addData(
+          EventStreaming.Event(1, ts("2024-01-01 10:05:00"), 1, "click", 1.0))
+        q.processAllAvailable()
+        input.addData(
+          EventStreaming.Event(2, ts("2024-01-01 10:06:00"), 2, "click", 1.0))
+        q.processAllAvailable()
+      }
+      assert(cmds.isEmpty, cmds)
+      assert(spark.table("cpforks").as[(String, Long)].collect()
+        .toSeq == Seq(("click", 2L)))
+      assert(Files.exists(cp.resolve("commits/1")))
+      assert(Files.exists(cp.resolve("state/0/0/2.delta")))
+    } finally if (q != null) q.stop()
   }
 }
