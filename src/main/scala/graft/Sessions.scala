@@ -52,6 +52,13 @@ object Sessions {
     *   checksum sidecar, partition directory and streaming checkpoint
     *   file cost a fork. Only the `file:` scheme changes; a cluster
     *   filesystem never takes this path.
+    * - `spark.sql.sources.parallelPartitionDiscovery.threshold`: file
+    *   listing stays on the driver. Above the default 32 paths (a
+    *   partitioned store of more than 32 days) Spark lists with a job,
+    *   one task per directory, and each task deserializes the whole
+    *   Hadoop conf. On a `local[N]` master those tasks run in the
+    *   driver's JVM over the same disk, so the job buys nothing.
+    *   Cluster sessions are not built by this recipe.
     * - UI off: these are headless batch entry points.
     */
   def local(cpus: String): SparkSession.Builder =
@@ -60,6 +67,8 @@ object Sessions {
     } ++ Seq(
       "spark.sql.shuffle.partitions" -> cpus,
       "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.sources.parallelPartitionDiscovery.threshold" ->
+        Int.MaxValue.toString,
       "spark.ui.enabled" -> "false")).toMap)
 
   /** The recipe's settings that `getOrCreate` will not re-apply to an

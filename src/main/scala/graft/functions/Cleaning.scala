@@ -44,6 +44,7 @@ object Cleaning {
     *  - plain digits; final fallback comma→dot.
     * Deterministic, null-safe; registered as a UDF because the regex
     * cascade with early exits doesn't decompose into one expression.
+    * Its patterns are compiled once, not per cell.
     */
   val parseMoneyFn: String => Option[Double] = { raw =>
     if (raw == null) None
@@ -55,34 +56,37 @@ object Cleaning {
         if (s.startsWith("(") && s.endsWith(")")) {
           neg = true; s = s.substring(1, s.length - 1).trim
         }
-        s = s.replaceAll("[^\\d,.\\-()\\s]", "")
-        s = s.replaceAll("\\s+", "")
+        s = MoneyJunk.replaceAllIn(s, "")
+        s = Spaces.replaceAllIn(s, "")
         if (s.isEmpty) None
         else {
           def fin(n: String): Option[Double] =
             try { val v = n.toDouble; Some(if (neg) -v else v) }
             catch { case _: NumberFormatException => None }
-          val euGrouped = "\\d{1,3}(?:\\.\\d{3})+,\\d{1,2}".r
-          val usGrouped = "\\d{1,3}(?:,\\d{3})+\\.\\d{1,2}".r
-          val comGroups = "\\d{1,3}(?:,\\d{3})+".r
-          val dotGroups = "\\d{1,3}(?:\\.\\d{3})+".r
-          val plainInt  = "-?\\d+".r
           val hasDot = s.contains('.'); val hasCom = s.contains(',')
-          if (euGrouped.matches(s)) fin(s.replace(".", "").replace(',', '.'))
-          else if (usGrouped.matches(s)) fin(s.replace(",", ""))
+          if (EuGrouped.matches(s)) fin(s.replace(".", "").replace(',', '.'))
+          else if (UsGrouped.matches(s)) fin(s.replace(",", ""))
           else if (hasCom && !hasDot) {
-            if (comGroups.matches(s)) fin(s.replace(",", ""))
+            if (ComGroups.matches(s)) fin(s.replace(",", ""))
             else fin(s.replace(',', '.'))
           } else if (hasDot && !hasCom) {
             if (s.count(_ == '.') == 1) fin(s)
-            else if (dotGroups.matches(s)) fin(s.replace(".", ""))
+            else if (DotGroups.matches(s)) fin(s.replace(".", ""))
             else fin(s)
-          } else if (plainInt.matches(s)) fin(s)
+          } else if (PlainInt.matches(s)) fin(s)
           else fin(s.replace(',', '.'))
         }
       }
     }
   }
+
+  private val MoneyJunk = "[^\\d,.\\-()\\s]".r
+  private val Spaces = "\\s+".r
+  private val EuGrouped = "\\d{1,3}(?:\\.\\d{3})+,\\d{1,2}".r
+  private val UsGrouped = "\\d{1,3}(?:,\\d{3})+\\.\\d{1,2}".r
+  private val ComGroups = "\\d{1,3}(?:,\\d{3})+".r
+  private val DotGroups = "\\d{1,3}(?:\\.\\d{3})+".r
+  private val PlainInt = "-?\\d+".r
 
   private val parseMoneyU = udf(parseMoneyFn)
 
@@ -113,11 +117,10 @@ object Cleaning {
   /** NFD-decompose, strip combining marks. Ref: cleaning_utils.py:261-313. */
   val stripAccentsFn: String => String = { s =>
     if (s == null) null
-    else
-      java.text.Normalizer
-        .normalize(s, java.text.Normalizer.Form.NFD)
-        .replaceAll("\\p{M}+", "")
+    else Marks.replaceAllIn(
+      java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFD), "")
   }
+  private val Marks = "\\p{M}+".r
   private val stripAccentsU = udf(stripAccentsFn)
   def stripAccents(c: Column): Column = stripAccentsU(c)
 

@@ -24,10 +24,7 @@ import org.apache.spark.unsafe.types.UTF8String
 object StripAccentsUtil {
   def strip(s: UTF8String): UTF8String = {
     if (s == null) return null
-    val out = java.text.Normalizer
-      .normalize(s.toString, java.text.Normalizer.Form.NFD)
-      .replaceAll("\\p{M}+", "")
-    UTF8String.fromString(out)
+    UTF8String.fromString(Cleaning.stripAccentsFn(s.toString))
   }
 }
 

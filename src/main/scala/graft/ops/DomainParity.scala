@@ -429,11 +429,11 @@ object DomainParity {
   // ------------------------------------- J3/J4/A2/A3/A4/A5/F17 (e2e)
   /** The flagship payments-daily mart builder, end-to-end: ticket
     * lines synthesized from `lineitem` (several payment rows per
-    * ticket, so countDistinct vs count actually matters) run through
-    * the REAL [[PaymentsDaily.aggregate]] — bucket pivot, tips,
-    * distinct tickets, elimination counts + banker's pct, holiday
-    * flag, multi-way assembly (payments_daily.py:341-469). Totals and
-    * tips are integer-valued doubles so every sum is exact. */
+    * ticket, so tickets vs lines actually matters) run through the
+    * REAL [[PaymentsDaily.aggregate]] — bucket sums, tips, ticket and
+    * elimination counts + banker's pct, holiday flag
+    * (payments_daily.py:341-469). Totals and tips are integer-valued
+    * doubles so every sum is exact. */
   val q37PaymentsMart: Q = (s, d) => {
     import s.implicits._
     val suc = element_at(array(lit("Kavia"), lit("Nativa"), lit("Carreta")),

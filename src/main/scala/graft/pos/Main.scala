@@ -4,6 +4,7 @@ import java.time.LocalDate
 import java.time.format.DateTimeParseException
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DateType
 
 /** CLI entry point for the payments ETL pipeline, mirroring
   * `/root/reference/src/pos_core/etl/build_payments_dataset.py:58-135`
@@ -21,12 +22,13 @@ import org.apache.spark.sql.functions._
   *    transport — the live POS socket stays behind that seam exactly
   *    as in S1–S3 (sandbox constraint; `main` wires a transport that
   *    raises the reference's extraction error).
-  *  - clean: one xlsx staging scan per branch directory
-  *    ([[staging.PaymentsXlsx.clean]]: every workbook's header,
-  *    sucursal and eliminations resolved inside the executor parse) →
-  *    parquet fact store partitioned by operating_date (S11 pruning on
-  *    later reads).
-  *  - aggregate: partition-pruned fact slice → [[PaymentsDaily]] mart.
+  *  - clean: ONE xlsx staging scan over all branch directories
+  *    ([[staging.PaymentsXlsx.cleanBranches]]: header, eliminations and
+  *    sucursal — the directory's name — resolved per workbook in the
+  *    executor parse) → parquet fact store partitioned by
+  *    operating_date (S11 pruning on later reads).
+  *  - aggregate: partition-pruned fact slice, schema from a footer
+  *    ([[graft.sources.ParquetFooter]]) → [[PaymentsDaily]] mart.
   *
   * `run` is side-effect-parameterized (out/err sinks, injected
   * stages) so MainSpec can drive the full CLI on fixtures; `main` is
@@ -102,19 +104,15 @@ object Main {
         if (dirs.isEmpty)
           throw new ExtractionError(
             s"no raw payments exports under $rawDir")
-        // per-branch-directory loop: the directory name is the
-        // sucursal hint; each directory is one executor scan
-        val fact = dirs.map { d =>
-          staging.PaymentsXlsx.clean(spark, d.toString, d.getName,
-            chunkStart = Some(start), chunkEnd = Some(end))
-        }.reduce(_.unionByName(_))
-        fact.write.mode("overwrite")
+        staging.PaymentsXlsx.cleanBranches(spark, dirs.map(_.toString).toSeq,
+          Some(start), Some(end)).write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("operating_date")
           .parquet(s"$root/clean/payments/data")
       },
       aggregate = (start, end) => {
-        val slice = spark.read.parquet(s"$root/clean/payments/data")
+        val slice = graft.sources.ParquetFooter.read(spark,
+            s"$root/clean/payments/data", "operating_date" -> DateType)
           .filter(col("operating_date").between(
             lit(start).cast("date"), lit(end).cast("date")))
         PaymentsDaily.aggregate(slice)

@@ -8,17 +8,18 @@ import org.apache.spark.sql.functions._
   * flagship mart, `/root/reference/src/pos_core/etl/marts/
   * payments_daily.py:314-496`), Spark-first:
   *
-  *  - one shuffle keyed on (sucursal, operating_date) feeds the bucket
-  *    pivot AND the tips / ticket-count / elimination aggregates (they
-  *    share the exchange);
-  *  - the 9-bucket pivot passes its value list explicitly (no
-  *    discovery pass);
-  *  - the tip-reconciliation check is an ACTION before the mart is
-  *    returned — Spark is lazy, fail-fast semantics need the count
-  *    forced here (SURVEY §7.4 risk 4);
-  *  - holidays are a broadcast join of a driver-provided set (the
-  *    reference fetches them from an HTTP API and degrades to
-  *    all-false on failure — provider is pluggable here).
+  *  - ONE shuffle of the lines, by (sucursal, operating_date), feeds
+  *    a two-level aggregate — per (day key, ticket), then per day key:
+  *    9 bucket sums, tips, expected day tips, ticket and eliminated-
+  *    ticket counts (no pivot, no distinct counts); money sums in
+  *    exact decimal(18,2) cents, so row order cannot matter;
+  *  - the day rows are materialized once: the tip-reconciliation check
+  *    reads them and throws BEFORE anything is written (Spark is lazy,
+  *    SURVEY §7.4 risk 4), and the mart is built from the same rows;
+  *  - the grain is bounded by branches × days, so the mart is sorted
+  *    in one partition (no range-sampling job) and writes one file;
+  *  - holidays are a driver-provided literal set (the reference
+  *    fetches them over HTTP, all-false on failure).
   */
 object PaymentsDaily {
 
@@ -54,6 +55,9 @@ object PaymentsDaily {
   private val Required =
     Seq("sucursal", "operating_date", "payment_method", "ticket_total")
 
+  private def tipGap(sum: Column, expected: Column, tolerance: Double) =
+    abs(coalesce(sum, lit(0.0)) - coalesce(expected, lit(0.0))) > tolerance
+
   /** J2/Q6 tip-reconciliation report: per (sucursal, operating_date),
     * per-ticket tips summed vs the embedded day total; rows whose gap
     * exceeds the tolerance (payments_daily.py:341-397). `aggregate`
@@ -65,12 +69,13 @@ object PaymentsDaily {
     payments.groupBy($"sucursal", $"operating_date")
       .agg(sum($"ticket_tip").as("tips_sum"),
         max($"total_day_tips").as("tips_expected"))
-      .filter(abs(coalesce($"tips_sum", lit(0.0)) -
-        coalesce($"tips_expected", lit(0.0))) > tipTolerance)
+      .filter(tipGap($"tips_sum", $"tips_expected", tipTolerance))
   }
 
   /** Build the daily mart. Throws [[DataQualityError]] on missing
-    * columns or tip-reconciliation failure (payments_daily.py:341-397). */
+    * columns or tip-reconciliation failure (payments_daily.py:341-397).
+    * A day key with a null part keeps its bucket sums but reports no
+    * tips and no tickets, as the reference's key join does. */
   def aggregate(payments: DataFrame,
                 holidays: Set[java.time.LocalDate] = Set.empty,
                 tipTolerance: Double = 0.05): DataFrame = {
@@ -82,17 +87,42 @@ object PaymentsDaily {
 
     val spark = payments.sparkSession
     import spark.implicits._
-    val hasTip = cols("ticket_tip")
-    val hasDayTips = cols("total_day_tips")
     val hasOrder = cols("order_index")
-    val hasElim = cols("elimination_present")
-
+    // absent optional columns read as no tips and no eliminations
+    val lines = payments.withColumns(Map(
+      "ticket_tip" -> lit(null).cast("double"),
+      "total_day_tips" -> lit(null).cast("double"),
+      "elimination_present" -> lit(false)).filter(kv => !cols(kv._1)))
     val key = Seq($"sucursal", $"operating_date")
+    // money as exact cents: the decimal(18,2) value's unscaled long,
+    // summed as a long (a decimal sum over 18 digits boxes each update)
+    def cents(c: Column) = sum((c.cast("decimal(18,2)") * 100).cast("long"))
 
-    // Q6/J2: tip reconciliation — hard abort BEFORE any mart math
-    if (hasTip && hasDayTips) {
-      val viol = tipViolations(payments, tipTolerance)
-      val sample = viol.limit(10).collect()
+    // A1-A5 on one exchange: per (day key, ticket), then per day key;
+    // without order_index every line is a ticket
+    val daily = lines.repartition(key: _*)
+      .withColumn("bucket", bucketForPaymentMethod($"payment_method"))
+      .groupBy((if (hasOrder) key :+ $"order_index" else key): _*)
+      .agg(count(lit(1)).as("lines"), (BucketCols.map(b =>
+        cents(when($"bucket" === b, $"ticket_total")).as(b)) ++ Seq(
+        cents($"ticket_tip").as("tips"),
+        max($"total_day_tips").as("tips_expected"),
+        sum(when($"elimination_present", 1L).otherwise(0L)).as("elim"))): _*)
+      .groupBy(key: _*)
+      .agg(sum("tips").as("tips"), (BucketCols.map(b => sum(b).as(b)) ++ Seq(
+        max("tips_expected").as("tips_expected"),
+        (if (hasOrder) count($"order_index") else sum("lines"))
+          .as("num_tickets"),
+        (if (hasOrder) count(when($"elim" > 0, $"order_index"))
+          else sum("elim")).as("tickets_with_eliminations"))): _*)
+      .localCheckpoint()
+
+    // Q6/J2: tip reconciliation — hard abort BEFORE anything is written
+    if (cols("ticket_tip") && cols("total_day_tips")) {
+      val sample = daily.select(key :+ ($"tips" / 100.0).as("tips") :+
+          $"tips_expected": _*)
+        .filter(tipGap($"tips", $"tips_expected", tipTolerance))
+        .limit(10).collect()
       if (sample.nonEmpty)
         throw new DataQualityError(
           "tip reconciliation failed for " +
@@ -100,52 +130,25 @@ object PaymentsDaily {
               s"sum=${r.get(2)} expected=${r.get(3)})").mkString("; "))
     }
 
-    // A1+A2: bucket classify + fixed-domain pivot, fill 0
-    val buckets = payments
-      .withColumn("bucket", bucketForPaymentMethod($"payment_method"))
-      .groupBy(key: _*)
-      .pivot("bucket", BucketCols)
-      .sum("ticket_total")
-      .na.fill(0.0, BucketCols)
-
-    // A3/A4/A5 in ONE aggregate on the same key (single shuffle)
-    val numTickets =
-      if (hasOrder) countDistinct($"order_index")
-      else count(lit(1))
-    val elimTickets =
-      if (hasOrder && hasElim)
-        countDistinct(when($"elimination_present", $"order_index"))
-      else if (hasElim) sum(when($"elimination_present", 1L).otherwise(0L))
-      else lit(0L)
-    val tipsAgg =
-      if (hasTip) sum(coalesce($"ticket_tip", lit(0.0))) else lit(0.0)
-    val metrics = payments.groupBy(key: _*)
-      .agg(tipsAgg.as("propinas"),
-        numTickets.as("num_tickets"),
-        elimTickets.as("tickets_with_eliminations"))
-
     // J3 assembly + F17 pct (banker's rounding like the reference's
     // pandas round; zero tickets → 0, payments_daily.py:464-469)
-    val holidaysDf = spark.createDataset(holidays.map(_.toString).toSeq)
-      .toDF("h_date").select($"h_date".cast("date"))
-    val assembled = buckets
-      .join(metrics, Seq("sucursal", "operating_date"), "left")
-      .na.fill(0.0, Seq("propinas"))
-      .na.fill(0L, Seq("num_tickets", "tickets_with_eliminations"))
+    val nullKey = key.map(_.isNull).reduce(_ || _)
+    def keyed(c: Column, zero: Column) =
+      when(nullKey, zero).otherwise(coalesce(c, zero))
+    daily
+      .select(($"sucursal" +: $"operating_date".as("fecha") +:
+        BucketCols.map(b => coalesce(col(b) / 100.0, lit(0.0)).as(b)) :+
+        keyed($"tips" / 100.0, lit(0.0)).as("propinas") :+
+        keyed($"num_tickets", lit(0L)).as("num_tickets") :+
+        keyed($"tickets_with_eliminations", lit(0L))
+          .as("tickets_with_eliminations")): _*)
       .withColumn("pct_tickets_with_eliminations",
         when($"num_tickets" === 0, lit(0.0))
           .otherwise(bround($"tickets_with_eliminations" * 100.0 /
             $"num_tickets", 2)))
-      .join(broadcast(holidaysDf),
-        $"operating_date" === $"h_date", "left")
-      .withColumn("is_national_holiday", $"h_date".isNotNull)
-      .drop("h_date")
-
-    assembled
-      .withColumnRenamed("operating_date", "fecha")
-      .select(($"sucursal" +: $"fecha" +: BucketCols.map(col) :+
-        $"propinas" :+ $"num_tickets" :+ $"tickets_with_eliminations" :+
-        $"pct_tickets_with_eliminations" :+ $"is_national_holiday"): _*)
-      .orderBy($"sucursal", $"fecha")
+      .withColumn("is_national_holiday", coalesce($"fecha".isin(
+        holidays.toSeq.sortBy(_.toEpochDay): _*), lit(false)))
+      .coalesce(1)
+      .sortWithinPartitions($"sucursal", $"fecha")
   }
 }

@@ -78,13 +78,12 @@ final class PosQueries(spark: SparkSession, rootDir: String) {
     val proc = new StageManifests(stageDir("proc", domain))
     val martPath = s"${stageDir("proc", domain)}/$martName"
 
-    def runAggregate(force: Boolean): DataFrame = {
+    def runAggregate(force: Boolean): DataFrame =
       proc.runStage(start, end, aggVersion, Nil, force) {
         val mart = stages.aggregate(start, end)
         mart.write.mode("overwrite").parquet(martPath)
-      }
-      spark.read.parquet(martPath)
-    }
+        mart.schema
+      }.fold(spark.read)(spark.read.schema).parquet(martPath)
 
     if (refresh) {
       raw.runStage(start, end, "raw_v1", Nil, force = true) {
@@ -117,7 +116,7 @@ final class PosQueries(spark: SparkSession, rootDir: String) {
 
     // all up-to-date: serve the stored mart; metadata-ok-but-missing
     // falls back to a forced re-aggregate (queries.py:137-142)
-    try spark.read.parquet(martPath)
+    try graft.sources.ParquetFooter.read(spark, martPath)
     catch {
       case _: org.apache.spark.sql.AnalysisException =>
         runAggregate(force = true)

@@ -2,6 +2,7 @@ package graft.pos.staging
 
 import graft.pos.DataQualityError
 import graft.sources.Xlsx
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -27,19 +28,22 @@ private[staging] final case class Staged(
   * runs the same few Spark jobs whatever the number of workbooks, and
   * parses each workbook once.
   *
-  * The output schema comes from the first workbook (by name), read on
-  * the driver through the Hadoop FS; a workbook whose logical columns
-  * differ fails the scan with a [[DataQualityError]] that names it.
+  * The output schema comes from the first workbook (by name, in the
+  * first directory that has one), read on the driver through the
+  * Hadoop FS; a workbook whose logical columns differ fails the scan
+  * with a [[DataQualityError]] that names it. `stage` gets each
+  * workbook's path with its parse.
   */
 private[staging] object WorkbookScan {
 
-  def apply(spark: SparkSession, path: String, extra: Seq[StructField])(
-      stage: Xlsx.Workbook => Staged): DataFrame = {
-    val (first, wb) = Xlsx.firstWorkbook(spark, path)
+  def apply(spark: SparkSession, paths: Seq[String],
+            extra: Seq[StructField])(
+      stage: (String, Xlsx.Workbook) => Staged): DataFrame = {
+    val (first, wb) = Xlsx.firstWorkbook(spark, paths)
     val columns = resolve(first, wb, stage).layout.names
     val schema = StructType(
       ("_file" +: columns).map(StructField(_, StringType)) ++ extra)
-    Xlsx.scanWorkbooks(spark, path, schema) { (file, wb) =>
+    Xlsx.scanWorkbooks(spark, paths, schema) { (file, wb) =>
       val staged = resolve(file, wb, stage)
       val named = staged.layout.named.toMap
       if (named.keySet != columns.toSet)
@@ -56,8 +60,8 @@ private[staging] object WorkbookScan {
   /** A workbook's layout; a workbook that has none (no such sheet,
     * no header row) fails with a [[DataQualityError]] naming it. */
   private def resolve(file: String, wb: Xlsx.Workbook,
-                      stage: Xlsx.Workbook => Staged): Staged =
-    try stage(wb)
+                      stage: (String, Xlsx.Workbook) => Staged): Staged =
+    try stage(file, wb)
     catch {
       case e: Exception => throw new DataQualityError(
         s"workbook $file: ${e.getMessage}").initCause(e)
@@ -76,12 +80,14 @@ private[staging] object WorkbookScan {
 object PaymentsXlsx {
 
   /** Extra scan columns: eliminations rows ride in the same scan as
-    * body rows, flagged by `_elim`. */
+    * body rows, flagged by `_elim`; `_hint` is the workbook's
+    * normalized sucursal hint. */
   private val Extra = Seq(
     StructField("_elim", BooleanType, nullable = false),
     StructField(PaymentsCleaner.Candidates, ArrayType(StringType)),
     StructField("_efecha", StringType),
-    StructField("_eorden", StringType))
+    StructField("_eorden", StringType),
+    StructField("_hint", StringType, nullable = false))
 
   /** Clean every payments workbook under `path`. The eliminations
     * join and the modal-sucursal fallback are scoped by `_file`, so
@@ -91,23 +97,46 @@ object PaymentsXlsx {
             chunkStart: Option[String] = None,
             chunkEnd: Option[String] = None): DataFrame = {
     val hint = Headers.normalizeBranchName(sucursalHint)
-    val fallback = hint.isEmpty
+    scan(spark, Seq(path), _ => hint, hint.isEmpty, chunkStart, chunkEnd)
+  }
+
+  /** Clean every payments workbook under the branch directories `dirs`
+    * in one scan, each workbook with its directory's name as the
+    * sucursal hint. */
+  def cleanBranches(spark: SparkSession, dirs: Seq[String],
+                    chunkStart: Option[String] = None,
+                    chunkEnd: Option[String] = None): DataFrame = {
+    def hint(dir: Path) = Headers.normalizeBranchName(dir.getName)
+    scan(spark, dirs, file => hint(new Path(file).getParent),
+      dirs.exists(d => hint(new Path(d)).isEmpty), chunkStart, chunkEnd)
+  }
+
+  /** `hintOf` maps a workbook's path to its normalized hint; a
+    * workbook without one falls back to its modal cashier, and
+    * `fallback` says whether any workbook may. */
+  private def scan(spark: SparkSession, paths: Seq[String],
+                   hintOf: String => String, fallback: Boolean,
+                   chunkStart: Option[String],
+                   chunkEnd: Option[String]): DataFrame = {
     // body, eliminations and votes all read this one parse
-    val scanned = WorkbookScan(spark, path, Extra)(stage(_, fallback))
-      .localCheckpoint(eager = false)
+    val scanned = WorkbookScan(spark, paths, Extra) { (file, wb) =>
+      stage(wb, hintOf(file))
+    }.localCheckpoint(eager = false)
     val names = scanned.columns.toSeq.filterNot(_.startsWith("_"))
     val body = scanned.filter(!col("_elim"))
-    val projected = body.select(("_file" +: names).map(col): _*)
+    val projected = body.select(("_file" +: "_hint" +: names).map(col): _*)
     val elim = scanned.filter(col("_elim")).select(col("_file"),
       col("_efecha").as("Fecha de operación"), col("_eorden").as("Orden"))
+    val hint = col("_hint")
     val (withVotes, sucursal) =
-      if (!fallback) (projected, lit(hint))
+      if (!fallback) (projected, hint)
       else {
         val modal = PaymentsCleaner.modalSucursal(body.select(col("_file"),
           col(names.head).as(PaymentsCleaner.FirstCell),
           col(PaymentsCleaner.Candidates)), Seq("_file"))
         (projected.join(broadcast(modal), Seq("_file"), "left"),
-          coalesce(col(PaymentsCleaner.Sucursal), lit("")))
+          when(hint =!= "", hint)
+            .otherwise(coalesce(col(PaymentsCleaner.Sucursal), lit(""))))
       }
     // typed rows are checkpointed too: above the barrier, the chunk
     // filter and the join read the typed columns, where Catalyst would
@@ -116,19 +145,19 @@ object PaymentsXlsx {
       .localCheckpoint(eager = false)
     PaymentsCleaner.flagBody(typed, names, sucursal, Some(elim),
       Seq("_file"), chunkStart, chunkEnd)
-      .drop("_file", PaymentsCleaner.Sucursal)
+      .drop("_file", "_hint", PaymentsCleaner.Sucursal)
   }
 
-  private def stage(wb: Xlsx.Workbook, fallback: Boolean): Staged = {
+  private def stage(wb: Xlsx.Workbook, hint: String): Staged = {
     val grid = wb.gridLike("Detalle por forma de pago")
     val lay = PaymentsCleaner.layout(WorkbookScan.head(grid, 50))
     val elim = eliminations(wb)
     Staged(grid, lay,
       r => Seq(false,
-        if (fallback) lay.candidates.map(r.lift(_).orNull) else null,
-        null, null),
+        if (hint.isEmpty) lay.candidates.map(r.lift(_).orNull) else null,
+        null, null, hint),
       n => elim.iterator.map { case (fecha, orden) =>
-        Seq.fill(n)(null) ++ Seq(true, null, fecha, orden) })
+        Seq.fill(n)(null) ++ Seq(true, null, fecha, orden, hint) })
   }
 
   /** One workbook's "Pagos Eliminados" sheet → raw (Fecha de
@@ -165,7 +194,7 @@ object SalesXlsx {
 
   def clean(spark: SparkSession, path: String,
             sucursalHint: Option[String] = None): DataFrame = {
-    val scanned = WorkbookScan(spark, path, Extra) { wb =>
+    val scanned = WorkbookScan(spark, Seq(path), Extra) { (_, wb) =>
       val grid = wb.gridLike("Detalle de Ventas")
       val lay = SalesCleaner.layout(WorkbookScan.head(grid, 50),
         sucursalHint)
@@ -182,7 +211,7 @@ object SalesXlsx {
   * than the other cleaners (transfer_cleaner.py:143-149). */
 object TransfersXlsx {
   def clean(spark: SparkSession, path: String): DataFrame = {
-    val scanned = WorkbookScan(spark, path, Nil) { wb =>
+    val scanned = WorkbookScan(spark, Seq(path), Nil) { (_, wb) =>
       val grid = wb.grid(
         if (wb.sheetNames.contains("Transferencias")) "Transferencias"
         else wb.sheetNames.head)

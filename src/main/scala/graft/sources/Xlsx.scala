@@ -539,25 +539,30 @@ object Xlsx {
     * reads its bytes, and `rows` turns the parsed workbook into output
     * rows there. Files parallelize across the cluster, and no
     * workbook is ever collected to the driver. */
-  def scanWorkbooks(spark: SparkSession, path: String, schema: StructType)(
+  def scanWorkbooks(spark: SparkSession, paths: Seq[String],
+                    schema: StructType)(
       rows: (String, Workbook) => Iterator[Row]): DataFrame = {
     import spark.implicits._
     spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.xlsx")
-      .load(path)
+      .load(paths: _*)
       .select($"path", $"content")
       .as[(String, Array[Byte])]
       .flatMap { case (file, bytes) => rows(file, read(bytes)) }(
         Encoders.row(schema))
   }
 
-  /** The first .xlsx under `path` (by name), parsed on the driver
-    * through the Hadoop FS — no Spark job — for callers that fix a
-    * schema from it, as [[XlsxDataSource]]'s inference does. */
-  def firstWorkbook(spark: SparkSession, path: String): (String, Workbook) = {
+  /** The first .xlsx under the first of `paths` that has one (by
+    * name), parsed on the driver through the Hadoop FS — no Spark job —
+    * for callers that fix a schema from it, as [[XlsxDataSource]]'s
+    * inference does. */
+  def firstWorkbook(spark: SparkSession,
+                    paths: Seq[String]): (String, Workbook) = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val file = XlsxDataSource.listXlsx(path, conf).headOption.getOrElse(
-      throw new IllegalArgumentException(s"no .xlsx workbooks under $path"))
+    val file = paths.iterator
+      .flatMap(XlsxDataSource.listXlsx(_, conf).headOption).nextOption()
+      .getOrElse(throw new IllegalArgumentException(
+        s"no .xlsx workbooks under ${paths.mkString(", ")}"))
     file -> read(XlsxDataSource.readBytes(file, conf))
   }
 
@@ -579,7 +584,7 @@ object Xlsx {
   def readGrid(spark: SparkSession, path: String,
                sheetTarget: String): DataFrame = {
     import spark.implicits._
-    val grids = scanWorkbooks(spark, path, GridCells) { (file, wb) =>
+    val grids = scanWorkbooks(spark, Seq(path), GridCells) { (file, wb) =>
       wb.gridLike(sheetTarget).iterator.zipWithIndex.map {
         case (cells, i) => Row(file, i.toLong, cells)
       }

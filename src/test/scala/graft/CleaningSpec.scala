@@ -54,4 +54,78 @@ class CleaningSpec extends AnyFunSuite {
       "Cafe Uberraschung anejo")
     assert(Cleaning.stripAccentsFn(null) == null)
   }
+
+  test("string kernels with precompiled patterns answer as the " +
+    "per-call originals") {
+    val grouped = Seq("1.234,56", "1,234.56", "12.345.678,9", "1,234,567.01",
+      "1.234.567", "1,234,567", "1.234", "1,234", "12,34", "1.23.45",
+      "1,2,3", "-12", "-12,5", "- 12", "12-", "0", "00012,30", ".5", ",5",
+      "5.", "5,")
+    val wrapped = grouped.flatMap(v => Seq(v, s"($v)", s" ( $v ) ",
+      s"$$$v", s"MX$$ $v", s"$v MXN", "\u00A0" + v + "\u202F",
+      "\t" + v + "\r\n", v.replace(",", ", "), s"abc$v", s"($v"))
+    def bits(d: Option[Double]) = d.map(java.lang.Double.doubleToLongBits)
+    val corpus = wrapped ++ Seq("", " ", "\u00A0", "()", "( )", "abc", "$",
+      "--", "(-)", "1e3", "NaN", "Infinity", "٣٤", "１２３", null)
+    for (v <- corpus) {
+      assert(bits(Cleaning.parseMoneyFn(v)) ==
+        bits(FrozenKernels.parseMoney(v)), s"parseMoney(code points " +
+        s"${Option(v).map(_.codePoints.toArray.mkString(","))})")
+      assert(Cleaning.stripAccentsFn(v) == FrozenKernels.stripAccents(v))
+      val u = Option(v).map(org.apache.spark.unsafe.types.UTF8String.fromString)
+        .orNull
+      assert(Option(graft.functions.StripAccentsUtil.strip(u)).map(_.toString)
+        .orNull == FrozenKernels.stripAccents(v))
+    }
+    for (v <- Seq("Café", "ÁÉÍÓÚ ñ ü", "a\u0301\u0327b", "Ω≈ç√", "Żółć"))
+      assert(Cleaning.stripAccentsFn(v) == FrozenKernels.stripAccents(v))
+  }
+}
+
+/** The money parser and accent stripper as they were when they
+  * compiled their patterns on every call, frozen as the reference
+  * answer for [[Cleaning.parseMoneyFn]] and [[Cleaning.stripAccentsFn]]. */
+private object FrozenKernels {
+  def parseMoney(raw: String): Option[Double] =
+    if (raw == null) None
+    else {
+      var s = raw.trim
+      if (s.isEmpty) None
+      else {
+        var neg = false
+        if (s.startsWith("(") && s.endsWith(")")) {
+          neg = true; s = s.substring(1, s.length - 1).trim
+        }
+        s = s.replaceAll("[^\\d,.\\-()\\s]", "")
+        s = s.replaceAll("\\s+", "")
+        if (s.isEmpty) None
+        else {
+          def fin(n: String): Option[Double] =
+            try { val v = n.toDouble; Some(if (neg) -v else v) }
+            catch { case _: NumberFormatException => None }
+          val euGrouped = "\\d{1,3}(?:\\.\\d{3})+,\\d{1,2}".r
+          val usGrouped = "\\d{1,3}(?:,\\d{3})+\\.\\d{1,2}".r
+          val comGroups = "\\d{1,3}(?:,\\d{3})+".r
+          val dotGroups = "\\d{1,3}(?:\\.\\d{3})+".r
+          val plainInt  = "-?\\d+".r
+          val hasDot = s.contains('.'); val hasCom = s.contains(',')
+          if (euGrouped.matches(s)) fin(s.replace(".", "").replace(',', '.'))
+          else if (usGrouped.matches(s)) fin(s.replace(",", ""))
+          else if (hasCom && !hasDot) {
+            if (comGroups.matches(s)) fin(s.replace(",", ""))
+            else fin(s.replace(',', '.'))
+          } else if (hasDot && !hasCom) {
+            if (s.count(_ == '.') == 1) fin(s)
+            else if (dotGroups.matches(s)) fin(s.replace(".", ""))
+            else fin(s)
+          } else if (plainInt.matches(s)) fin(s)
+          else fin(s.replace(',', '.'))
+        }
+      }
+    }
+
+  def stripAccents(s: String): String =
+    if (s == null) null
+    else java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFD)
+      .replaceAll("\\p{M}+", "")
 }

@@ -28,7 +28,7 @@ class MainSpec extends AnyFunSuite {
     val header = Seq("Fecha", "Orden", "Forma de pago", "Propina",
       "Total", "Propina", "Total")
     val base = LocalDate.parse("2025-01-01")
-    val dataRows = (0 until 40).flatMap { i =>
+    val dataRows = (0 until 42).flatMap { i =>
       val day = base.plusDays(i.toLong)
       val d = day.toString
       val amount = 100.0 + 10.0 * (i % 7)
@@ -209,6 +209,35 @@ class MainSpec extends AnyFunSuite {
     val (one, six) = (forks(1), forks(6))
     assert(one.isEmpty && six.isEmpty, s"1 branch: ${one.size} " +
       s"processes, 6 branches: ${six.size}, e.g. ${(one ++ six).take(3)}")
+  }
+
+  test("Main: a backfill and a refresh run at most 10 jobs each, " +
+    "whatever the number of branches and days") {
+    def jobs(branches: Int, days: Int): (Int, Int) = {
+      val root = Files.createTempDirectory(s"mainjobs$branches").toString
+      val stages = Main.defaultStages(spark, root, 180,
+        (1 to branches).map(b => s"Branch$b"),
+        (_, s0, e0) => workbookBytes(s0, e0))
+      val start = "2025-01-01"
+      val end = LocalDate.parse(start).plusDays(days - 1L).toString
+      val q = new PosQueries(spark, root)
+      def call(refresh: Boolean) = {
+        val (rows, n) = graft.JobCount(spark, s"cascade-$branches-$days") {
+          q.getPayments(stages, start, end, refresh).collect()
+        }
+        assert(rows.length == branches * days)
+        n
+      }
+      (call(refresh = false), call(refresh = true))
+    }
+    val counts = Seq((1, 7), (6, 7), (1, 42), (6, 42))
+      .map(bd => bd -> jobs(bd._1, bd._2)).toMap
+    val shown = counts.map { case ((b, d), (bf, rf)) =>
+      s"$b branches x $d days: backfill $bf, refresh $rf" }.mkString("; ")
+    info(shown)
+    assert(counts.values.toSet.size == 1, shown)
+    assert(counts.values.forall { case (bf, rf) => bf <= 10 && rf <= 10 },
+      shown)
   }
 
   // ------------------------------------------------ forecast CLI

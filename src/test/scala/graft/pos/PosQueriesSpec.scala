@@ -1,6 +1,7 @@
 package graft.pos
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -142,6 +143,55 @@ class PosQueriesSpec extends AnyFunSuite {
     val fresh = q.getPayments(st, "2025-01-01", "2025-01-31",
       refresh = true)
     assert(fresh.select("agg_marker").collect()(0).getLong(0) == 3L)
+  }
+
+  test("a failed tip check leaves the stored mart untouched and the " +
+    "aggregate manifest failed") {
+    val root = Files.createTempDirectory("posq").toString
+    val s = spark
+    import s.implicits._
+    val (start, end) = ("2025-01-01", "2025-01-10")
+    /** A silver store of 10 days: two tickets a day, whose tips sum to
+      * the embedded day total except on `badDay`, off by 1000. */
+    def silver(badDay: Option[String]): Unit =
+      (0 until 10).flatMap { i =>
+        val d = java.time.LocalDate.parse(start).plusDays(i.toLong).toString
+        val dayTips = if (badDay.contains(d)) 1012.0 else 12.0
+        Seq(("Kavia", d, 2L * i, "Efectivo", 100.0, 7.0, dayTips, false),
+          ("Kavia", d, 2L * i + 1, "Tarjeta Crédito", 50.0, 5.0, dayTips,
+            false))
+      }.toDF("sucursal", "operating_date", "order_index", "payment_method",
+        "ticket_total", "ticket_tip", "total_day_tips",
+        "elimination_present")
+        .withColumn("operating_date", $"operating_date".cast("date"))
+        .write.mode("overwrite").partitionBy("operating_date")
+        .parquet(s"$root/clean/payments/data")
+    val stages = Main.defaultStages(spark, root, 180, Nil,
+      (_, _, _) => Array.empty[Byte]).copy(
+      download = (_, _) => (), clean = (_, _) => ())
+    val q = new PosQueries(spark, root)
+    silver(None)
+    assert(q.getPayments(stages, start, end).count() == 10)
+    val mart = java.nio.file.Paths.get(
+      s"$root/proc/payments/aggregated_payments_daily")
+    def snapshot(): Map[String, (Long, Seq[Byte])] = {
+      val files = Files.list(mart)
+      try files.iterator().asScala.map { p =>
+        p.getFileName.toString ->
+          (Files.getLastModifiedTime(p).toMillis, Files.readAllBytes(p).toSeq)
+      }.toMap
+      finally files.close()
+    }
+    val before = snapshot()
+    silver(Some("2025-01-07"))
+    val e = intercept[DataQualityError](
+      q.getPayments(stages, start, end, refresh = true))
+    assert(e.getMessage.contains("tip reconciliation failed"), e)
+    assert(e.getMessage.contains("2025-01-07"), e)
+    assert(!e.getMessage.contains("2025-01-06"), e)
+    assert(new StageManifests(s"$root/proc/payments").read(start, end)
+      .map(_.status).contains("failed"))
+    assert(snapshot() == before)
   }
 
   test("getPaymentsForecast wraps a malformed asOf in ConfigError") {

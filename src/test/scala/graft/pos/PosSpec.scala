@@ -1,7 +1,7 @@
 package graft.pos
 
 import java.time.LocalDate
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** POS-domain mart/QA/forecast behavior on the FIXTURES.md scenarios —
@@ -84,6 +84,136 @@ class PosSpec extends AnyFunSuite {
       "ticket_total", "ticket_tip", "total_day_tips")
     val e = intercept[DataQualityError] { PaymentsDaily.aggregate(bad) }
     assert(e.getMessage.contains("tip reconciliation"))
+  }
+
+  /** One day key of each awkward kind: a null sucursal, a null
+    * operating_date, null order_index lines, a split ticket paid with
+    * two methods, eliminated tickets, unknown methods (ingreso_otros),
+    * null ticket_tip and elimination flags, and a holiday. Amounts are
+    * sums of halves and quarters, exact in binary in any order. */
+  private def edgeFixture: DataFrame = {
+    val s = spark
+    import s.implicits._
+    def line(suc: String, day: String, order: java.lang.Long,
+             method: String, total: Double, tip: java.lang.Double,
+             dayTips: Double, elim: java.lang.Boolean) =
+      (suc, day, order, method, total, tip, dayTips, elim)
+    Seq(
+      line("Kavia", "2025-01-15", 1001L, "Efectivo", 100.25, 10.0, 25.0, false),
+      line("Kavia", "2025-01-15", 1001L, "Tarjeta Crédito", 50.5, 5.0, 25.0, false),
+      line("Kavia", "2025-01-15", 1002L, "Tarjeta Débito", 80.75, 10.0, 25.0, true),
+      line("Kavia", "2025-01-15", 1003L, "Vales", 20.0, 0.0, 25.0, false),
+      line("Kavia", "2025-01-15", null, "Efectivo", 5.0, null, 25.0, false),
+      line("Kavia", "2025-01-16", 1004L, "UberEats", 60.0, 0.0, 2.0, false),
+      line("Kavia", "2025-01-16", 1005L, "AMEX", 30.0, 2.0, 2.0, false),
+      line("Kavia", "2025-01-16", 1005L, "Efectivo", 10.0, 0.0, 2.0, true),
+      line(null, "2025-01-15", 3001L, "Efectivo", 40.0, 4.0, 4.0, false),
+      line(null, "2025-01-15", 3002L, "", 8.0, 0.0, 4.0, true),
+      line("Nativa", null, 2001L, "RAPPI pago", 15.0, 1.0, 1.0, false),
+      line("Nativa", "2025-01-15", 2002L, "Transferencia", 30.0, null, 0.5, null),
+      line("Nativa", "2025-01-15", 2003L, "Subsidio TEC", 12.5, 0.5, 0.5, false),
+      line("Nativa", "2025-01-15", null, "Cheque", 7.25, 0.0, 0.5, true)
+    ).toDF("sucursal", "operating_date", "order_index", "payment_method",
+      "ticket_total", "ticket_tip", "total_day_tips", "elimination_present")
+      .withColumn("operating_date",
+        org.apache.spark.sql.functions.col("operating_date").cast("date"))
+  }
+
+  test("payments daily mart: null keys, null order_index, split and " +
+    "eliminated tickets, unknown methods and a holiday") {
+    val mart = PaymentsDaily.aggregate(edgeFixture,
+      holidays = Set(LocalDate.parse("2025-01-16")))
+    def day(d: String) = java.sql.Date.valueOf(d)
+    // the rows PaymentsDaily emitted when it pivoted the buckets and
+    // counted distinct tickets, before the one-exchange aggregate
+    val want = Seq(
+      Row(null, day("2025-01-15"), 40.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0,
+        8.0, 0.0, 0L, 0L, 0.0, false),
+      Row("Kavia", day("2025-01-15"), 105.25, 50.5, 80.75, 0.0, 0.0, 0.0,
+        0.0, 0.0, 20.0, 25.0, 3L, 1L, 33.33, false),
+      Row("Kavia", day("2025-01-16"), 10.0, 0.0, 0.0, 30.0, 60.0, 0.0, 0.0,
+        0.0, 0.0, 2.0, 2L, 1L, 50.0, true),
+      Row("Nativa", null, 0.0, 0.0, 0.0, 0.0, 0.0, 15.0, 0.0, 0.0, 0.0, 0.0,
+        0L, 0L, 0.0, false),
+      Row("Nativa", day("2025-01-15"), 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 30.0,
+        12.5, 7.25, 0.5, 2L, 0L, 0.0, false))
+    assert(mart.columns.toSeq == Seq("sucursal", "fecha") ++
+      PaymentsDaily.BucketCols ++ Seq("propinas", "num_tickets",
+        "tickets_with_eliminations", "pct_tickets_with_eliminations",
+        "is_national_holiday"))
+    assert(mart.collect().toSeq == want)
+  }
+
+  /** Ticket lines of `branches` branches over 30 days, cent amounts
+    * that a double sum would round differently in different orders. */
+  private def centFact(branches: Int): DataFrame = {
+    val s = spark
+    import s.implicits._
+    val methods = Seq("Efectivo", "Tarjeta Crédito", "Tarjeta Débito", "AMEX")
+    val rows = for (b <- 0 until branches; d <- 0 until 30; k <- 0 until 9)
+      yield {
+        val c = (b * 7919 + d * 104729 + k * 1299709) % 1000003
+        (s"B$b", LocalDate.parse("2025-01-01").plusDays(d.toLong).toString,
+          (b * 1000 + d * 10 + k / 2).toLong, methods(c % methods.size),
+          c / 100.0 + 0.01, (c % 997) / 100.0, c % 13 == 0)
+      }
+    rows.toDF("sucursal", "operating_date", "order_index", "payment_method",
+      "ticket_total", "ticket_tip", "elimination_present")
+      .withColumn("operating_date", $"operating_date".cast("date"))
+  }
+
+  test("payments daily mart: the same bits whatever the fact's row order") {
+    val fact = centFact(6)
+    val reversed = spark.createDataFrame(
+      fact.collect().reverse.toSeq.asJava, fact.schema).coalesce(1)
+    val a = PaymentsDaily.aggregate(fact.repartition(8)).collect().toSeq
+    assert(a.size == 6 * 30)
+    assert(a == PaymentsDaily.aggregate(reversed).collect().toSeq)
+  }
+
+  test("payments daily mart: stored as one file, read back in " +
+    "(sucursal, fecha) order") {
+    val dir = java.nio.file.Files.createTempDirectory("pos_daily")
+    PaymentsDaily.aggregate(centFact(6).repartition(8))
+      .write.mode("overwrite").parquet(dir.toString)
+    val parts = dir.toFile.listFiles().map(_.getName)
+      .filter(_.endsWith(".parquet"))
+    assert(parts.length == 1, parts.mkString(", "))
+    val keys = spark.read.parquet(dir.toString).collect().toSeq
+      .map(r => (r.getString(0), r.getDate(1).toLocalDate.toEpochDay))
+    assert(keys.size == 6 * 30)
+    assert(keys == keys.sorted)
+  }
+
+  test("payments daily mart: one exchange of the lines below the " +
+    "materialized day rows; no Expand, no pivot") {
+    import org.apache.spark.sql.execution.{ExpandExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(f -> qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      PaymentsDaily.aggregate(edgeFixture)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val checkpoints = seen.asScala.collect {
+      case (f, qe) if f.toLowerCase.contains("checkpoint") => qe.executedPlan
+    }.toSeq
+    assert(checkpoints.size == 1, seen.asScala.map(_._1).mkString(", "))
+    val helper = new AdaptiveSparkPlanHelper {}
+    val plan = checkpoints.head
+    val exchanges = helper.collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size == 1, plan.toString)
+    assert(helper.collect(plan) { case e: ExpandExec => e }.isEmpty,
+      plan.toString)
+    assert(!plan.toString.toLowerCase.contains("pivot"), plan.toString)
   }
 
   test("missing required column raises (Q1)") {

@@ -3,6 +3,7 @@
 where each thread spends its samples.
 
     python3 tools/jfr_summary.py REC.jfr [--after SECONDS] [--top N]
+                                 [--frames PATTERN ...]
 
 Record a JVM with `-XX:StartFlightRecording=filename=REC.jfr,settings=profile`
 (for a perfbench run, pass it through `JAVA_TOOL_OPTIONS`). The report has
@@ -14,6 +15,11 @@ two parts, both read with the JDK's `jfr print --json`:
 - execution samples (`jdk.ExecutionSample`) per thread, with each thread's
   most sampled top frames. Digits in thread names are folded to `N`, so the
   per-task names of Spark's executor threads form one group.
+- with `--frames`, per thread group, the inclusive sample count of each
+  PATTERN: the samples with a matching frame anywhere in their recorded
+  stack (a regular expression searched in `package.Class.method`), e.g.
+  `--frames SerializableConfiguration.readObject parseMoneyFn
+  FileFormatWriter.executeTask`.
 
 `--after SECONDS` keeps only events at least that long after JVM start,
 e.g. a perfbench run's `setup_s`, to look at its timed passes alone.
@@ -28,6 +34,7 @@ import subprocess
 import sys
 
 JDK = ("java.", "javax.", "jdk.", "sun.", "com.sun.")
+STACK_DEPTH = 64  # JFR's default recorded depth
 LAUNCHERS = ("org.apache.hadoop.util.Shell", "org.apache.spark.util.Utils.execute")
 
 
@@ -83,6 +90,9 @@ def main():
                     help="only events this long after JVM start")
     ap.add_argument("--top", type=int, default=10, metavar="N",
                     help="rows per group (default 10)")
+    ap.add_argument("--frames", nargs="+", default=[], metavar="PATTERN",
+                    help="inclusive sample counts per thread group of the "
+                         "stacks with a frame matching each PATTERN")
     a = ap.parse_args()
 
     info = events(a.rec, ["jdk.JVMInformation"], 1)
@@ -105,15 +115,28 @@ def main():
     print(" by caller:")
     top(collections.Counter(caller(frames(e)) for e in procs), a.top)
 
-    samples = kept(events(a.rec, ["jdk.ExecutionSample"], 1))
+    patterns = [(p, re.compile(p)) for p in a.frames]
+    samples = kept(events(a.rec, ["jdk.ExecutionSample"],
+                          STACK_DEPTH if patterns else 1))
     print(f"\nexecution samples: {len(samples)}")
     per = collections.defaultdict(collections.Counter)
+    hits = collections.defaultdict(collections.Counter)
     for e in samples:
         fs = frames(e)
         per[thread(e)][fs[0] if fs else "?"] += 1
-    for name, c in sorted(per.items(), key=lambda kv: -sum(kv[1].values())):
+        for p, rx in patterns:
+            hits[thread(e)][p] += any(rx.search(f) for f in fs)
+    groups = sorted(per.items(), key=lambda kv: -sum(kv[1].values()))
+    for name, c in groups:
         print(f" {sum(c.values()):7d}  {name}")
         top(c, min(a.top, 3), indent="   ")
+    if patterns:
+        print(f"\ninclusive samples per frame pattern "
+              f"(stacks recorded to depth {STACK_DEPTH}):")
+        for name, c in groups:
+            print(f" {sum(c.values()):7d}  {name}")
+            for p, _ in patterns:
+                print(f"   {hits[name][p]:7d}  {p}")
 
 
 if __name__ == "__main__":
