@@ -239,7 +239,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
           children(0), children(1))))
     ext.injectOptimizerRule(_ => CollapseIdempotentStripAccents)
-    ext.injectOptimizerRule(_ => graft.plans.RewriteWindowTopK)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
   }

@@ -315,8 +315,8 @@ object InsightOps {
     * at 100 TB each source's rows sort locally within its hash
     * partition (bounded by the per-source document count, the very
     * quantity the quota bounds); skewed mega-sources are exactly the
-    * rows the cap discards, and RewriteWindowTopK can replan the
-    * rank≤K shape into k-bounded heaps where it fires. */
+    * rows the cap discards. The rank feeds the kept/dropped counts
+    * rather than a `rk <= K` filter, so every row is ranked. */
   val q190SourceQuota: Q = (s, d) => {
     import s.implicits._
     val K = 10

@@ -6,9 +6,7 @@ import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, LongType, StringType,
-  StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Dependency-free XLSX reader/writer (SURVEY §2.1 S6/S13) built on
   * the JDK's `java.util.zip` + StAX — an .xlsx file is a zip of small
@@ -564,37 +562,5 @@ object Xlsx {
       .getOrElse(throw new IllegalArgumentException(
         s"no .xlsx workbooks under ${paths.mkString(", ")}"))
     file -> read(XlsxDataSource.readBytes(file, conf))
-  }
-
-  private val GridCells = StructType(Seq(
-    StructField("_file", StringType),
-    StructField("_row", LongType, nullable = false),
-    StructField("cells", ArrayType(StringType))))
-
-  /** S6 bronze reader: every .xlsx under `path` → the row-indexed raw
-    * grid `(\_file, \_row, \_c0.._cN)` of the sheet matching
-    * `sheetTarget` (reference lookup rules).
-    *
-    * Two-phase like the reference's pandas read: the schema width (max
-    * column count, one tiny agg) is fixed first, then the cells are
-    * delivered. The parsed grid is localCheckpointed so the zip+StAX
-    * parse runs ONCE per workbook — the width agg and the downstream
-    * read both hit executor storage (MEMORY_AND_DISK, freed when the
-    * plan is GC'd), not a second parse. */
-  def readGrid(spark: SparkSession, path: String,
-               sheetTarget: String): DataFrame = {
-    import spark.implicits._
-    val grids = scanWorkbooks(spark, Seq(path), GridCells) { (file, wb) =>
-      wb.gridLike(sheetTarget).iterator.zipWithIndex.map {
-        case (cells, i) => Row(file, i.toLong, cells)
-      }
-    }.localCheckpoint()
-    val nCols = Option(grids.agg(max(size($"cells"))).head().get(0))
-      .map(_.asInstanceOf[Int])
-      .getOrElse(throw new IllegalArgumentException(
-        s"no .xlsx workbooks (or only empty sheets) under $path"))
-    (0 until nCols).foldLeft(grids) { (d, i) =>
-      d.withColumn(s"_c$i", $"cells".getItem(i))
-    }.drop("cells")
   }
 }

@@ -22,16 +22,16 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 face of the JDK-only xlsx parser:
   * `spark.read.format("xlsx").option("sheet", "Pagos").load(dir)` →
-  * the same bronze grid schema `(_file, _row, _c0.._cN)` the
-  * `Xlsx.readGrid` facade produces — but as a first-class table
-  * source: one input partition PER WORKBOOK (files parallelize across
+  * the bronze grid schema `(_file, _row, _c0.._cN)` the staging
+  * cleaners consume, as a first-class table source: one input
+  * partition PER WORKBOOK (files parallelize across
   * executors with no binaryFile detour), column pruning pushed into
   * the reader (a `select(_c0)` materializes one cell per row, not the
   * whole sheet row), and an explicit user schema skips inference.
   *
   * Schema inference parses each workbook's chosen sheet ONCE on the
-  * driver to fix the grid width (the same two-phase contract as
-  * `readGrid`; pandas' read_excel does the equivalent). For
+  * driver to fix the grid width, the widest row of any workbook
+  * (pandas' read_excel does the equivalent). For
   * many-workbook directories pass the schema explicitly —
   * `.schema(...)` — and inference is skipped entirely.
   *

@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  ExchangeQueryStageExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape CONTRACTS for scale-critical queries: these assertions
@@ -123,6 +127,30 @@ class PlanContractSpec extends AnyFunSuite {
     assert(!p.contains("Sort"), p.take(3000))
     assert(p.contains("HashAggregate") || p.contains("ObjectHashAggregate"),
       p.take(2000))
+  }
+
+  test("q271: the shard anchor's distinct runs once (exchange reuse)") {
+    // both order lanes join the same `shards` distinct, which is not
+    // checkpointed: it runs once only because AQE reuses its exchange.
+    // In the final plan no two stages that ran (a reused stage's plan
+    // is a ReusedExchange) may share a canonicalized exchange.
+    val df = SparkEntry.queries("q271_shard_mixing")(spark, sf)
+    // drive df's OWN QueryExecution (a noop write runs a separate one)
+    df.queryExecution.toRdd.foreachPartition(_ => ())
+    val aqe = df.queryExecution.executedPlan.asInstanceOf[AdaptiveSparkPlanExec]
+    assert(aqe.isFinalPlan)
+    def ran(p: SparkPlan): Seq[QueryStageExec] = p match {
+      case q: QueryStageExec if q.plan.isInstanceOf[ReusedExchangeExec] => Nil
+      case q: QueryStageExec => q +: ran(q.plan)
+      case other => other.children.flatMap(ran)
+    }
+    val stages = ran(aqe.executedPlan)
+      .collect { case e: ExchangeQueryStageExec => e }
+    assert(stages.nonEmpty, aqe.toString.take(3000))
+    val twice = stages.groupBy(_.canonicalized).values.filter(_.size > 1)
+    assert(twice.isEmpty, "exchanges run twice, stage ids " +
+      twice.map(_.map(_.id).mkString("/")).mkString(", ") + "\n" +
+      aqe.toString.take(6000))
   }
 
   test("no query plans an Expand outside the declared set") {

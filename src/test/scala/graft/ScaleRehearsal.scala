@@ -14,9 +14,9 @@ import java.nio.file.{Files, Paths}
   * `SCALE_r08.json` with per-query wall times, the fitted growth
   * exponent α (t ∝ N^α between the two largest amplifications), a
   * sub-quadratic verdict per query, and a same-session plan-shape
-  * comparison (1× vs largest-×: AQE adaptations such as a broadcast
-  * demoting to SMJ at bigger inputs are RECORDED, not failed — that
-  * adaptation is precisely what we want AQE to do at scale).
+  * comparison of the static plans (1× vs largest-×: a broadcast the
+  * planner swaps for a sort-merge join at bigger inputs is RECORDED,
+  * not failed — that is precisely what it should do at scale).
   *
   * Amplifier (pure Spark, fully deterministic — no RNG, no clock):
   * replica k of `documents` shifts every letter by k mod 26
@@ -434,20 +434,14 @@ object ScaleRehearsal {
     ensureAlive()
 
     // plan-shape comparison: 1x vs largest amplification, same session
-    // (fingerprinting EXECUTES each query at both dirs — AQE-final —
-    // so deep-amplification probes can skip it via NOSHAPES)
+    // (static plans: each query is built and planned at both dirs, and
+    // no final plan runs)
     val aLo = amps.head
     val aHi = amps.last
-    val doShapes = !sys.env.contains("SPARK_GRAFT_SCALE_NOSHAPES")
     val shapes = names.map { n =>
-      if (!doShapes) n -> ("", "")
-      else {
-        val fpLo = graft.plans.PlanFingerprints.fingerprint(
-          SparkEntry.queries(n)(spark, dirs.head._2))
-        val fpHi = graft.plans.PlanFingerprints.fingerprint(
-          SparkEntry.queries(n)(spark, dirs.last._2))
-        n -> (fpLo, fpHi)
-      }
+      val fp = (d: String) => graft.plans.PlanFingerprints.fingerprint(
+        spark)(SparkEntry.queries(n)(spark, d))
+      n -> (fp(dirs.head._2), fp(dirs.last._2))
     }.toMap
 
     // optional: rehearse the release WRITE path at the largest
@@ -504,10 +498,9 @@ object ScaleRehearsal {
         .mkString(",")
       s"""${q(n)}:{$ts,${q("alpha")}:${if (alpha.isNaN) "null" else f"$alpha%.3f"},""" +
         s"""${q("subquadratic_pass")}:$pass,""" +
-        (if (!doShapes) ""
-         else s"""${q("plan_shape_stable")}:${fpLo == fpHi},""" +
-           (if (fpLo == fpHi) ""
-            else s"""${q("plan_x" + aLo)}:${q(fpLo)},${q("plan_x" + aHi)}:${q(fpHi)},""")) +
+        s"""${q("plan_shape_stable")}:${fpLo == fpHi},""" +
+        (if (fpLo == fpHi) ""
+         else s"""${q("plan_x" + aLo)}:${q(fpLo)},${q("plan_x" + aHi)}:${q(fpHi)},""") +
         s"""${q("t_ratio_hi")}:${if (tMid > 0) f"${tHi / tMid}%.2f" else "null"}}"""
     }
     val failed = names.filter(n => amps.exists(a => times((n, a)) < 0))

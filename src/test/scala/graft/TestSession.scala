@@ -18,12 +18,16 @@ object TestSession {
 
   /** Runs `body` with each `key -> value` set on the shared session,
     * then restores the previous value, or unsets a key that had none. */
-  def withConf[T](kvs: (String, String)*)(body: => T): T = {
-    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+  def withConf[T](kvs: (String, String)*)(body: => T): T =
+    withConfOn(spark, kvs: _*)(body)
+
+  /** [[withConf]] on a given session. */
+  def withConfOn[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val saved = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
+    kvs.foreach { case (k, v) => s.conf.set(k, v) }
     try body finally saved.reverse.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
     }
   }
 }

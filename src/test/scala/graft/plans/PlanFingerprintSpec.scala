@@ -3,12 +3,14 @@ package graft.plans
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Snapshot contract over every registry query's physical plan: the
-  * operator multiset must match `PLAN_FINGERPRINTS.txt`. A diff here
-  * means a PLAN changed — review it (did a broadcast disappear? did
-  * an Expand/NLJ/global-sort appear?), then regenerate the snapshot
-  * with `sbt "Test/runMain graft.plans.PlanFingerprints"` to accept.
-  * New queries must be snapshotted the same way. */
+/** Snapshot contract over every registry query's static (AQE off)
+  * physical plan: the operator multiset must match
+  * `PLAN_FINGERPRINTS.txt`. Planning runs no job and reads no runtime
+  * statistics, so the check is deterministic. A diff here means a
+  * PLAN changed — review it (did a broadcast disappear? did an
+  * Expand/NLJ/global-sort appear?), then regenerate the snapshot with
+  * `sbt "Test/runMain graft.plans.PlanFingerprints"` to accept. New
+  * queries must be snapshotted the same way. */
 class PlanFingerprintSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = graft.TestSession.spark

@@ -1,6 +1,5 @@
 package graft.plans
 
-import graft.TestSession.withConf
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -12,7 +11,6 @@ class TopKPlanSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   lazy val spark: SparkSession = graft.TestSession.spark
-  private val Rewrite = "spark.graft.topk.rewrite"
 
   private def docs = graft.Tables.documents(spark, sf)
     .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -54,96 +52,6 @@ class TopKPlanSpec extends AnyFunSuite {
     assert(all.filter(col("rank") === 1).count() == langs)
   }
 
-  test("optimizer rewrite plans the heap operator for window top-k SQL") {
-    withConf(Rewrite -> "true") {
-      graft.GraftSql.registerTables(spark, sf)
-      val sql = """
-        SELECT lang, doc_id, rn FROM (
-          SELECT lang, doc_id, row_number() OVER (PARTITION BY lang
-            ORDER BY n_chars DESC, doc_id ASC) AS rn
-          FROM documents)
-        WHERE rn <= 3"""
-      val df = spark.sql(sql)
-      df.write.format("noop").mode("overwrite").save()
-      val p = df.queryExecution.executedPlan.toString
-      assert(p.contains("TopKFinal"), p.take(2000))
-      assert(!p.contains("Window"), p.take(2000))
-      val rewritten = df.collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSet
-      val plain = withConf(Rewrite -> "false") {
-        spark.sql(sql).collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSet
-      }
-      assert(rewritten == plain)
-    }
-  }
-
-  test("rewrite leaves non-row_number and compound filters alone") {
-    withConf(Rewrite -> "true") {
-      graft.GraftSql.registerTables(spark, sf)
-      // rank() is not row_number (ties share ranks) — must keep Window
-      val rankDf = spark.sql("""
-        SELECT * FROM (
-          SELECT lang, doc_id, rank() OVER (PARTITION BY lang
-            ORDER BY n_chars DESC) AS rn
-          FROM documents)
-        WHERE rn <= 3""")
-      assert(rankDf.queryExecution.optimizedPlan.toString
-        .contains("windowspecdefinition"),
-        rankDf.queryExecution.optimizedPlan.toString.take(1500))
-      // a compound predicate is not a pure bound — must keep Window
-      val compound = spark.sql("""
-        SELECT * FROM (
-          SELECT lang, doc_id, row_number() OVER (PARTITION BY lang
-            ORDER BY n_chars DESC, doc_id ASC) AS rn
-          FROM documents)
-        WHERE rn <= 3 AND doc_id > 10""")
-      assert(compound.queryExecution.optimizedPlan.toString
-        .contains("windowspecdefinition"),
-        compound.queryExecution.optimizedPlan.toString.take(1500))
-    }
-  }
-
-  test("rewrite fires through a renamed rank; declines a recomputed one") {
-    withConf(Rewrite -> "true") {
-      graft.GraftSql.registerTables(spark, sf)
-      // rn renamed to rank, plus a computed passenger column — both
-      // flow through one collapsed Project; the rewrite must fire and
-      // keep results identical to the window spelling
-      val sql = """
-        SELECT lang, doc_id, n_chars * 2 AS twice, rank FROM (
-          SELECT lang, doc_id, n_chars, row_number() OVER (
-            PARTITION BY lang ORDER BY n_chars DESC, doc_id ASC) AS rank
-          FROM documents)
-        WHERE rank <= 3"""
-      val df = spark.sql(sql)
-      df.write.format("noop").mode("overwrite").save()
-      val p = df.queryExecution.executedPlan.toString
-      assert(p.contains("TopKFinal"), p.take(2000))
-      assert(!p.contains("Window"), p.take(2000))
-      val rewritten = df.collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-          r.getInt(3))).toSet
-      val plain = withConf(Rewrite -> "false") {
-        spark.sql(sql).collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-            r.getInt(3))).toSet
-      }
-      assert(rewritten == plain)
-      // a RECOMPUTED rank (rn + 1) bounds something else — keep Window
-      val recomputed = spark.sql("""
-        SELECT lang, doc_id, rank FROM (
-          SELECT lang, doc_id, rn + 1 AS rank FROM (
-            SELECT lang, doc_id, row_number() OVER (PARTITION BY lang
-              ORDER BY n_chars DESC, doc_id ASC) AS rn
-            FROM documents))
-        WHERE rank <= 3""")
-      assert(recomputed.queryExecution.optimizedPlan.toString
-        .contains("windowspecdefinition"),
-        recomputed.queryExecution.optimizedPlan.toString.take(1500))
-    }
-  }
-
   test("GLOBAL top-k (no group keys) plans AllTuples, not a crash") {
     val ours = TopK.perGroup(docs, Seq(),
       Seq(("n_chars", true), ("doc_id", false)), 5)
@@ -155,20 +63,6 @@ class TopKPlanSpec extends AnyFunSuite {
       .select("doc_id", "rank").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(ours == ref)
-    // and via the rewrite — the no-PARTITION-BY SQL idiom
-    withConf(Rewrite -> "true") {
-      graft.GraftSql.registerTables(spark, sf)
-      val df = spark.sql("""
-        SELECT doc_id, rn FROM (
-          SELECT doc_id, row_number() OVER (
-            ORDER BY n_chars DESC, doc_id ASC) AS rn
-          FROM documents)
-        WHERE rn <= 5""")
-      assert(df.collect().map(r => (r.getLong(0), r.getInt(1).toLong))
-        .toSet == ref)
-      assert(df.queryExecution.executedPlan.toString
-        .contains("TopKFinal"))
-    }
   }
 
   test("ascending order and multi-column groups work") {

@@ -6,9 +6,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The DataSource V2 xlsx format: `spark.read.format("xlsx")` must
-  * deliver the same bronze grid as the `Xlsx.readGrid` facade, one
-  * partition per workbook, with column pruning reaching the reader
-  * and an explicit schema skipping inference. */
+  * deliver the bronze grid of the sheet the reference's lookup rules
+  * pick, one partition per workbook, with column pruning reaching the
+  * reader and an explicit schema skipping inference. */
 class XlsxSourceSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = graft.TestSession.spark
@@ -27,7 +27,7 @@ class XlsxSourceSpec extends AnyFunSuite {
     dir.getAbsolutePath
   }
 
-  test("format(xlsx) matches the readGrid facade, sheet rules included") {
+  test("format(xlsx) delivers the widest bronze grid, sheet rules included") {
     val dir = writeWorkbooks()
     val ds = spark.read.format("xlsx").option("sheet", "Pagos").load(dir)
     // 3-wide grid: b.xlsx's Pagos has 3 columns → width governs

@@ -97,7 +97,7 @@ class XlsxSpec extends AnyFunSuite {
       assert(Xlsx.colOf(Xlsx.colLetters(c) + "1") == c)
   }
 
-  test("bronze grid e2e: xlsx file → readGrid → PaymentsCleaner") {
+  test("bronze grid e2e: xlsx file → format(xlsx) → PaymentsCleaner") {
     val s = spark
     val dir = java.nio.file.Files.createTempDirectory("xlsx_bronze")
     val rows: Seq[Seq[Any]] = Seq(
@@ -117,8 +117,8 @@ class XlsxSpec extends AnyFunSuite {
       "Resumen" -> Seq(Seq("ignored")),
       "Detalle por forma de pago" -> rows), fos)
     finally fos.close()
-    val grid = Xlsx.readGrid(s, dir.toString, "detalle por forma")
-      .drop("_file")
+    val grid = s.read.format("xlsx").option("sheet", "detalle por forma")
+      .load(dir.toString).drop("_file")
     val out = graft.pos.staging.PaymentsCleaner.clean(grid, "Kavia_OLD")
     val got = out.orderBy(out("order_index")).collect()
     assert(got.length == 2)
