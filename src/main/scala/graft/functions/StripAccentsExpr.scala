@@ -2,8 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.expressions.{Expression,
   ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
@@ -144,20 +142,11 @@ case class SimHash64(child: Expression) extends UnaryExpression {
   override def prettyName: String = "simhash64"
 }
 
-/** Optimizer rule: collapse nested idempotent normalizers —
-  * `strip_accents(strip_accents(x))` ⇒ `strip_accents(x)` (NFD +
-  * mark-strip is idempotent). A tiny example of the
-  * `injectOptimizerRule` extension point doing real plan surgery. */
-object CollapseIdempotentStripAccents extends Rule[LogicalPlan] {
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformAllExpressions {
-      case StripAccents(inner @ StripAccents(_)) => inner
-    }
-}
-
-/** Session extension registering the native functions — wire with
+/** Session extension registering the native functions, Spark's bloom
+  * filter expressions, and the two planner strategies (as-of join,
+  * per-group top-k); it injects no optimizer rule. Wire with
   * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
-  * or `.withExtensions(new GraftExtensions)`; then
+  * (the `graft.Sessions` recipe does); then
   * `expr("strip_accents_native(c)")` / `expr("parse_money_native(c)")`
   * resolve through the registry and codegen inline. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -238,7 +227,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) =>
         org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
           children(0), children(1))))
-    ext.injectOptimizerRule(_ => CollapseIdempotentStripAccents)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
   }

@@ -170,10 +170,6 @@ final case class TopKFinalExec(child: SparkPlan,
     val keys = groupKeys
     val ord = order
     val kk = k
-    // honor the declared rank type: the optimizer-rule rewrite reuses
-    // row_number's IntegerType attribute; the DSL entry declares Long
-    val rankIsInt =
-      rankAttr.dataType == org.apache.spark.sql.types.IntegerType
     child.execute().mapPartitions { iter =>
       val rowOrd = RowOrdering.create(ord, childOut)
       val outProj = UnsafeProjection.create(outputAttrs, outputAttrs)
@@ -183,9 +179,8 @@ final case class TopKFinalExec(child: SparkPlan,
           scala.util.Sorting.stableSort(rows,
             (a: InternalRow, b: InternalRow) => rowOrd.compare(a, b) < 0)
           rows.iterator.zipWithIndex.map { case (row, i) =>
-            val rank: Any = if (rankIsInt) i + 1 else (i + 1).toLong
             outProj(joined(row,
-              new GenericInternalRow(Array[Any](rank))))
+              new GenericInternalRow(Array[Any]((i + 1).toLong))))
           }
       }
     }

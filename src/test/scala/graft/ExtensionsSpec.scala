@@ -66,19 +66,6 @@ class ExtensionsSpec extends AnyFunSuite {
       .isDefined)
   }
 
-  test("optimizer rule collapses nested strip_accents (idempotence)") {
-    val s = spark
-    import s.implicits._
-    import org.apache.spark.sql.functions._
-    val df = Tables.documents(spark, "/root/testdata/sf0.001")
-      .select(expr("strip_accents_native(strip_accents_native(text))")
-        .as("n"))
-    val optimized = df.queryExecution.optimizedPlan.toString
-    // exactly one strip_accents survives optimization
-    assert("strip_accents\\(".r.findAllIn(optimized).length == 1,
-      optimized)
-  }
-
   test("parse_money_native matches the UDF on the truth table + nulls") {
     val s = spark
     import s.implicits._

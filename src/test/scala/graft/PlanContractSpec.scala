@@ -16,11 +16,18 @@ class PlanContractSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = TestSession.spark
 
-  /** Final (AQE-resolved) plan string of a registered query. */
+  /** Final (AQE-resolved) plan string of a registered query: runs the
+    * frame's OWN QueryExecution (a noop write would run a separate
+    * one and leave this plan at `isFinalPlan=false`). */
   private def plan(name: String): String = {
     val df = SparkEntry.queries(name)(spark, sf)
-    df.write.format("noop").mode("overwrite").save()
-    df.queryExecution.executedPlan.toString
+    df.queryExecution.toRdd.foreachPartition(_ => ())
+    df.queryExecution.executedPlan match {
+      case aqe: AdaptiveSparkPlanExec =>
+        assert(aqe.isFinalPlan, name)
+        aqe.executedPlan.toString
+      case static => static.toString
+    }
   }
 
   test("q02: filters reach the parquet scan") {
@@ -479,9 +486,7 @@ class PlanContractSpec extends AnyFunSuite {
     // materializes the gate before this scan sees the plan, the
     // q232/q234 hiding caveat)
     SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sf)
-      df.write.format("noop").mode("overwrite").save()
-      val p = df.queryExecution.executedPlan.toString
+      val p = plan(name)
       assert(!p.contains("CartesianProduct"),
         s"$name plans a cartesian product")
       if (!intendedNlj(name))

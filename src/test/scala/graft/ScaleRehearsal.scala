@@ -11,12 +11,22 @@ import java.nio.file.{Files, Paths}
   * sf0.1 (~5k docs / 2k vectors). This main amplifies the corpus
   * deterministically (below), re-runs the heaviest dedup / ANN /
   * curation queries at each amplification, and writes
-  * `SCALE_r08.json` with per-query wall times, the fitted growth
+  * `SCALE_LAST.json` with per-query wall times, the fitted growth
   * exponent α (t ∝ N^α between the two largest amplifications), a
   * sub-quadratic verdict per query, and a same-session plan-shape
   * comparison of the static plans (1× vs largest-×: a broadcast the
   * planner swaps for a sort-merge join at bigger inputs is RECORDED,
   * not failed — that is precisely what it should do at scale).
+  *
+  * Each query's entry also carries its 20 costliest stage groups at
+  * the largest amplification (`stage_groups_x<hi>`, from [[Metrics]]):
+  * per completed stage, the executor task time, shuffle read/write
+  * bytes, input bytes and task count, summed per callsite name so the
+  * same logical stage can be compared across amplifications. `growth`
+  * is a group's task time over its time at the next-largest
+  * amplification. A group whose task time grows ≫ linearly names the
+  * saturating structure; uniform mild growth across groups means
+  * constant-factor costs (GC, spill, scheduler), not a plan defect.
   *
   * Amplifier (pure Spark, fully deterministic — no RNG, no clock):
   * replica k of `documents` shifts every letter by k mod 26
@@ -38,6 +48,12 @@ import java.nio.file.{Files, Paths}
   * Usage (test classpath for PlanFingerprints reuse):
   *   sbt "Test/runMain graft.ScaleRehearsal [sfDir] [workDir] [amps]"
   * defaults: /root/testdata/sf0.1 target/scale 1,8,64
+  * env: SPARK_GRAFT_ONLY (comma-separated substrings of any registry
+  *   query; default [[RehearsalQueries]]), SPARK_GRAFT_SCALE_OUT,
+  *   SPARK_GRAFT_SCALE_SKEW, SPARK_GRAFT_SCALE_REPEATS,
+  *   SPARK_GRAFT_SCALE_RELEASE, SPARK_GRAFT_CPUS. A deep stage probe
+  *   of two queries is `SPARK_GRAFT_ONLY=q98,q250 … [sfDir] [workDir]
+  *   256,1024`.
   */
 object ScaleRehearsal {
 
@@ -133,7 +149,7 @@ object ScaleRehearsal {
     *     embedding near-dup edge count growing 16× per 4× (quadratic:
     *     every replica of a base vector stayed cosine-close to every
     *     other replica — 102M edges at x1024, 95% of q98's input, the
-    *     whole α=1.27 residue; see SCALE_r09_deep + EdgeCensusProbe).
+    *     whole α=1.27 residue; see SCALE_r09_deep).
     *     The text lanes got the equivalent fix (word-derived salts)
     *     in round 8; this is the embedding analogue. */
   private def perturbEmb(emb: DataFrame, k: Int): DataFrame =
@@ -268,8 +284,8 @@ object ScaleRehearsal {
 
   /** The sf dir every amplifier-driven SPEC uses (ScaleGrowthSpec,
     * ReleaseSpec, SkewJoinSpec) — factored so a testdata relayout is
-    * a one-line change (round-10 ADVICE). The rehearsal/probe MAINS
-    * still take their sf dir as an argument. */
+    * a one-line change (round-10 ADVICE). The rehearsal MAIN still
+    * takes its sf dir as an argument. */
   private[graft] val SpecSfDir = "/root/testdata/sf0.001"
 
   /** Amplifier-profile version, baked into every `_AMPLIFIED_OK`
@@ -343,23 +359,25 @@ object ScaleRehearsal {
       java.nio.charset.StandardCharsets.UTF_8))
   }
 
-  private def runOne(spark: SparkSession, name: String,
-                     dir: String): Double = {
+  /** One measured run: wall seconds (-1 on failure) and the run's
+    * stage groups. */
+  private def runOne(spark: SparkSession, metrics: Metrics, name: String,
+                     dir: String): (Double, Seq[Metrics.Stage]) = {
+    val sc = spark.sparkContext
+    metrics.reset(sc)
     val t0 = System.nanoTime()
-    val ok =
+    val run =
       try {
         SparkEntry.queries(name)(spark, dir)
           .write.format("noop").mode("overwrite").save()
-        true
+        ((System.nanoTime() - t0) / 1e9, metrics.snapshot(sc).groups)
       } catch { case e: Throwable =>
         System.err.println(s"[scale] $name @ $dir failed: ${e.getMessage}")
-        false
+        (-1.0, Nil)
       }
-    val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
     System.gc() // per-query isolation, same rationale as Bench
-    dt
+    run
   }
 
   def main(args: Array[String]): Unit = {
@@ -368,7 +386,7 @@ object ScaleRehearsal {
     val amps = args.lift(2).getOrElse("1,8,64")
       .split(",").map(_.trim.toInt).toSeq.sorted
     val outJson =
-      sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "SCALE_r08.json")
+      sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "SCALE_LAST.json")
     // skew profile (see the skew-profile scaladoc above); amplified
     // dirs are cached separately from the uniform profile's
     val skew = sys.env.contains("SPARK_GRAFT_SCALE_SKEW")
@@ -378,12 +396,19 @@ object ScaleRehearsal {
       .map(_.toInt).getOrElse(1)
     val names = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .map(pats => RehearsalQueries.filter(n => pats.exists(n.contains)))
+      .map { pats =>
+        val all = SparkEntry.queries.keys.toSeq.sorted
+        pats.foreach(p =>
+          require(all.exists(_.contains(p)), s"no query matches '$p'"))
+        all.filter(n => pats.exists(n.contains))
+      }
       .getOrElse(RehearsalQueries)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val metrics = new Metrics
     def newSession(): SparkSession = {
       val s = Sessions.checked(cpus)
       s.sparkContext.setLogLevel("ERROR")
+      s.sparkContext.addSparkListener(metrics)
       s
     }
     var spark = newSession()
@@ -419,17 +444,20 @@ object ScaleRehearsal {
     // measure: per amplification ascending, queries in declared order
     val times = scala.collection.mutable.Map
       .empty[(String, Int), Double]
+    val groups = scala.collection.mutable.Map
+      .empty[(String, Int), Seq[Metrics.Stage]]
     for ((a, d) <- dirs; n <- names) {
-      val dts = (1 to repeats).map { _ =>
+      val runs = (1 to repeats).map { _ =>
         ensureAlive()
-        runOne(spark, n, d)
+        runOne(spark, metrics, n, d)
       }
-      val valid = dts.filter(_ >= 0).sorted
-      val dt = if (valid.isEmpty) -1.0 else valid(valid.size / 2)
+      val valid = runs.filter(_._1 >= 0).sortBy(_._1)
+      val (dt, st) = if (valid.isEmpty) (-1.0, Nil) else valid(valid.size / 2)
       times((n, a)) = dt
+      groups((n, a)) = st
       println(f"[scale] x$a%-3d $n%-28s ${dt}%8.2f s" +
         (if (repeats > 1) s" (median of ${valid.size}: " +
-          valid.map(v => f"$v%.2f").mkString(", ") + ")" else ""))
+          valid.map(v => f"${v._1}%.2f").mkString(", ") + ")" else ""))
     }
     ensureAlive()
 
@@ -479,7 +507,8 @@ object ScaleRehearsal {
       }
 
     val aMid = if (amps.size >= 2) amps(amps.size - 2) else aLo
-    def q(s: String) = "\"" + s + "\""
+    def q(s: String) =
+      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     val rows = names.map { n =>
       val tHi = times((n, aHi))
       val tMid = times((n, aMid))
@@ -496,12 +525,24 @@ object ScaleRehearsal {
       val (fpLo, fpHi) = shapes(n)
       val ts = amps.map(a => s"${q("t_x" + a)}:${times((n, a))}")
         .mkString(",")
+      val midMs = groups((n, aMid)).map(g => g.name -> g.taskMs).toMap
+      val stages = groups((n, aHi)).take(20).map { g =>
+        val lo = midMs.get(g.name)
+        val growth = lo.filter(_ > 0).map(g.taskMs.toDouble / _).getOrElse(-1.0)
+        s"""{"stage":${q(g.name)},"task_ms_hi":${g.taskMs},""" +
+          s""""task_ms_lo":${lo.getOrElse(-1L)},""" +
+          s""""growth":${"%.2f".format(growth)},""" +
+          s""""shuffle_read_b":${g.shuffleReadB},""" +
+          s""""shuffle_write_b":${g.shuffleWriteB},""" +
+          s""""input_b":${g.inputB},"tasks":${g.tasks}}"""
+      }.mkString("[", ",", "]")
       s"""${q(n)}:{$ts,${q("alpha")}:${if (alpha.isNaN) "null" else f"$alpha%.3f"},""" +
         s"""${q("subquadratic_pass")}:$pass,""" +
         s"""${q("plan_shape_stable")}:${fpLo == fpHi},""" +
         (if (fpLo == fpHi) ""
          else s"""${q("plan_x" + aLo)}:${q(fpLo)},${q("plan_x" + aHi)}:${q(fpHi)},""") +
-        s"""${q("t_ratio_hi")}:${if (tMid > 0) f"${tHi / tMid}%.2f" else "null"}}"""
+        s"""${q("t_ratio_hi")}:${if (tMid > 0) f"${tHi / tMid}%.2f" else "null"},""" +
+        s"""${q("stage_groups_x" + aHi)}:$stages}"""
     }
     val failed = names.filter(n => amps.exists(a => times((n, a)) < 0))
     val json =
@@ -511,6 +552,9 @@ object ScaleRehearsal {
         s"""${q("n_docs")}:{${nDocs.toSeq.sorted.map { case (a, c) => s"${q("x" + a)}:$c" }.mkString(",")}},""" +
         s"""${q("cpus")}:$cpus,""" +
         s"""${q("alpha_grading")}:${q(s"fit between x$aMid and x$aHi")},""" +
+        s"""${q("stage_grouping")}:${q(s"by callsite name; growth = " +
+          s"task-time x$aHi / x$aMid for the same group; linear would be " +
+          s"${aHi.toDouble / aMid}")},""" +
         releaseJson +
         s"""${q("failed")}:[${failed.map(q).mkString(",")}],""" +
         s"""${q("queries")}:{${rows.mkString(",")}}}"""

@@ -191,7 +191,7 @@ class MainSpec extends AnyFunSuite {
 
   test("Main: a backfill starts no process, whatever the number of " +
     "branches") {
-    def forks(branches: Int): Seq[String] = {
+    def forks(branches: Int): Seq[graft.ProcessCount.Start] = {
       val root = Files.createTempDirectory(s"mainforks$branches").toString
       val stages = Main.defaultStages(spark, root, 180,
         (1 to branches).map(b => s"Branch$b"),
@@ -238,6 +238,34 @@ class MainSpec extends AnyFunSuite {
     assert(counts.values.toSet.size == 1, shown)
     assert(counts.values.forall { case (bf, rf) => bf <= 10 && rf <= 10 },
       shown)
+  }
+
+  test("Metrics: a backfill's snapshot has every job and stage as soon " +
+    "as the action returns") {
+    val root = Files.createTempDirectory("mainmetrics").toString
+    val stages = Main.defaultStages(spark, root, 180, Seq("Branch1"),
+      (_, s0, e0) => workbookBytes(s0, e0))
+    val sc = spark.sparkContext
+    val metrics = new graft.Metrics
+    sc.addSparkListener(metrics)
+    try {
+      metrics.reset(sc)
+      var group = ""
+      val (_, jobs) = graft.JobCount(spark, "metrics-backfill") {
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        new PosQueries(spark, root)
+          .getPayments(stages, "2025-01-01", "2025-01-07").collect()
+      }
+      val m = metrics.snapshot(sc)
+      assert(m.jobs == jobs && jobs > 0, m)
+      // the status store saw the same stages run the same tasks
+      val tracker = sc.statusTracker
+      val ran = tracker.getJobIdsForGroup(group).toSeq
+        .flatMap(tracker.getJobInfo).flatMap(_.stageIds).distinct
+        .flatMap(tracker.getStageInfo)
+      assert(m.stages.nonEmpty && m.tasks == ran.map(_.numCompletedTasks).sum,
+        s"$m\n${ran.map(s => s"${s.stageId}: ${s.numCompletedTasks}")}")
+    } finally sc.removeSparkListener(metrics)
   }
 
   // ------------------------------------------------ forecast CLI

@@ -88,7 +88,8 @@ class LocalFsSpec extends AnyFunSuite {
       assert(plain.isEmpty, plain)
       val sticky = new FsPermission(oct("1777").toShort)
       val (_, forked) = graft.ProcessCount(nio.setPermission(n, sticky))
-      assert(forked.size == 1 && forked.head.contains("chmod"), forked)
+      assert(forked.size == 1 && forked.head.command.contains("chmod"),
+        forked)
       stock.setPermission(s, sticky)
       assert(mode(root.resolve("n")) == oct("1777"))
       assert(mode(root.resolve("s")) == oct("1777"))

@@ -1420,7 +1420,13 @@ class StreamingSpec extends AnyFunSuite {
           EventStreaming.Event(2, ts("2024-01-01 10:06:00"), 2, "click", 1.0))
         q.processAllAvailable()
       }
-      assert(cmds.isEmpty, cmds)
+      // Spark's session-artifact cleaner deletes the directory of any
+      // session collected during the window with a forked `rm -rf`; the
+      // sessions earlier streaming queries cloned are not this query's
+      val (cleaner, own) = cmds.partition(_.frames
+        .exists(_.startsWith("org.apache.spark.sql.artifact.ArtifactManager")))
+      cleaner.foreach(c => println(s"[cpforks] artifact cleaner start: $c"))
+      assert(own.isEmpty, own)
       assert(spark.table("cpforks").as[(String, Long)].collect()
         .toSeq == Seq(("click", 2L)))
       assert(Files.exists(cp.resolve("commits/1")))
