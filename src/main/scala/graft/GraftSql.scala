@@ -3,11 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Raw-SQL face of the engine: register every testdata table as a temp
-  * view so the full surface — built-in operators AND the native
-  * expressions `GraftExtensions` injects (`strip_accents_native`,
+  * view so the full surface — built-in operators AND the functions
+  * `GraftExtensions` injects (every kernel of
+  * `GraftExtensions.kernels`: `strip_accents_native`,
   * `parse_money_native`, `simhash64_native`, `fingerprint64_native`,
-  * `shingles3_native`, `bloom_filter_agg`/`bloom_might_contain`) — is
-  * reachable from `spark.sql(...)` with no DataFrame code at all.
+  * `shingles3_native`, `shinglesk_native(text, k)`, `minhash4_native`,
+  * `winnow4_native`, `dot_f32_native`, `l2sq_native`,
+  * `bpe_merge(syms, mx, my)`; plus `bloom_filter_agg` /
+  * `bloom_might_contain`) — is reachable from `spark.sql(...)` with no
+  * DataFrame code at all.
   *
   * At deployment scale the same names come from the real catalog
   * (`saveAsTable` / external metastore) and nothing else changes:

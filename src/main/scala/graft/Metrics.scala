@@ -2,14 +2,15 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.{ListenerBusDrain, SparkContext}
+import org.apache.spark.{ListenerBusDrain, SparkContext, StageOperators}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted}
 
 /** The stage-level metrics listener the dev tools read (`Profile`,
   * `ScaleRehearsal`): it counts jobs and keeps one row per completed
-  * stage. Both reads drain the listener bus first, so a snapshot taken
-  * right after an action has every job and stage of it, with no sleep.
+  * stage, named by the SQL operators it ran. Both reads drain the
+  * listener bus first, so a snapshot taken right after an action has
+  * every job and stage of it, with no sleep.
   *
   *   val m = new Metrics; sc.addSparkListener(m)
   *   m.reset(sc); df.write.format("noop").save(); m.snapshot(sc)
@@ -26,7 +27,13 @@ final class Metrics extends SparkListener {
   override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
     val i = s.stageInfo
     val m = i.taskMetrics
-    val row = Stage(i.name.takeWhile(_ != '\n').trim, m.executorRunTime,
+    // under AQE every stage's callsite is the same CompletableFuture
+    // frame, so a stage is named by the operators it ran
+    val ops = StageOperators(i)
+    val name =
+      if (ops.nonEmpty) ops.mkString(" / ")
+      else i.name.takeWhile(_ != '\n').trim
+    val row = Stage(name, m.executorRunTime,
       m.shuffleReadMetrics.totalBytesRead,
       m.shuffleWriteMetrics.bytesWritten, m.inputMetrics.bytesRead,
       i.numTasks)
@@ -48,7 +55,8 @@ final class Metrics extends SparkListener {
 }
 
 object Metrics {
-  /** One completed stage: the first line of its callsite name, summed
+  /** One completed stage: its name (the operators it ran, joined by
+    * " / ", or the first line of its callsite when it ran none), summed
     * executor run time, shuffle read/write and input bytes, tasks. */
   final case class Stage(name: String, taskMs: Long, shuffleReadB: Long,
                          shuffleWriteB: Long, inputB: Long, tasks: Int)
@@ -58,8 +66,8 @@ object Metrics {
     def taskMs: Long = stages.map(_.taskMs).sum
     def shuffleWriteB: Long = stages.map(_.shuffleWriteB).sum
 
-    /** Stages summed per callsite name, by task time descending: the
-      * same logical stage compared across runs or inputs. */
+    /** Stages summed per name, by task time descending: the same
+      * logical stage compared across runs or inputs. */
     def groups: Seq[Stage] = stages.groupBy(_.name).toSeq.map {
       case (n, rs) => Stage(n, rs.map(_.taskMs).sum,
         rs.map(_.shuffleReadB).sum, rs.map(_.shuffleWriteB).sum,

@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
 
 /** THE SparkSession recipe: the only place in the repo that calls
   * `SparkSession.builder()`. Every entry point (Bench, Verify,
-  * Profile, PlanAudit, both pos CLIs, the scale and fingerprint mains)
+  * Profile, both pos CLIs, the scale and fingerprint mains)
   * gets its session from [[checked]]; every spec shares the one
   * session held by `graft.TestSession` (test sources), which is built
   * by [[checked]] too.

@@ -1,13 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression,
-  TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
-  ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native kernel for the greedy leftmost non-overlapping BPE merge
@@ -27,9 +20,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * ("aaa" + (a,a) → [aa, a]). A NULL mx or my (the degenerate
   * LEFT-join-on-TRUE round whose pair census is empty) is the
   * identity, NOT null-out — the vocabulary must pass through
-  * unchanged. */
+  * unchanged; a NULL syms gives NULL. `bpe_merge(syms, mx, my)` in
+  * [[GraftExtensions.kernels]]. */
 object BpeMergeUtil {
   def merge(syms: ArrayData, mx: UTF8String, my: UTF8String): ArrayData = {
+    if (syms == null) return null
     val n = syms.numElements()
     if (mx == null || my == null || n < 2) {
       val out = new Array[AnyRef](n)
@@ -53,50 +48,4 @@ object BpeMergeUtil {
     if (k == n) new GenericArrayData(out)
     else new GenericArrayData(java.util.Arrays.copyOf(out, k))
   }
-}
-
-/** `bpe_merge(syms, mx, my)` → array<string>: null syms → null;
-  * null mx/my → syms unchanged (see [[BpeMergeUtil]]). */
-case class BpeMerge(syms: Expression, mx: Expression, my: Expression)
-    extends TernaryExpression {
-  override def first: Expression = syms
-  override def second: Expression = mx
-  override def third: Expression = my
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = syms.nullable
-
-  override def eval(input: InternalRow): Any = {
-    val a = syms.eval(input)
-    if (a == null) null
-    else BpeMergeUtil.merge(a.asInstanceOf[ArrayData],
-      mx.eval(input).asInstanceOf[UTF8String],
-      my.eval(input).asInstanceOf[UTF8String])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val a = syms.genCode(ctx)
-    val x = mx.genCode(ctx)
-    val y = my.genCode(ctx)
-    val ad = classOf[ArrayData].getName
-    ev.copy(code =
-      code"""
-        ${a.code}
-        boolean ${ev.isNull} = ${a.isNull};
-        $ad ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${x.code}
-          ${y.code}
-          ${ev.value} = graft.functions.BpeMergeUtil.merge(${a.value},
-            ${x.isNull} ? null : ${x.value},
-            ${y.isNull} ? null : ${y.value});
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): BpeMerge =
-    copy(syms = newFirst, mx = newSecond, my = newThird)
-  override def prettyName: String = "bpe_merge"
 }

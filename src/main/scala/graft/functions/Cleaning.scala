@@ -7,9 +7,11 @@ import org.apache.spark.sql.functions._
   *
   * Semantics match the reference's cleaning helpers
   * (`/root/reference/src/pos_core/etl/staging/cleaning_utils.py:41-344`),
-  * re-expressed as Catalyst column expressions wherever possible so the
-  * hot path stays inside whole-stage codegen; only `parseMoney` (F3) and
-  * `stripAccents` (F6) are Scala UDFs (deterministic, null-safe).
+  * re-expressed as Catalyst column expressions so the hot path stays
+  * inside whole-stage codegen. `parseMoney` (F3) and `stripAccents` (F6)
+  * call the `parse_money_native` / `strip_accents_native` kernels
+  * ([[GraftExtensions.kernels]]), which run [[parseMoneyFn]] and
+  * [[stripAccentsFn]] as static calls in the generated code.
   */
 object Cleaning {
 
@@ -42,9 +44,9 @@ object Cleaning {
     *  - dot only: single dot = decimal; `1.234.567` grouped → thousands;
     *    otherwise keep dots (prefer decimal over 10^3 inflation)
     *  - plain digits; final fallback comma→dot.
-    * Deterministic, null-safe; registered as a UDF because the regex
-    * cascade with early exits doesn't decompose into one expression.
-    * Its patterns are compiled once, not per cell.
+    * Deterministic, null-safe; a kernel because the regex cascade with
+    * early exits doesn't decompose into one expression. Its patterns
+    * are compiled once, not per cell.
     */
   val parseMoneyFn: String => Option[Double] = { raw =>
     if (raw == null) None
@@ -88,9 +90,7 @@ object Cleaning {
   private val DotGroups = "\\d{1,3}(?:\\.\\d{3})+".r
   private val PlainInt = "-?\\d+".r
 
-  private val parseMoneyU = udf(parseMoneyFn)
-
-  def parseMoney(c: Column): Column = parseMoneyU(c)
+  def parseMoney(c: Column): Column = call_function("parse_money_native", c)
 
   // ---------------------------------------------------------------- F4
   /** to_float then round half-to-even — Python round() is banker's,
@@ -121,8 +121,8 @@ object Cleaning {
       java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFD), "")
   }
   private val Marks = "\\p{M}+".r
-  private val stripAccentsU = udf(stripAccentsFn)
-  def stripAccents(c: Column): Column = stripAccentsU(c)
+  def stripAccents(c: Column): Column =
+    call_function("strip_accents_native", c)
 
   /** normalize_spanish_name: strip accents, collapse ws, lowercase. */
   def normalizeName(c: Column): Column =

@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
-  ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native kernel for the document content fingerprint (the dedup key
@@ -171,7 +167,7 @@ object Winnow4Util {
   * hash = first-codepoint·131 + codepoint-count, window hash = mod-P
   * left fold with multiplier 100003; fewer than K tokens → empty
   * array. Generalizes [[Shingles3Util]] (k = 3 is bit-identical to
-  * it). */
+  * it). `shinglesk_native(text, k)` in [[GraftExtensions.kernels]]. */
 object ShinglesKUtil {
   private val Mod = 1000000007L
 
@@ -200,92 +196,4 @@ object ShinglesKUtil {
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
-}
-
-/** `shinglesk_native`-shaped kernel: width-K window hashes of `child`
-  * (a text column); `k` is a plan-time constant, not a child
-  * expression. */
-case class ShinglesK(child: Expression, k: Int) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    ShinglesKUtil.shingles(input.asInstanceOf[UTF8String], k)
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ShinglesKUtil.shingles($c, $k)")
-  override protected def withNewChildInternal(newChild: Expression)
-      : ShinglesK = copy(child = newChild)
-  override def prettyName: String = s"shingles$k"
-}
-
-/** `minhash4_native(array<bigint>)` → array<bigint> (4 lanes; null
-  * lanes for an empty shingle set). */
-case class MinHash4(child: Expression) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = true)
-  override def nullSafeEval(input: Any): Any =
-    MinHash4Util.minhash4(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.MinHash4Util.minhash4($c)")
-  override protected def withNewChildInternal(newChild: Expression)
-      : MinHash4 = copy(child = newChild)
-  override def prettyName: String = "minhash4"
-}
-
-/** `winnow4_native(array<bigint>)` → array<bigint> (distinct window-4
-  * minima; whole-array min below 4 elements; empty → empty). */
-case class Winnow4(child: Expression) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    Winnow4Util.winnow(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.Winnow4Util.winnow($c)")
-  override protected def withNewChildInternal(newChild: Expression)
-      : Winnow4 = copy(child = newChild)
-  override def prettyName: String = "winnow4"
-}
-
-/** `shingles3_native(string)` → array<bigint>. */
-case class Shingles3(child: Expression) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    Shingles3Util.shingles(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.Shingles3Util.shingles($c)")
-  override protected def withNewChildInternal(newChild: Expression)
-      : Shingles3 = copy(child = newChild)
-  override def prettyName: String = "shingles3"
-}
-
-/** `fingerprint64_native(string)` → bigint — registered through
-  * [[GraftExtensions]] and used directly (via the plan bridge) by
-  * `TextOps.fingerprintCol`, so every dedup path shares the single
-  * codegen'd kernel. */
-case class Fingerprint64(child: Expression) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any =
-    Fingerprint64Util.fingerprint(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.Fingerprint64Util.fingerprint($c)")
-  override protected def withNewChildInternal(newChild: Expression)
-      : Fingerprint64 = copy(child = newChild)
-  override def prettyName: String = "fingerprint64"
 }

@@ -1,12 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression,
-  Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
-  ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType,
-  FloatType}
 
 /** Native kernels for the vector hot paths (q61–q66, q84, q91, q102,
   * q117, q124, q126): dot product and squared-L2 distance over
@@ -14,7 +8,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType,
   * `aggregate(zip_with(...))` spelling runs its lambdas INTERPRETED —
   * one closure dispatch plus boxing per element per row — which is the
   * dominant cost of every pairwise similarity join at scale. These
-  * kernels are one tight primitive loop behind a codegen'd call.
+  * kernels are one tight primitive loop behind a codegen'd call
+  * (`dot_f32_native` / `l2sq_native` in [[GraftExtensions.kernels]],
+  * which passes the float/double flags).
   *
   * Bit-parity contract (pinned by ScalaCheck properties against the
   * composed spellings): elements are widened to double exactly like
@@ -55,61 +51,4 @@ object VectorKernelsUtil {
     }
     java.lang.Double.valueOf(acc)
   }
-}
-
-private[functions] trait VectorBinary extends BinaryExpression {
-  override def nullIntolerant: Boolean = true
-  // nullable even when both children are non-nullable: mismatched
-  // lengths and null ELEMENTS yield NULL. Without this override,
-  // nullSafeCodeGen's non-nullable branch never declares ev.isNull,
-  // the snippet below assigns to an undeclared variable, and every
-  // plan containing a kernel call silently falls back to interpreted
-  // projection — the exact cost these kernels exist to remove.
-  override def nullable: Boolean = true
-  override def dataType: DataType = DoubleType
-  protected def isF(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  protected def kernel: String // static method on VectorKernelsUtil
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    // fresh name per call site: several kernel calls can share one
-    // codegen'd method (q91 issues three in a single projection) and a
-    // fixed name would redeclare, failing javac into the interpreted
-    // fallback
-    val r = ctx.freshName("vecKernelR")
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      java.lang.Double $r = graft.functions.VectorKernelsUtil
-        .$kernel($a, $b, ${isF(left)}, ${isF(right)});
-      if ($r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = $r.doubleValue(); }
-    """)
-  }
-}
-
-/** `dot_f32_native(array, array)` → double. */
-case class DotProduct(left: Expression, right: Expression)
-    extends VectorBinary {
-  override protected def kernel: String = "dot"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorKernelsUtil.dot(a.asInstanceOf[ArrayData],
-      b.asInstanceOf[ArrayData], isF(left), isF(right))
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProduct =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "dot_f32"
-}
-
-/** `l2sq_native(array, array)` → double (squared L2 distance). */
-case class L2Squared(left: Expression, right: Expression)
-    extends VectorBinary {
-  override protected def kernel: String = "l2sq"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorKernelsUtil.l2sq(a.asInstanceOf[ArrayData],
-      b.asInstanceOf[ArrayData], isF(left), isF(right))
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): L2Squared =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "l2sq"
 }

@@ -1071,11 +1071,8 @@ object CorpusOps {
     val bloomBytes = snapshot
       .agg(expr("bloom_filter_agg(fp)").as("bf"))
       .head().getAs[Array[Byte]](0)
-    val bridge = org.apache.spark.sql.GraftPlanBridge
-    val mightContain = bridge.column(
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        bridge.expression(lit(bloomBytes)),
-        bridge.expression(col("fp"))))
+    val mightContain =
+      call_function("bloom_might_contain", lit(bloomBytes), col("fp"))
     // a NULL fingerprint probes to NULL, which would fail BOTH filters
     // below and silently drop the row — treat it as a suspect so the
     // exact join decides (NULL never matches there → counted as new,
@@ -2419,19 +2416,17 @@ object CorpusOps {
     .agg(sum(col("cnt")).cast("long").as("n"))
 
   /** Apply one broadcast (mx, my) merge row to every word via the
-    * native [[graft.functions.BpeMerge]] kernel (linear scan,
-    * codegen) — replaces the interpreted [[bpeFoldExpr]] +
+    * native `bpe_merge` kernel ([[graft.functions.BpeMergeUtil]],
+    * linear scan, codegen) — replaces the interpreted [[bpeFoldExpr]] +
     * [[bpeFinishExpr]] pair, which rebuilt the accumulator array per
     * symbol (O(n²) copies per word per round). Same LEFT-on-TRUE
     * degenerate-corpus convention: a null merge row is the identity. */
   private def bpeApplyMerge(words: DataFrame, top: DataFrame,
       keep: Seq[String]): DataFrame = {
-    val bridge = org.apache.spark.sql.GraftPlanBridge
     words
       .join(broadcast(top.select(col("mx"), col("my"))), lit(true), "left")
-      .withColumn("syms", bridge.column(graft.functions.BpeMerge(
-        bridge.expression(col("syms")), bridge.expression(col("mx")),
-        bridge.expression(col("my")))))
+      .withColumn("syms",
+        call_function("bpe_merge", col("syms"), col("mx"), col("my")))
       .select(keep.map(col): _*)
   }
 

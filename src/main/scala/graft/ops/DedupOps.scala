@@ -22,13 +22,9 @@ object DedupOps {
 
   /** Adds `shs` (token-3-gram shingle hashes, mod-reduced per combine
     * so a*x in MinHash never overflows Int64 even for high code
-    * points) via the native one-pass [[graft.functions.Shingles3]]
-    * kernel. */
-  private[graft] def withShingles(df: DataFrame): DataFrame = {
-    val bridge = org.apache.spark.sql.GraftPlanBridge
-    df.withColumn("shs", bridge.column(graft.functions.Shingles3(
-      bridge.expression(col("text")))))
-  }
+    * points) via the native one-pass `shingles3_native` kernel. */
+  private[graft] def withShingles(df: DataFrame): DataFrame =
+    df.withColumn("shs", call_function("shingles3_native", col("text")))
 
   /** The composed spelling of [[withShingles]] — kept as the parity
     * witness the native one-pass kernel is property-tested against.
@@ -155,10 +151,8 @@ object DedupOps {
     // native one-pass kernel: all four lane minima in a single walk of
     // the shingle array (the composed 4× array_min(transform(...))
     // spelling below re-walks it per lane, interpreted)
-    val bridge = org.apache.spark.sql.GraftPlanBridge
     base
-      .withColumn("mh", bridge.column(graft.functions.MinHash4(
-        bridge.expression(col("shs")))))
+      .withColumn("mh", call_function("minhash4_native", col("shs")))
       .select(col("doc_id"), col("mh").getItem(0).as("mh0"),
         col("mh").getItem(1).as("mh1"), col("mh").getItem(2).as("mh2"),
         col("mh").getItem(3).as("mh3"))
@@ -1039,15 +1033,12 @@ object DedupOps {
   private[ops] val WinnowW = 4
 
   /** Adds `sel` — the winnowed fingerprint set — to a shingled frame
-    * via the native one-pass [[graft.functions.Winnow4]] kernel.
+    * via the native one-pass `winnow4_native` kernel.
     * Entirely IN-ROW: window minima over the shingle array; docs with
     * fewer than W shingles contribute their global minimum (the
     * degenerate one-window case), empty docs select nothing. */
-  private[graft] def withWinnowed(base: DataFrame): DataFrame = {
-    val bridge = org.apache.spark.sql.GraftPlanBridge
-    base.withColumn("sel", bridge.column(graft.functions.Winnow4(
-      bridge.expression(col("shs")))))
-  }
+  private[graft] def withWinnowed(base: DataFrame): DataFrame =
+    base.withColumn("sel", call_function("winnow4_native", col("shs")))
 
   /** The composed spelling of [[withWinnowed]] — the ScalaCheck-pinned
     * parity witness of the native kernel. The CASE guard keeps
@@ -1157,8 +1148,8 @@ object DedupOps {
     * essentially only real replays (the suffix-array literature's
     * 50-token windows, scaled to these ~56-token docs). The window
     * hash is a composed slice-fold (O(K) per window, interpreted —
-    * fine at window-count = doc length; a ShinglesK native kernel is
-    * the 100 TB path, same as Shingles3's).
+    * fine at window-count = doc length; the `shinglesk_native` kernel
+    * is the 100 TB path, same as `shingles3_native`).
     *
     * 100 TB design: one fp-keyed exchange (postings, df-capped at
     * [[MaxShingleDf]] docs — the q58 bound), one pair-keyed exchange
@@ -1170,7 +1161,7 @@ object DedupOps {
 
   /** The composed spelling of the K-token window hash (K =
     * [[RunK]]) — kept as the parity witness the native
-    * [[graft.functions.ShinglesK]] kernel is property-tested against.
+    * `shinglesk_native` kernel is property-tested against.
     * A zip_with CHAIN over shifted slices, NOT slice(th, i, K) inside
     * a transform lambda: a lambda body referencing the derived `th`
     * column re-inlines the whole tokenize expression per ELEMENT
@@ -1206,10 +1197,9 @@ object DedupOps {
     * (pair, diagonal, island): start position + run length. */
   private def sharedRunIslands(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
-    val bridge = org.apache.spark.sql.GraftPlanBridge
     val base = docs
-      .withColumn("ws", bridge.column(graft.functions.ShinglesK(
-        bridge.expression(col("text")), RunK)))
+      .withColumn("ws", call_function("shinglesk_native", col("text"),
+        lit(RunK)))
     val occ = base
       .select($"doc_id", posexplode($"ws").as(Seq("p0", "fp")))
       .groupBy($"doc_id", $"fp")

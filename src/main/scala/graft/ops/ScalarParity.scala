@@ -24,7 +24,7 @@ object ScalarParity {
       .when(v === 1, regexp_replace(ds, "\\.", ","))          // EU comma
       .when(v === 2, concat(lit("$ "), ds))                   // currency
       .otherwise(concat(lit("("), ds, lit(")")))              // paren neg
-    // per-row UDF parse dominates scan cost → spread across cores
+    // per-row money parse dominates scan cost → spread across cores
     Tables.lineitem(s, d)
       .repartition(s.sparkContext.defaultParallelism)
       .select($"l_orderkey", $"l_linenumber",

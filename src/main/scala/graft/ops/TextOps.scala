@@ -164,10 +164,8 @@ object TextOps {
 
   /** [[fingerprintCol]] over an arbitrary string column — q122 keys
     * chunk-level dedup on the fingerprint of each chunk's text. */
-  private[graft] def fingerprintOf(c: Column): Column = {
-    val bridge = org.apache.spark.sql.GraftPlanBridge
-    bridge.column(graft.functions.Fingerprint64(bridge.expression(c)))
-  }
+  private[graft] def fingerprintOf(c: Column): Column =
+    call_function("fingerprint64_native", c)
 
   /** The composed higher-order spelling of [[fingerprintCol]] — kept
     * as the parity witness the native kernel is property-tested

@@ -23,7 +23,7 @@ object VectorOps {
 
   /** Left-fold dot product of two double-cast float arrays. */
   /** Dot product — the native codegen'd kernel
-    * ([[graft.functions.DotProduct]]); bit-equal to [[dotComposed]]
+    * (`dot_f32_native`, [[graft.functions.VectorKernelsUtil]]); bit-equal to [[dotComposed]]
     * (same element widening, same left-to-right accumulation), pinned
     * by an EngineProperties ScalaCheck property. */
   private def dot(a: String, b: String): String =

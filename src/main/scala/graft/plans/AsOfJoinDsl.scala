@@ -16,13 +16,6 @@ object GraftPlanBridge {
     spark.asInstanceOf[classic.SparkSession]
       .sessionState.conf.resolver
 
-  /** Wrap a raw Catalyst expression as a user-facing Column, and back
-    * (the constructors are private[sql] in Spark 4's split API). */
-  def column(e: catalyst.expressions.Expression): Column =
-    classic.ExpressionUtils.column(e)
-  def expression(c: Column): catalyst.expressions.Expression =
-    classic.ExpressionUtils.expression(c)
-
   /** Self-join attribute dedup for CUSTOM binary nodes: the analyzer's
     * `DeduplicateRelations` only rewrites node shapes it knows, so a
     * custom operator whose two children share lineage (both derived

@@ -780,7 +780,7 @@ object CorpusStreaming {
   }
 
   /** [[BandBucketProcessor]] wired to the intake stream: signature =
-    * the SAME native MinHash4 kernel as batch q56 (so batch indexes
+    * the SAME `minhash4_native` kernel as batch q56 (so batch indexes
     * and stream candidates interoperate), banded exactly like q57.
     * Docs with no shingles (null signature lanes) carry no LSH signal
     * and are filtered before keying. */
@@ -790,11 +790,9 @@ object CorpusStreaming {
     import docs.sparkSession.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     // same native kernel as minhashFrom, inlined to carry `ts` through
-    val bridge = org.apache.spark.sql.GraftPlanBridge
     val sig = graft.ops.DedupOps.withShingles(
         docs.toDF().select(col("doc_id"), col("ts"), col("text")))
-      .withColumn("mh", bridge.column(graft.functions.MinHash4(
-        bridge.expression(col("shs")))))
+      .withColumn("mh", call_function("minhash4_native", col("shs")))
       .select(col("doc_id"), col("ts"),
         col("mh").getItem(0).as("mh0"), col("mh").getItem(1).as("mh1"),
         col("mh").getItem(2).as("mh2"), col("mh").getItem(3).as("mh3"))

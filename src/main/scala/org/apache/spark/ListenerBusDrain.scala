@@ -6,3 +6,11 @@ package org.apache.spark
 object ListenerBusDrain {
   def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
+
+/** The SQL operators a stage ran: the distinct operation scopes of its
+  * RDDs (`Scan parquet …`, `WholeStageCodegen (n)`, `Exchange`), in RDD
+  * id order. Empty for RDDs built outside any scope. */
+object StageOperators {
+  def apply(info: scheduler.StageInfo): Seq[String] =
+    info.rddInfos.sortBy(_.id).flatMap(_.scope.map(_.name.trim)).distinct
+}

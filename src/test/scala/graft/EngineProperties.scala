@@ -199,21 +199,18 @@ object EngineProperties extends Properties("engine") {
     Prop.forAllNoShrink(Gen.listOfN(8, fpText)) { texts =>
       val s = spark
       import s.implicits._
-      val bridge = org.apache.spark.sql.GraftPlanBridge
       val df = texts.toDF("text")
       def arr(v: org.apache.spark.sql.DataFrame, c: String) =
         v.select(col(c)).collect().map(_.getSeq[Long](0).toList).toSeq
-      val native = arr(df.withColumn("ws",
-        bridge.column(graft.functions.ShinglesK(
-          bridge.expression(col("text")), graft.ops.DedupOps.RunK))), "ws")
+      val native = arr(df.withColumn("ws", call_function("shinglesk_native",
+        col("text"), lit(graft.ops.DedupOps.RunK))), "ws")
       val composed = arr(df
         .withColumn("th", expr(
           "transform(split(text, ' '), x -> CAST(ascii(x) * 131 + length(x) AS BIGINT))"))
         .withColumn("ws", expr(
           graft.ops.DedupOps.runWindowsComposedExpr)), "ws")
       val k3 = arr(df.withColumn("ws",
-        bridge.column(graft.functions.ShinglesK(
-          bridge.expression(col("text")), 3))), "ws")
+        call_function("shinglesk_native", col("text"), lit(3))), "ws")
       val sh3 = arr(graft.ops.DedupOps.withShingles(df)
         .withColumnRenamed("shs", "ws"), "ws")
       native == composed && k3 == sh3

@@ -1,11 +1,16 @@
 package graft
 
-import graft.functions.GraftExtensions
+import java.nio.file.Files
+
+import graft.functions.{Cleaning, GraftExtensions}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Native expression registration + codegen behavior. */
-class ExtensionsSpec extends AnyFunSuite {
+/** Kernel registration, null behaviour and codegen. */
+class ExtensionsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   lazy val spark: SparkSession = TestSession.spark
 
@@ -38,47 +43,69 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(df.collect().last.getLong(0) == 0L)
   }
 
-  test("strip_accents_native resolves, matches UDF semantics, codegens") {
+  /** One argument list per kernel, over the columns of the probe file
+    * written below. */
+  private val args = Map(
+    "strip_accents_native" -> "s", "parse_money_native" -> "s",
+    "simhash64_native" -> "h", "fingerprint64_native" -> "s",
+    "shingles3_native" -> "s", "shinglesk_native" -> "s, 4",
+    "minhash4_native" -> "h", "winnow4_native" -> "h",
+    "dot_f32_native" -> "f, d", "l2sq_native" -> "f, d",
+    "bpe_merge" -> "syms, 'a', 'b'")
+
+  // each kernel: resolves from SQL under its name, gives null for a
+  // null first argument, and runs inside whole-stage codegen over a
+  // parquet scan
+  test("every kernel resolves, propagates null and codegens") {
     val s = spark
     import s.implicits._
-    import org.apache.spark.sql.functions._
-    val df = Seq("Café Überraschung añejo", "Miércoles", null)
-      .toDF("t")
-      .select($"t", expr("strip_accents_native(t)").as("n"),
-        graft.functions.Cleaning.stripAccents($"t").as("u"))
-    val rows = df.collect()
-    assert(rows(0).getString(1) == "Cafe Uberraschung anejo")
-    assert(rows(1).getString(1) == "Miercoles")
-    assert(rows(2).isNullAt(1)) // null-intolerant → null in, null out
-    rows.filter(!_.isNullAt(1)).foreach(r =>
-      assert(r.getString(1) == r.getString(2))) // expression == UDF
-    // on a real source the projection stays inside whole-stage codegen
-    // (the local-relation case above folds to a LocalTableScan)
-    val scanDf = Tables.documents(spark, "/root/testdata/sf0.001")
-      .select(expr("strip_accents_native(text)").as("n"))
-    assert(scanDf.collect().forall(_.getString(0).nonEmpty))
-    // AQE finalizes the plan only after execution; "*(n)" marks a
-    // whole-stage-codegen stage containing the projection (the region
-    // NUMBER is not pinned — it shifted when Tables.t's scan fan-out
-    // became size-adaptive and the sf0.001 repartition disappeared)
-    assert("""\*\(\d+\) Project \[strip_accents\(text""".r
-      .findFirstIn(scanDf.queryExecution.executedPlan.toString)
-      .isDefined)
+    assert(args.keySet == GraftExtensions.kernels.map(_.name).toSet)
+    val dir = Files.createTempDirectory("kernels").toString + "/probe"
+    Seq((1L, Some("Café 1.234,56 a b"), Some(Seq(7L, 40L, 9L, 3L, 12L)),
+        Some(Seq(1f, 2f)), Some(Seq(0.5, 4.0)), Some(Seq("a", "b", "c"))),
+      (2L, None, None, None, None, None))
+      .toDF("id", "s", "h", "f", "d", "syms").coalesce(1)
+      .write.parquet(dir)
+    // a snippet that fails to compile throws instead of falling back
+    // to interpreted projection
+    TestSession.withConf("spark.sql.codegen.fallback" -> "false") {
+      GraftExtensions.kernels.foreach { k =>
+        val df = spark.read.parquet(dir)
+          .selectExpr("id", s"${k.name}(${args(k.name)})")
+        assert(df.columns(1).startsWith(s"${k.name}("), df.columns)
+        val out = df.collect().map(r => r.getLong(0) -> r.get(1)).toMap
+        assert(out(1L) != null, k.name)
+        assert(out(2L) == null, k.name) // null first argument → null
+        val codegened = collect(df.queryExecution.executedPlan) {
+          case w: WholeStageCodegenExec => w
+        }.exists(_.child.exists {
+          case p: ProjectExec => p.projectList.exists(_.exists {
+            case i: StaticInvoke =>
+              i.staticObject.getName.startsWith("graft.functions.")
+            case _ => false
+          })
+          case _ => false
+        })
+        assert(codegened, df.queryExecution.executedPlan)
+      }
+    }
   }
 
-  test("parse_money_native matches the UDF on the truth table + nulls") {
+  test("parse_money/strip_accents_native match the Scala functions") {
     val s = spark
     import s.implicits._
     import org.apache.spark.sql.functions._
     val cases = Seq("1,234.56", "1.234,56", "(1,234.56)", "$ 1 234,56",
-      "1.234", "1,234", "1.234.567", "12,34", "-42", "abc", "", null)
-    val df = cases.toDF("raw")
-      .select($"raw", expr("parse_money_native(raw)").as("n"),
-        graft.functions.Cleaning.parseMoney($"raw").as("u"))
+      "1.234", "1,234", "1.234.567", "12,34", "-42", "abc", "",
+      "Café Überraschung añejo", "Miércoles", null)
+    // a local relation: the optimizer evaluates the kernels interpreted
+    val df = cases.toDF("raw").select($"raw",
+      expr("parse_money_native(raw)"), expr("strip_accents_native(raw)"))
     df.collect().foreach { r =>
-      val n = if (r.isNullAt(1)) null else r.getDouble(1)
-      val u = if (r.isNullAt(2)) null else r.getDouble(2)
-      assert(n == u, s"raw=${r.getString(0)}: native=$n udf=$u")
+      val raw = r.getString(0)
+      val n = if (r.isNullAt(1)) None else Some(r.getDouble(1))
+      assert(n == Cleaning.parseMoneyFn(raw), s"raw=$raw")
+      assert(r.getString(2) == Cleaning.stripAccentsFn(raw), s"raw=$raw")
     }
   }
 }

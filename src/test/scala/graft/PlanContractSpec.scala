@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   ExchangeQueryStageExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
@@ -19,14 +19,16 @@ class PlanContractSpec extends AnyFunSuite {
   /** Final (AQE-resolved) plan string of a registered query: runs the
     * frame's OWN QueryExecution (a noop write would run a separate
     * one and leave this plan at `isFinalPlan=false`). */
-  private def plan(name: String): String = {
+  private def plan(name: String): String = finalPlan(name).toString
+
+  private def finalPlan(name: String): SparkPlan = {
     val df = SparkEntry.queries(name)(spark, sf)
     df.queryExecution.toRdd.foreachPartition(_ => ())
     df.queryExecution.executedPlan match {
       case aqe: AdaptiveSparkPlanExec =>
         assert(aqe.isFinalPlan, name)
-        aqe.executedPlan.toString
-      case static => static.toString
+        aqe.executedPlan
+      case static => static
     }
   }
 
@@ -34,6 +36,15 @@ class PlanContractSpec extends AnyFunSuite {
     val p = plan("q02_filter_project")
     assert(p.contains("PushedFilters: ["), p.take(2000))
     assert(!p.contains("PushedFilters: []"), p.take(2000))
+  }
+
+  test("q02: the scan reads exactly its six lineitem columns") {
+    val scans = finalPlan("q02_filter_project").collect {
+      case s: FileSourceScanExec => s.requiredSchema.fieldNames.toSet
+    }
+    assert(scans == Seq(Set("l_orderkey", "l_linenumber",
+      "l_extendedprice", "l_discount", "l_shipdate", "l_returnflag")),
+      scans)
   }
 
   test("q127: dims broadcast, date filter pushed, no cartesian") {

@@ -21,12 +21,13 @@ import java.nio.file.{Files, Paths}
   * Each query's entry also carries its 20 costliest stage groups at
   * the largest amplification (`stage_groups_x<hi>`, from [[Metrics]]):
   * per completed stage, the executor task time, shuffle read/write
-  * bytes, input bytes and task count, summed per callsite name so the
-  * same logical stage can be compared across amplifications. `growth`
-  * is a group's task time over its time at the next-largest
-  * amplification. A group whose task time grows ≫ linearly names the
-  * saturating structure; uniform mild growth across groups means
-  * constant-factor costs (GC, spill, scheduler), not a plan defect.
+  * bytes, input bytes and task count, summed per stage name (the
+  * operators the stage ran) so the same logical stage can be compared
+  * across amplifications. `growth` is a group's task time over its
+  * time at the next-largest amplification. A group whose task time
+  * grows ≫ linearly names the saturating structure; uniform mild
+  * growth across groups means constant-factor costs (GC, spill,
+  * scheduler), not a plan defect.
   *
   * Amplifier (pure Spark, fully deterministic — no RNG, no clock):
   * replica k of `documents` shifts every letter by k mod 26
@@ -552,7 +553,7 @@ object ScaleRehearsal {
         s"""${q("n_docs")}:{${nDocs.toSeq.sorted.map { case (a, c) => s"${q("x" + a)}:$c" }.mkString(",")}},""" +
         s"""${q("cpus")}:$cpus,""" +
         s"""${q("alpha_grading")}:${q(s"fit between x$aMid and x$aHi")},""" +
-        s"""${q("stage_grouping")}:${q(s"by callsite name; growth = " +
+        s"""${q("stage_grouping")}:${q(s"by operator name; growth = " +
           s"task-time x$aHi / x$aMid for the same group; linear would be " +
           s"${aHi.toDouble / aMid}")},""" +
         releaseJson +
