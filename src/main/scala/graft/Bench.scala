@@ -14,19 +14,14 @@ object Bench {
     // graft.Sessions — shared by every entry point
     val spark = Sessions.checked(cpus)
     spark.sparkContext.setLogLevel("WARN")
+    // optional SPARK_GRAFT_ONLY filter for focused perf iteration;
+    // absent = the full driver-visible suite
+    val selected = SparkEntry.selectedNames()
     // warm the session (parquet footer reads, codegen compiler) so the
     // first measured query isn't charged for JVM warmup
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    // optional comma-separated name filter for focused perf iteration
-    // (substring match); absent = the full driver-visible suite
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-    val selected = only match {
-      case Some(pats) =>
-        SparkEntry.queries.filter { case (n, _) => pats.exists(n.contains) }
-      case None => SparkEntry.queries
-    }
-    val results = selected.toSeq.sortBy(_._1).map {
+    val queries = SparkEntry.queries
+    val results = selected.map(n => n -> queries(n)).map {
       case (name, fn) =>
         val t0 = System.nanoTime()
         val ok =

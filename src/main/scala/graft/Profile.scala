@@ -8,7 +8,7 @@ package graft
   * compute vs scheduling. `SPARK_GRAFT_STAGES=k` also prints each
   * run's k stages with the most task time.
   * Usage: sbt "runMain graft.Profile q271 q262" (substring match,
-  * same contract as Bench's SPARK_GRAFT_ONLY).
+  * the SPARK_GRAFT_ONLY rule of [[SparkEntry.selectedNames]]).
   */
 object Profile {
   private def codegenMs(): (Long, Long) = {
@@ -27,10 +27,9 @@ object Profile {
     val metrics = new Metrics
     sc.addSparkListener(metrics)
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    val pats = args.toSeq
-    val selected = SparkEntry.queries
-      .filter { case (n, _) => pats.isEmpty || pats.exists(n.contains) }
-      .toSeq.sortBy(_._1)
+    val queries = SparkEntry.queries
+    val selected = SparkEntry.selectedNames(Some(args.mkString(",")))
+      .map(n => n -> queries(n))
     println(f"${"query"}%-34s ${"plan_s"}%7s ${"exec_s"}%7s " +
       f"${"jobs"}%5s ${"stg"}%4s ${"tasks"}%6s ${"taskT_s"}%8s " +
       f"${"cgen_s"}%7s ${"cgenN"}%6s ${"shW_MB"}%7s")

@@ -59,6 +59,10 @@ object Sessions {
     *   Hadoop conf. On a `local[N]` master those tasks run in the
     *   driver's JVM over the same disk, so the job buys nothing.
     *   Cluster sessions are not built by this recipe.
+    * - `spark.sql.legacy.parquet.nanosAsLong`: TIMESTAMP(NANOS)
+    *   parquet columns read as longs instead of failing the vectorized
+    *   reader; `Tables.events` converts them. A session conf set here
+    *   once, so reading a table never changes the caller's session.
     * - UI off: these are headless batch entry points.
     */
   def local(cpus: String): SparkSession.Builder =
@@ -67,6 +71,7 @@ object Sessions {
     } ++ Seq(
       "spark.sql.shuffle.partitions" -> cpus,
       "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       "spark.sql.sources.parallelPartitionDiscovery.threshold" ->
         Int.MaxValue.toString,
       "spark.ui.enabled" -> "false")).toMap)

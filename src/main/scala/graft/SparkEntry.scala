@@ -22,6 +22,22 @@ object SparkEntry {
       ops.DomainParity.queries ++ ops.CorpusOps.queries ++
       ops.Scd2.queries ++ ops.InsightOps.queries
 
+  /** The registry names the dev-loop filter selects: every name
+    * containing one of the comma-separated substrings in `only`
+    * (`SPARK_GRAFT_ONLY` for Bench, Verify and ScaleRehearsal, the
+    * arguments for Profile), sorted; all names when `only` is unset or
+    * blank. Throws naming each substring that matches no query, so a
+    * typo cannot pass for a clean, empty run. */
+  def selectedNames(only: Option[String] = sys.env.get("SPARK_GRAFT_ONLY"))
+      : Seq[String] = {
+    val all = queries.keys.toSeq.sorted
+    val pats = only.toSeq.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
+    val unmatched = pats.filterNot(p => all.exists(_.contains(p)))
+    require(unmatched.isEmpty,
+      s"no query matches ${unmatched.map(p => s"'$p'").mkString(", ")}")
+    if (pats.isEmpty) all else all.filter(n => pats.exists(n.contains))
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a rows-only check. */
   def oracleSql: Map[String, String] =

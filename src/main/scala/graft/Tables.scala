@@ -81,12 +81,12 @@ object Tables {
   def lineitem(s: SparkSession, d: String)  = t(s, d, "lineitem")
   /** events.parquet has shipped with two physical `ts` encodings across
     * testdata generations: TIMESTAMP(NANOS) (vectorized reader rejects it
-    * unless nanos are surfaced as long, then ns→us matches DuckDB's
-    * truncation) and plain TIMESTAMP(MICROS) (arrives as TIMESTAMP_NTZ).
-    * Normalize both to session-zone TimestampType (UTC everywhere here)
-    * so every downstream query sees one stable type. */
+    * unless nanos are surfaced as long — the session recipe sets
+    * `spark.sql.legacy.parquet.nanosAsLong` — then ns→us matches
+    * DuckDB's truncation) and plain TIMESTAMP(MICROS) (arrives as
+    * TIMESTAMP_NTZ). Normalize both to session-zone TimestampType (UTC
+    * everywhere here) so every downstream query sees one stable type. */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
     val raw = t(s, d, "events")

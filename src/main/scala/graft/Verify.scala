@@ -9,14 +9,9 @@ object Verify {
     val spark = Sessions.checked(cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // dev loop: SPARK_GRAFT_ONLY=q53,q55 restricts the dump — SUBSTRING
-    // match, the same contract as Bench (exact-name matching here made
-    // a Bench-style filter select nothing and read as a clean run);
+    // dev loop: SPARK_GRAFT_ONLY=q53,q55 restricts the dump; the
     // driver leaves it unset and gets the full registry
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    def keep(name: String): Boolean =
-      only.forall(_.exists(name.contains))
+    val keep = SparkEntry.selectedNames().toSet
     val selected = SparkEntry.queries
       .filter { case (name, _) => keep(name) }
     selected.foreach { case (name, fn) =>

@@ -1389,7 +1389,14 @@ object CorpusOps {
     * signal census — so the expensive scan+tokenize and the three
     * candidate generations each run exactly once. The CC loop
     * shuffles only (doc_id, comp) pairs — never text. */
-  val q98UnionDupClusters: Q = (s, d) => {
+  val q98UnionDupClusters: Q = (s, d) =>
+    unionDupClusters(s, d, VectorOps.q64CosineNearDup(s, d)
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")))
+
+  /** The union-of-evidence cluster census shared by q98 and q276 over
+    * the two text lanes and the caller's `embEdges` (doc_a, doc_b). */
+  private def unionDupClusters(s: SparkSession, d: String,
+                               embEdges: => DataFrame): DataFrame = {
     val shared = DedupOps.sharedTextSignals(s, d)
     // cluster-grain simhash edges: same components/incidence as the
     // all-pairs census in linear volume (a boilerplate clique of m
@@ -1401,9 +1408,7 @@ object CorpusOps {
       .select(col("doc_a"), col("doc_b"), lit("simhash").as("kind"))
     val jac = DedupOps.jaccardFrom(shared)
       .select(col("doc_a"), col("doc_b"), lit("jaccard").as("kind"))
-    val emb = VectorOps.q64CosineNearDup(s, d)
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
-        lit("embedding").as("kind"))
+    val emb = embEdges.withColumn("kind", lit("embedding"))
     val ev = sim.unionByName(jac).unionByName(emb).localCheckpoint(eager = false)
     val labels = connectedComponents(
       ev.select(col("doc_a").as("src"), col("doc_b").as("dst")).distinct())
@@ -1467,32 +1472,11 @@ object CorpusOps {
     * tokenize runs once via `sharedTextSignals`; the union is
     * checkpointed once and consumed by both the CC loop and the
     * signal census; the CC loop shuffles only (doc_id, comp). */
-  val q276UnionDupClustersKnn: Q = (s, d) => {
-    val shared = DedupOps.sharedTextSignals(s, d)
-    val sim = DedupOps.simhashClusterEdges(DedupOps.simhashFrom(shared))
-      .select(col("doc_a"), col("doc_b"), lit("simhash").as("kind"))
-    val jac = DedupOps.jaccardFrom(shared)
-      .select(col("doc_a"), col("doc_b"), lit("jaccard").as("kind"))
+  val q276UnionDupClustersKnn: Q = (s, d) =>
     // directed top-3 edges; CC symmetrizes and the kinds census only
     // reads DISTINCT kind per cluster, so orientation is immaterial
-    val emb = VectorOps.knnEdges(s, d)
-      .select(col("src").as("doc_a"), col("dst").as("doc_b"),
-        lit("embedding").as("kind"))
-    val ev = sim.unionByName(jac).unionByName(emb).localCheckpoint(eager = false)
-    val labels = connectedComponents(
-      ev.select(col("doc_a").as("src"), col("doc_b").as("dst")).distinct())
-    val sizes = labels.groupBy(col("comp").as("cluster_id"))
-      .agg(count(lit(1)).as("cluster_size"))
-    val kinds = ev
-      .join(labels.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"))
-      .groupBy(col("comp").as("cluster_id"))
-      .agg(countDistinct(col("kind")).as("n_signals"))
-    labels.select(col("doc_id"), col("comp").as("cluster_id"))
-      .join(sizes, Seq("cluster_id"))
-      .join(kinds, Seq("cluster_id"))
-      .select(col("doc_id"), col("cluster_id"),
-        col("cluster_size"), col("n_signals"))
-  }
+    unionDupClusters(s, d, VectorOps.knnEdges(s, d)
+      .select(col("src").as("doc_a"), col("dst").as("doc_b")))
   val o276: String = s"""
     WITH RECURSIVE
     sim AS MATERIALIZED (${DedupOps.o60}),
@@ -2430,37 +2414,50 @@ object CorpusOps {
       .select(keep.map(col): _*)
   }
 
-  val q223BpeTrain3: Q = (s, d) => {
-    import s.implicits._
-    val words0 = Tables.documents(s, d)
-      .select(explode(split($"text", " ")).as("w"))
-      .filter(length($"w") > 0)
-      .groupBy($"w").agg(count(lit(1)).as("cnt"))
+  /** The trainer's starting vocabulary: the word census `words`
+    * (w, cnt, ...) with each word split into single-character `syms`,
+    * projected to `keep` + syms. Checkpointed: each round's argmax
+    * action would otherwise re-scan and re-tokenize the corpus
+    * (shuffle reuse does not span jobs) — the census must collapse
+    * the corpus ONCE. */
+  private def bpeVocab(words: DataFrame, keep: String*): DataFrame =
+    words
       .withColumn("syms", expr(
         "transform(sequence(1, length(w)), i -> substring(w, i, 1))"))
-      .select($"cnt", $"syms")
-      // checkpointed: each round's eager argmax action would otherwise
-      // re-scan and re-tokenize the corpus (shuffle reuse does not
-      // span jobs) — the census must collapse the corpus ONCE
+      .select((keep :+ "syms").map(col): _*)
       .localCheckpoint(eager = false)
-    def mergeRound(words: DataFrame, r: Int): (DataFrame, DataFrame) = {
-      val top = bpePairCensus(words)
-        .orderBy($"n".desc, $"mx".asc, $"my".asc).limit(1)
-        .select(lit(r.toLong).as("round"), $"mx", $"my", $"n")
-        .localCheckpoint(eager = false) // single row; feeds the report AND the merge
-      // LEFT join on TRUE (not crossJoin): a degenerate corpus whose
-      // pair census is empty must leave the vocabulary UNCHANGED
-      // (null mx never matches inside the merge), not empty it —
-      // mirrored by the LEFT JOIN top$k ON TRUE in bpeRoundSql
-      val merged = bpeApplyMerge(words, top, Seq("cnt", "syms"))
-      (top, merged)
-    }
-    val (t1, w1) = mergeRound(words0, 1)
-    val (t2, w2) = mergeRound(w1, 2)
-    val (t3, _) = mergeRound(w2, 3)
-    t1.unionByName(t2).unionByName(t3)
-      .select($"round", $"mx", $"my",
-        concat($"mx", $"my").as("merged"), $"n")
+
+  /** [[bpeVocab]] over the corpus's whitespace-token census. */
+  private def bpeCorpusVocab(s: SparkSession, d: String): DataFrame =
+    bpeVocab(Tables.documents(s, d)
+      .select(explode(split(col("text"), " ")).as("w"))
+      .filter(length(col("w")) > 0)
+      .groupBy(col("w")).agg(count(lit(1)).as("cnt")), "cnt")
+
+  /** Round `r`'s merge over `words`: the most frequent adjacent pair
+    * ((n desc, mx, my) tie-break) as one (round, mx, my, n) row, none
+    * when no word has two symbols. Checkpointed: the single row feeds
+    * the merge-table report AND the broadcast merge. */
+  private def bpeTopMerge(words: DataFrame, r: Int): DataFrame =
+    bpePairCensus(words)
+      .orderBy(col("n").desc, col("mx").asc, col("my").asc).limit(1)
+      .select(lit(r.toLong).as("round"), col("mx"), col("my"), col("n"))
+      .localCheckpoint(eager = false)
+
+  /** The merge-table report (round, mx, my, merged, n) over the
+    * per-round [[bpeTopMerge]] rows. */
+  private def bpeMergeTable(tops: Seq[DataFrame]): DataFrame =
+    tops.reduce(_ unionByName _)
+      .select(col("round"), col("mx"), col("my"),
+        concat(col("mx"), col("my")).as("merged"), col("n"))
+
+  val q223BpeTrain3: Q = (s, d) => {
+    val words0 = bpeCorpusVocab(s, d)
+    val t1 = bpeTopMerge(words0, 1)
+    val w1 = bpeApplyMerge(words0, t1, Seq("cnt", "syms"))
+    val t2 = bpeTopMerge(w1, 2)
+    val t3 = bpeTopMerge(bpeApplyMerge(w1, t2, Seq("cnt", "syms")), 3)
+    bpeMergeTable(Seq(t1, t2, t3))
   }
   /** One DuckDB BPE round (k): pair census over words{k-1} → top
     * merge top$k → greedy-leftmost application via the islands
@@ -2554,21 +2551,11 @@ object CorpusOps {
       .filter(length($"w") > 0)
       .groupBy($"lang", $"w").agg(count(lit(1)).as("cnt"))
       .localCheckpoint(eager = false)
-    val words0 = langw.groupBy($"w")
-      .agg(sum($"cnt").cast("long").as("cnt"))
-      .withColumn("syms", expr(
-        "transform(sequence(1, length(w)), i -> substring(w, i, 1))"))
-      .select($"w", $"cnt", $"syms")
-      .localCheckpoint(eager = false)
-    def round(words: DataFrame): DataFrame = {
-      val top = bpePairCensus(words)
-        .orderBy($"n".desc, $"mx".asc, $"my".asc).limit(1)
-        .localCheckpoint(eager = false) // single row; broadcast into the merge
-      // LEFT on TRUE: q223's degenerate-corpus convention — an empty
-      // merge census must be a no-op, not empty the vocabulary
-      bpeApplyMerge(words, top, Seq("w", "cnt", "syms"))
+    val words0 = bpeVocab(langw.groupBy($"w")
+      .agg(sum($"cnt").cast("long").as("cnt")), "w", "cnt")
+    val w3 = (1 to 3).foldLeft(words0) { (words, r) =>
+      bpeApplyMerge(words, bpeTopMerge(words, r), Seq("w", "cnt", "syms"))
     }
-    val w3 = round(round(round(words0)))
     langw
       .join(w3.select($"w", size($"syms").cast("long").as("n_syms")),
         Seq("w"))
@@ -4480,32 +4467,14 @@ object CorpusOps {
     * row per round, per-round checkpoints for flat lineage). */
   private def bpeDeepTrained(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
-    import s.implicits._
-    val words0 = Tables.documents(s, d)
-      .select(explode(split($"text", " ")).as("w"))
-      .filter(length($"w") > 0)
-      .groupBy($"w").agg(count(lit(1)).as("cnt"))
-      .withColumn("syms", expr(
-        "transform(sequence(1, length(w)), i -> substring(w, i, 1))"))
-      .select($"cnt", $"syms")
-      .localCheckpoint(eager = false)
-    var words = words0
-    val tops = Seq.newBuilder[DataFrame]
-    for (r <- 1 to DeepBpeRounds) {
-      val top = bpePairCensus(words)
-        .orderBy($"n".desc, $"mx".asc, $"my".asc).limit(1)
-        .select(lit(r.toLong).as("round"), $"mx", $"my", $"n")
-        .localCheckpoint(eager = false)
-      // LEFT on TRUE: q223's degenerate-corpus convention — an empty
-      // merge census must be a no-op, not empty the vocabulary
+    var words = bpeCorpusVocab(s, d)
+    val tops = (1 to DeepBpeRounds).map { r =>
+      val top = bpeTopMerge(words, r)
       words = bpeApplyMerge(words, top, Seq("cnt", "syms"))
         .localCheckpoint(eager = false)
-      tops += top
+      top
     }
-    val merges = tops.result().reduce(_ unionByName _)
-      .select($"round", $"mx", $"my",
-        concat($"mx", $"my").as("merged"), $"n")
-    (merges, words)
+    (bpeMergeTable(tops), words)
   }
   val o245: String = s"""
     WITH $bpeWords0Sql,
@@ -4702,26 +4671,14 @@ object CorpusOps {
     * merge row, checkpointed flat lineage); convergence adds one
     * driver-side single-row read per round. */
   val q263BpeConvergedTrain: Q = (s, d) => {
-    import s.implicits._
-    val words0 = Tables.documents(s, d)
-      .select(explode(split($"text", " ")).as("w"))
-      .filter(length($"w") > 0)
-      .groupBy($"w").agg(count(lit(1)).as("cnt"))
-      .withColumn("syms", expr(
-        "transform(sequence(1, length(w)), i -> substring(w, i, 1))"))
-      .select($"cnt", $"syms")
-      .localCheckpoint(eager = false)
-    var words = words0
+    var words = bpeCorpusVocab(s, d)
     var lastTop: DataFrame = null
     val tops = Seq.newBuilder[DataFrame]
     var emitted = 0
     var converged = false
     var r = 1
     while (!converged && r <= DeepBpeRounds) {
-      val top = bpePairCensus(words)
-        .orderBy($"n".desc, $"mx".asc, $"my".asc).limit(1)
-        .select(lit(r.toLong).as("round"), $"mx", $"my", $"n")
-        .localCheckpoint(eager = false)
+      val top = bpeTopMerge(words, r)
       lastTop = top
       // the convergence probe: one ≤1-row driver read per round
       val head = top.collect()
@@ -4736,11 +4693,8 @@ object CorpusOps {
         r += 1
       }
     }
-    val all =
-      if (emitted > 0) tops.result().reduce(_ unionByName _)
-      else lastTop.limit(0) // degenerate corpus: empty, right schema
-    all.select($"round", $"mx", $"my",
-      concat($"mx", $"my").as("merged"), $"n")
+    // degenerate corpus: empty, right schema
+    bpeMergeTable(if (emitted > 0) tops.result() else Seq(lastTop.limit(0)))
   }
   val o263: String = s"""
     WITH $bpeWords0Sql,

@@ -269,27 +269,23 @@ object DedupOps {
   private[graft] def jaccardPairsOver(docs: DataFrame): DataFrame =
     jaccardFrom(withShingles(docs))
 
-  /** Pair derivation from an already-shingled frame (see
-    * [[minhashFrom]]). `minJ` is the report threshold — q58 and every
-    * near-dup consumer keep the 0.5 default; q266 lowers it to 0.0 to
-    * observe the FULL candidate-pair similarity population (the
-    * operating-point sweep needs the below-threshold mass too; the
-    * candidate set stays df-cap bounded either way). */
-  private[ops] def jaccardFrom(base: DataFrame,
-                               minJ: Double = 0.5): DataFrame = {
-    val s = base.sparkSession
+  /** Posting-list pair census over (doc_id, key) rows — q58's layout,
+    * shared by q58, q174 and q208: per candidate pair (doc_a < doc_b)
+    * the shared-key count `i` and both docs' key counts `na`/`nb`,
+    * all counted over df-capped keys so both sides of a ratio see
+    * the same sets. */
+  private def postingPairs(docKeys: DataFrame): DataFrame = {
+    val s = docKeys.sparkSession
     import s.implicits._
-    val exploded = base
-      .select($"doc_id", explode(array_distinct($"shs")).as("sh"))
-    // one exchange on the shingle: df cap = size filter on the
-    // aggregated posting list (the hot shingle skews no join — its
-    // oversized row is dropped right after the aggregate)
-    val postings = exploded.groupBy($"sh")
+    // one exchange on the key: df cap = size filter on the aggregated
+    // posting list (the hot key skews no join — its oversized row is
+    // dropped right after the aggregate)
+    val postings = docKeys.groupBy(col(docKeys.columns(1)))
       .agg(collect_list($"doc_id").as("docs"))
       .filter(size($"docs") <= MaxShingleDf)
       // two consumers (size census + pair generation): ReuseExchange
       // dedupes the shuffle but the collect_list FINAL aggregate — the
-      // expensive half — re-ran per consumer (the q208 convention)
+      // expensive half — re-ran per consumer
       .localCheckpoint(eager = false)
     val sizes = postings
       .select(explode($"docs").as("doc_id"))
@@ -302,14 +298,26 @@ object DedupOps {
     // whole-stage codegen (no interpreted lambdas, no per-pair struct
     // allocs, no slice copies), emitting the identical pair multiset.
     // size ≥ 2 makes both sequence() calls ascending-safe.
-    val pairs = pairExplode(
-        postings.withColumn("ds", sort_array($"docs")), "ds")
+    pairExplode(postings.withColumn("ds", sort_array($"docs")), "ds")
       .select($"__pa".as("doc_a"), $"__pb".as("doc_b"))
-    pairs
       .groupBy($"doc_a", $"doc_b")
       .agg(count(lit(1)).as("i"))
       .join(sizes.select($"doc_id".as("doc_a"), $"n".as("na")), Seq("doc_a"))
       .join(sizes.select($"doc_id".as("doc_b"), $"n".as("nb")), Seq("doc_b"))
+  }
+
+  /** Pair derivation from an already-shingled frame (see
+    * [[minhashFrom]]). `minJ` is the report threshold — q58 and every
+    * near-dup consumer keep the 0.5 default; q266 lowers it to 0.0 to
+    * observe the FULL candidate-pair similarity population (the
+    * operating-point sweep needs the below-threshold mass too; the
+    * candidate set stays df-cap bounded either way). */
+  private[ops] def jaccardFrom(base: DataFrame,
+                               minJ: Double = 0.5): DataFrame = {
+    val s = base.sparkSession
+    import s.implicits._
+    postingPairs(base
+      .select($"doc_id", explode(array_distinct($"shs")).as("sh")))
       .withColumn("jaccard",
         $"i".cast("double") / ($"na" + $"nb" - $"i").cast("double"))
       .filter($"jaccard" >= minJ)
@@ -366,26 +374,8 @@ object DedupOps {
       .withColumn("doc_id", $"doc_id" + lit(4L << 40))
       .withColumn("text",
         expr("substring(text, 1, CAST(n_chars DIV 2 AS INT))"))
-    val exploded = withShingles(base.unionByName(replay))
-      .select($"doc_id", explode(array_distinct($"shs")).as("sh"))
-    val postings = exploded.groupBy($"sh")
-      .agg(collect_list($"doc_id").as("docs"))
-      .filter(size($"docs") <= MaxShingleDf)
-      // two consumers (size census + pair generation): ReuseExchange
-      // dedupes the shuffle but the collect_list FINAL aggregate — the
-      // expensive half — re-ran per consumer (the q208 convention)
-      .localCheckpoint(eager = false)
-    val sizes = postings
-      .select(explode($"docs").as("doc_id"))
-      .groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    val pairs = pairExplode(
-        postings.withColumn("ds", sort_array($"docs")), "ds")
-      .select($"__pa".as("doc_a"), $"__pb".as("doc_b"))
-    pairs
-      .groupBy($"doc_a", $"doc_b")
-      .agg(count(lit(1)).as("i"))
-      .join(sizes.select($"doc_id".as("doc_a"), $"n".as("na")), Seq("doc_a"))
-      .join(sizes.select($"doc_id".as("doc_b"), $"n".as("nb")), Seq("doc_b"))
+    postingPairs(withShingles(base.unionByName(replay))
+        .select($"doc_id", explode(array_distinct($"shs")).as("sh")))
       .withColumn("containment",
         $"i".cast("double") / least($"na", $"nb").cast("double"))
       .filter($"containment" >= 0.9)
@@ -1068,32 +1058,12 @@ object DedupOps {
     import s.implicits._
     val base = withWinnowed(withShingles(
       Tables.documents(s, d).select($"doc_id", $"text")))
-    val exploded = base.select($"doc_id", explode($"sel").as("fp"))
-    // checkpointed: feeds both the size census (joined twice) and the
-    // pair path — without it the scan+shingle+winnow subtree executes
-    // once per consumer (the q60/q157 groups convention)
-    val postings = exploded.groupBy($"fp")
-      .agg(collect_list($"doc_id").as("docs"))
-      .filter(size($"docs") <= MaxShingleDf)
-      .localCheckpoint(eager = false)
-    val sizes = postings
-      .select(explode($"docs").as("doc_id"))
-      .groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    val pairs = pairExplode(
-        postings.withColumn("ds", sort_array($"docs")), "ds")
-      .select($"__pa".as("doc_a"), $"__pb".as("doc_b"))
-    pairs
-      .groupBy($"doc_a", $"doc_b")
-      .agg(count(lit(1)).as("n_shared"))
-      .filter($"n_shared" >= 2)
-      .join(sizes.select($"doc_id".as("doc_a"), $"n".as("sel_a")),
-        Seq("doc_a"))
-      .join(sizes.select($"doc_id".as("doc_b"), $"n".as("sel_b")),
-        Seq("doc_b"))
+    postingPairs(base.select($"doc_id", explode($"sel").as("fp")))
+      .filter($"i" >= 2)
+      .select($"doc_a", $"doc_b", $"i".as("n_shared"), $"na".as("sel_a"),
+        $"nb".as("sel_b"))
       .withColumn("span_containment", $"n_shared".cast("double") /
         least($"sel_a", $"sel_b").cast("double"))
-      .select($"doc_a", $"doc_b", $"n_shared", $"sel_a", $"sel_b",
-        $"span_containment")
   }
   val o208: String = s"""
     WITH selb AS (

@@ -36,23 +36,28 @@ object EventOps {
     GROUP BY event_type"""
 
   // ---------------------------------------------------- sessionization
-  /** Batch sessionization (the streaming module's gap logic as a
-    * window query): per user, a new session starts where the gap from
-    * the previous event exceeds 30 minutes; session id = running count
-    * of starts; one row per session. */
+  /** `events` plus `session_id`: per user, in (ts, event_id) order, a
+    * new session starts where the gap from the previous event exceeds
+    * 30 minutes (the streaming module's gap rule as a window query);
+    * the id is the running count of starts. */
+  private[ops] def sessionized(events: DataFrame): DataFrame = {
+    val byUser = Window.partitionBy(col("user_id"))
+      .orderBy(col("ts"), col("event_id"))
+    events
+      .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
+      .withColumn("new_session",
+        when(col("prev_ts").isNull ||
+          unix_micros(col("ts")) - unix_micros(col("prev_ts"))
+            > 1800L * 1000000L, 1L).otherwise(0L))
+      .withColumn("session_id", sum(col("new_session")).over(
+        byUser.rowsBetween(Window.unboundedPreceding, 0)))
+  }
+
+  /** Batch sessionization: [[sessionized]] events, one row per
+    * session. */
   val q78SessionizeBatch: Q = (s, d) => {
     import s.implicits._
-    val byUser = Window.partitionBy($"user_id")
-      .orderBy($"ts", $"event_id")
-    val sess = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    Tables.events(s, d)
-      .withColumn("prev_ts", lag($"ts", 1).over(byUser))
-      .withColumn("new_session",
-        when($"prev_ts".isNull ||
-          unix_micros($"ts") - unix_micros($"prev_ts") > 1800L * 1000000L,
-          1L).otherwise(0L))
-      .withColumn("session_id", sum($"new_session").over(sess))
+    sessionized(Tables.events(s, d))
       .groupBy($"user_id", $"session_id")
       .agg(count(lit(1)).as("n_events"),
         date_format(min($"ts"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
@@ -429,17 +434,7 @@ object EventOps {
     * by the gap rule), never per user history. */
   val q130SessionSeq: Q = (s, d) => {
     import s.implicits._
-    val byUser = Window.partitionBy($"user_id")
-      .orderBy($"ts", $"event_id")
-    val sess = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    Tables.events(s, d)
-      .withColumn("prev_ts", lag($"ts", 1).over(byUser))
-      .withColumn("new_session",
-        when($"prev_ts".isNull ||
-          unix_micros($"ts") - unix_micros($"prev_ts") > 1800L * 1000000L,
-          1L).otherwise(0L))
-      .withColumn("session_id", sum($"new_session").over(sess))
+    sessionized(Tables.events(s, d))
       .groupBy($"user_id", $"session_id")
       .agg(count(lit(1)).as("n_events"),
         array_join(expr(
@@ -598,17 +593,7 @@ object EventOps {
     * both engines. */
   val q137TypeCooccurrence: Q = (s, d) => {
     import s.implicits._
-    val byUser = Window.partitionBy($"user_id")
-      .orderBy($"ts", $"event_id")
-    val sess = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val st = Tables.events(s, d)
-      .withColumn("prev_ts", lag($"ts", 1).over(byUser))
-      .withColumn("new_session",
-        when($"prev_ts".isNull ||
-          unix_micros($"ts") - unix_micros($"prev_ts") > 1800L * 1000000L,
-          1L).otherwise(0L))
-      .withColumn("session_id", sum($"new_session").over(sess))
+    val st = sessionized(Tables.events(s, d))
       .select($"user_id", $"session_id", $"event_type").distinct()
     val sets = st.groupBy($"user_id", $"session_id")
       .agg(array_sort(collect_set($"event_type")).as("types"))

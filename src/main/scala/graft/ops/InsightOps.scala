@@ -1134,16 +1134,7 @@ object InsightOps {
     * bucket labels are fixed cuts; one keyed window + two censuses. */
   val q205SessionShape: Q = (s, d) => {
     import s.implicits._
-    val byUser = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-    val sess = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val sessions = Tables.events(s, d)
-      .withColumn("prev_ts", lag($"ts", 1).over(byUser))
-      .withColumn("new_session",
-        when($"prev_ts".isNull ||
-          unix_micros($"ts") - unix_micros($"prev_ts") > 1800L * 1000000L,
-          1L).otherwise(0L))
-      .withColumn("session_id", sum($"new_session").over(sess))
+    val sessions = EventOps.sessionized(Tables.events(s, d))
       .groupBy($"user_id", $"session_id")
       .agg(count(lit(1)).as("n_events"),
         ((max(unix_micros($"ts")) - min(unix_micros($"ts")))

@@ -457,12 +457,18 @@ object Relational {
     * it; a production profiler at petabyte scale swaps them for HLL
     * sketches and keeps everything else identical. The final explode
     * is over one row. */
-  val q128TableProfile: Q = (s, d) => {
-    val li = Tables.lineitem(s, d)
+  val q128TableProfile: Q = (s, d) =>
+    tableProfile(Tables.lineitem(s, d), countDistinct(_), "n_distinct")
+
+  /** The profile body shared by q128 and q155: one aggregate pass
+    * over [[ProfileCols]] with `distinct` as the per-column distinct
+    * measure (reported as `distinctName`), unpivoted in-row. */
+  private def tableProfile(li: DataFrame, distinct: Column => Column,
+                           distinctName: String): DataFrame = {
     val aggs = ProfileCols.flatMap { case (c, isNum) =>
       Seq(
         sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}__nulls"),
-        countDistinct(col(c)).as(s"${c}__dist"),
+        distinct(col(c)).as(s"${c}__dist"),
         (if (isNum) min(col(c)).cast("double") else lit(null).cast("double"))
           .as(s"${c}__min"),
         (if (isNum) max(col(c)).cast("double") else lit(null).cast("double"))
@@ -470,13 +476,13 @@ object Relational {
     }
     val rows = ProfileCols.map { case (c, _) =>
       s"""named_struct('column_name', '$c',
-            'n_nulls', ${c}__nulls, 'n_distinct', ${c}__dist,
+            'n_nulls', ${c}__nulls, '$distinctName', ${c}__dist,
             'min_num', ${c}__min, 'max_num', ${c}__max)"""
     }.mkString("array(", ", ", ")")
     li.agg(aggs.head, aggs.tail: _*)
       .select(explode(expr(rows)).as("p"))
       .select(col("p.column_name"), col("p.n_nulls"),
-        col("p.n_distinct"), col("p.min_num"), col("p.max_num"))
+        col(s"p.$distinctName"), col("p.min_num"), col("p.max_num"))
   }
   val o128: String = ProfileCols.map { case (c, isNum) =>
     val mn = if (isNum) s"CAST(MIN($c) AS DOUBLE)" else "CAST(NULL AS DOUBLE)"
@@ -501,27 +507,9 @@ object Relational {
     * DuckDB oracle row (driver records a rows-only check);
     * QueriesSpec pins the ≤5%-per-column relative error against the
     * exact counts and PlanContractSpec pins the Expand-free plan. */
-  val q155TableProfileSketch: Q = (s, d) => {
-    val li = Tables.lineitem(s, d)
-    val aggs = ProfileCols.flatMap { case (c, isNum) =>
-      Seq(
-        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}__nulls"),
-        approx_count_distinct(col(c)).as(s"${c}__dist"),
-        (if (isNum) min(col(c)).cast("double") else lit(null).cast("double"))
-          .as(s"${c}__min"),
-        (if (isNum) max(col(c)).cast("double") else lit(null).cast("double"))
-          .as(s"${c}__max"))
-    }
-    val rows = ProfileCols.map { case (c, _) =>
-      s"""named_struct('column_name', '$c',
-            'n_nulls', ${c}__nulls, 'n_distinct_est', ${c}__dist,
-            'min_num', ${c}__min, 'max_num', ${c}__max)"""
-    }.mkString("array(", ", ", ")")
-    li.agg(aggs.head, aggs.tail: _*)
-      .select(explode(expr(rows)).as("p"))
-      .select(col("p.column_name"), col("p.n_nulls"),
-        col("p.n_distinct_est"), col("p.min_num"), col("p.max_num"))
-  }
+  val q155TableProfileSketch: Q = (s, d) =>
+    tableProfile(Tables.lineitem(s, d), approx_count_distinct(_),
+      "n_distinct_est")
 
   // ------------------------------------------------------ CDC apply
   /** Change-data-capture apply: last-writer-wins merge of an

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.streaming.VersionedStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -74,69 +75,30 @@ object Scd2 {
   /** STREAMING dimension maintenance: each micro-batch is a FULL
     * snapshot of the dimension source (CDC-style partial batches would
     * wrongly close absent keys — the caller owns that contract), and
-    * `foreachBatch` folds it into the history with [[merge]].
-    *
-    * Storage is VERSION-ONLY: batch `id` commits `v<id>` and nothing
-    * else — no "current" copy to swap (a plain-parquet overwrite swap
-    * is delete-then-write, and a crash inside that window would lose
-    * the history). Readers resolve the latest committed version via
-    * [[readDim]]; recovery after ANY crash is "read the newest v
-    * directory", and a crash-replay of a batch regenerates the same
-    * `v<id>` — idempotent by batch id like the intake sink. Versions
-    * older than `keepVersions` behind are pruned after each commit.
-    * On a transactional table format this whole body becomes one
-    * MERGE INTO; plain parquet shows the logic. */
+    * `foreachBatch` folds it into the history with [[merge]], one
+    * [[graft.streaming.VersionedStore]] commit per batch: recovery
+    * after any crash is "read the newest committed version", and a
+    * crash-replay of a batch regenerates the same version. */
   def maintainDim(snapshots: DataFrame, dimDir: String,
                   checkpointDir: String, key: String,
                   tracked: Seq[String],
-                  effectiveOf: Long => String,
-                  keepVersions: Int = 3)
+                  effectiveOf: Long => String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    snapshots.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val cur = latestVersion(dimDir) match {
-          case Some(v) => spark.read.parquet(s"$dimDir/v$v")
-          case None => // genuinely no history yet: empty output schema
-            batch.select((col(key) +: tracked.map(col)): _*)
-              .withColumn("valid_from", lit(null).cast("string"))
-              .withColumn("valid_to", lit(null).cast("string"))
-              .limit(0)
-        }
+    VersionedStore.maintain(snapshots, dimDir, checkpointDir) {
+      (batch, prev, batchId) =>
+        val cur = prev.getOrElse( // no history yet: empty output schema
+          batch.select((col(key) +: tracked.map(col)): _*)
+            .withColumn("valid_from", lit(null).cast("string"))
+            .withColumn("valid_to", lit(null).cast("string"))
+            .limit(0))
         merge(cur, batch, key, tracked, effectiveOf(batchId))
-          .write.mode("overwrite").parquet(s"$dimDir/v$batchId")
-        versionIds(dimDir).filter(_ < batchId - keepVersions)
-          .foreach { old =>
-            import scala.reflect.io.Directory
-            new Directory(new java.io.File(dimDir, s"v$old"))
-              .deleteRecursively()
-          }
-      }
-      .start()
-
-  /** The dimension as of its latest committed version (the read-side
-    * of [[maintainDim]]'s version-only layout). */
-  def readDim(spark: SparkSession, dimDir: String): DataFrame =
-    latestVersion(dimDir) match {
-      case Some(v) => spark.read.parquet(s"$dimDir/v$v")
-      case None => sys.error(s"no committed dimension under $dimDir")
     }
 
-  private def versionIds(dimDir: String): Seq[Long] =
-    Option(new java.io.File(dimDir).listFiles()).toSeq.flatten
-      .flatMap { f =>
-        val n = f.getName
-        // only COMMITTED versions count: a crash mid-write leaves the
-        // _SUCCESS marker absent and the replay overwrites the dir
-        if (n.startsWith("v") && n.drop(1).forall(_.isDigit) &&
-            new java.io.File(f, "_SUCCESS").exists())
-          Some(n.drop(1).toLong)
-        else None
-      }
-
-  private def latestVersion(dimDir: String): Option[Long] =
-    versionIds(dimDir).sorted.lastOption
+  /** The dimension as of its latest committed version (the read side
+    * of [[maintainDim]]). */
+  def readDim(spark: SparkSession, dimDir: String): DataFrame =
+    VersionedStore.latest(spark, dimDir).getOrElse(
+      sys.error(s"no committed dimension under $dimDir"))
 
   // ----------------------------------------------------- oracle query
   /** q110: the merge over a deterministically synthesized history of

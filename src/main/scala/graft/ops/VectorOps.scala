@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -363,29 +363,10 @@ object VectorOps {
     * argmin. The trained-quantizer step of an IVF ANN index. */
   val q65IvfAssign: Q = (s, d) => {
     import s.implicits._
-    val dims = Tables.embeddings(s, d)
-      .select($"label", posexplode($"embedding").as(Seq("pos", "v")))
-      .withColumn("v", $"v".cast("double"))
-    val centroids = dims.groupBy($"label".as("c_label"), $"pos")
-      .agg((sum($"v".cast("decimal(30,8)")).cast("double")
-        / count(lit(1))).as("c"))
-    // k centroids → one row: array of (c_label, carr) ordered structs.
-    // collect_list order is nondeterministic; array_sort fixes it (pos
-    // and c_label are unique keys within their groups).
-    val packed = centroids
-      .groupBy($"c_label")
-      .agg(array_sort(collect_list(struct($"pos", $"c"))).as("pc"))
-      .select($"c_label", expr("transform(pc, x -> x.c)").as("carr"))
-      .agg(array_sort(collect_list(struct($"c_label", $"carr")))
-        .as("cents"))
+    val packed = packCentroids(labelCentroids(s, d))
     Tables.embeddings(s, d)
       .join(broadcast(packed))
-      // argmin over the centroid array per row; struct ordering gives
-      // the (d2 asc, c_label asc) tie-break in one array_min
-      .withColumn("assigned", expr(
-        """array_min(transform(cents, ct -> named_struct(
-             'd2', l2sq_native(embedding, ct.carr),
-             'c_label', ct.c_label))).c_label"""))
+      .withColumn("assigned", expr(s"$nearestCentroid.c_label"))
       .groupBy($"label", $"assigned")
       .agg(count(lit(1)).as("n_vecs"))
   }
@@ -429,16 +410,7 @@ object VectorOps {
     * runs at 100 TB. */
   val q91SemDedupCentroid: Q = (s, d) => {
     import s.implicits._
-    val dims = Tables.embeddings(s, d)
-      .select($"label", posexplode($"embedding").as(Seq("pos", "v")))
-      .withColumn("v", $"v".cast("double"))
-    val packed = dims.groupBy($"label".as("c_label"), $"pos")
-      .agg((sum($"v".cast("decimal(30,8)")).cast("double")
-        / count(lit(1))).as("c"))
-      .groupBy($"c_label")
-      .agg(array_sort(collect_list(struct($"pos", $"c"))).as("pc"))
-      .select($"c_label".as("label"),
-        expr("transform(pc, x -> x.c)").as("carr"))
+    val packed = centroidArrays(Tables.embeddings(s, d), Seq($"label"))
     Tables.embeddings(s, d)
       .join(broadcast(packed), Seq("label"))
       .withColumn("cos_c",
@@ -540,48 +512,62 @@ object VectorOps {
     * centroid maintenance ([[graft.streaming.CorpusStreaming
     * .maintainCentroids]]) keeps sufficient statistics against. */
   private[graft] def labelCentroids(s: SparkSession,
-                                    d: String): DataFrame = {
-    import s.implicits._
-    val dims = Tables.embeddings(s, d)
-      .select($"label", posexplode($"embedding").as(Seq("pos", "v")))
-      .withColumn("v", $"v".cast("double"))
-    dims.groupBy($"label".as("c_label"), $"pos")
-      .agg((sum($"v".cast("decimal(30,8)")).cast("double")
-        / count(lit(1))).as("c"))
-      .groupBy($"c_label")
-      .agg(array_sort(collect_list(struct($"pos", $"c"))).as("pc"))
-      .select($"c_label", expr("transform(pc, x -> x.c)").as("carr"))
+                                    d: String): DataFrame =
+    centroidArrays(Tables.embeddings(s, d), Seq(col("label").as("c_label")))
+
+  /** The exact per-dimension mean of `embedding` per group of `keys`
+    * (no keys: the one global row) — (keys..., `out`, n) with `n` the
+    * group's vector count. Each coordinate is a decimal(30,8) sum
+    * divided once in double: order-independent and the oracles' exact
+    * spelling. The 64× posexplode's map-side combine shrinks it to
+    * groups×64 rows before the only exchange. */
+  private[graft] def centroidArrays(vecs: DataFrame, keys: Seq[Column],
+                                    out: String = "carr"): DataFrame = {
+    val dims = vecs
+      .select(keys :+ posexplode(col("embedding")).as(Seq("pos", "v")): _*)
+      .withColumn("v", col("v").cast("double"))
+    val keyCols = dims.columns.toSeq.dropRight(2).map(col)
+    dims.groupBy(keyCols :+ col("pos"): _*)
+      .agg((sum(col("v").cast("decimal(30,8)")).cast("double")
+        / count(lit(1))).as("c"), count(lit(1)).as("n"))
+      .groupBy(keyCols: _*)
+      .agg(array_sort(collect_list(struct(col("pos"), col("c")))).as("pc"),
+        max(col("n")).as("n"))
+      .select(keyCols ++ Seq(expr("transform(pc, x -> x.c)").as(out),
+        col("n")): _*)
   }
+
+  /** k centroids (c_label, carr) → one broadcastable row `cents` of
+    * ordered structs. collect_list order is nondeterministic;
+    * array_sort fixes it (c_label is unique). */
+  private[graft] def packCentroids(cents: DataFrame): DataFrame =
+    cents.agg(array_sort(collect_list(struct(col("c_label"), col("carr"))))
+      .as("cents"))
+
+  /** In-row argmin of `embedding` over the packed `cents`: the
+    * (d2, c_label) struct of the nearest centroid — struct ordering
+    * gives the (d2 asc, c_label asc) tie-break in one array_min. The
+    * 64-dim distance fold is the native l2sq kernel; the outer
+    * transform over k centroids stays a (tiny) lambda. */
+  private[graft] val nearestCentroid: String =
+    """array_min(transform(cents, ct -> named_struct(
+         'd2', l2sq_native(embedding, ct.carr),
+         'c_label', ct.c_label)))"""
 
   val q102LloydStep: Q = (s, d) => {
     import s.implicits._
     val packedPer = labelCentroids(s, d)
-    val packed = packedPer
-      .agg(array_sort(collect_list(struct($"c_label", $"carr")))
-        .as("cents"))
+    val packed = packCentroids(packedPer)
     val assigned = Tables.embeddings(s, d)
       .join(broadcast(packed))
-      .withColumn("a", expr(
-        // the 64-dim distance fold is the native l2sq kernel; the
-        // outer transform over k centroids stays a (tiny) lambda
-        """array_min(transform(cents, ct -> named_struct(
-             'd2', l2sq_native(embedding, ct.carr),
-             'c_label', ct.c_label)))"""))
+      .withColumn("a", expr(nearestCentroid))
       .select($"vec_id", $"embedding",
         $"a.c_label".as("cell"), $"a.d2".as("d2"))
       .localCheckpoint(eager = false)
     val census = assigned.groupBy($"cell")
       .agg(count(lit(1)).as("n_vecs"),
         sum($"d2".cast("decimal(30,8)")).cast("double").as("inertia"))
-    val newc = assigned
-      .select($"cell", posexplode($"embedding").as(Seq("pos", "v")))
-      .withColumn("v", $"v".cast("double"))
-      .groupBy($"cell", $"pos")
-      .agg((sum($"v".cast("decimal(30,8)")).cast("double")
-        / count(lit(1))).as("c"))
-      .groupBy($"cell")
-      .agg(array_sort(collect_list(struct($"pos", $"c"))).as("pc"))
-      .select($"cell", expr("transform(pc, x -> x.c)").as("narr"))
+    val newc = centroidArrays(assigned, Seq($"cell"), "narr")
     census
       .join(newc, Seq("cell"))
       .join(broadcast(packedPer.select($"c_label".as("cell"), $"carr")),
@@ -744,17 +730,7 @@ object VectorOps {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
     // coarse centroids (q65's construction) → one broadcast row
-    val packed = emb
-      .select($"label", posexplode($"embedding").as(Seq("pos", "v")))
-      .withColumn("v", $"v".cast("double"))
-      .groupBy($"label".as("c_label"), $"pos")
-      .agg((sum($"v".cast("decimal(30,8)")).cast("double")
-        / count(lit(1))).as("c"))
-      .groupBy($"c_label")
-      .agg(array_sort(collect_list(struct($"pos", $"c"))).as("pc"))
-      .select($"c_label", expr("transform(pc, x -> x.c)").as("carr"))
-      .agg(array_sort(collect_list(struct($"c_label", $"carr")))
-        .as("cents"))
+    val packed = packCentroids(labelCentroids(s, d))
       // single row, consumed by BOTH the index build and the query
       // routing — materialize so the 64× posexplode aggregate behind
       // it runs once
@@ -768,10 +744,7 @@ object VectorOps {
     // index build: coarse cell + PQ code word per vector, one pass
     val index = emb
       .join(broadcast(packed)).join(broadcast(codebook))
-      .withColumn("cell", expr(
-        """array_min(transform(cents, ct -> named_struct(
-             'd2', l2sq_native(embedding, ct.carr),
-             'c_label', ct.c_label))).c_label"""))
+      .withColumn("cell", expr(s"$nearestCentroid.c_label"))
       .withColumn("codes", expr(
         s"""transform(sequence(0, ${PqM - 1}), s ->
               array_min(transform(cb, c -> named_struct(
@@ -944,15 +917,7 @@ object VectorOps {
     * (map-side combined, label cardinality-bounded). */
   val q124EmbedOutliers: Q = (s, d) => {
     import s.implicits._
-    val dims = Tables.embeddings(s, d)
-      .select($"label", posexplode($"embedding").as(Seq("pos", "v")))
-      .withColumn("v", $"v".cast("double"))
-    val packed = dims.groupBy($"label", $"pos")
-      .agg((sum($"v".cast("decimal(30,8)")).cast("double")
-        / count(lit(1))).as("c"))
-      .groupBy($"label")
-      .agg(array_sort(collect_list(struct($"pos", $"c"))).as("pc"))
-      .select($"label", expr("transform(pc, x -> x.c)").as("carr"))
+    val packed = centroidArrays(Tables.embeddings(s, d), Seq($"label"))
     val dist = Tables.embeddings(s, d)
       .join(broadcast(packed), Seq("label"))
       .withColumn("d2", expr("l2sq_native(embedding, carr)"))
@@ -1337,20 +1302,8 @@ object VectorOps {
     * sorts or pairs. */
   val q217EmbeddingDrift: Q = (s, d) => {
     import s.implicits._
-    val dims = Tables.embeddings(s, d)
-      .select($"label", posexplode($"embedding").as(Seq("pos", "v")))
-      .withColumn("v", $"v".cast("double"))
-    val cent = dims.groupBy($"label", $"pos")
-      .agg((sum($"v".cast("decimal(30,8)")).cast("double")
-        / count(lit(1))).as("c"))
-      .groupBy($"label")
-      .agg(array_sort(collect_list(struct($"pos", $"c"))).as("pc"))
-      .select($"label", expr("transform(pc, x -> x.c)").as("carr"))
-    val global = dims.groupBy($"pos")
-      .agg((sum($"v".cast("decimal(30,8)")).cast("double")
-        / count(lit(1))).as("c"))
-      .agg(array_sort(collect_list(struct($"pos", $"c"))).as("pc"))
-      .select(expr("transform(pc, x -> x.c)").as("garr"))
+    val cent = centroidArrays(Tables.embeddings(s, d), Seq($"label"))
+    val global = centroidArrays(Tables.embeddings(s, d), Nil, "garr")
     // the within pass already aggregates at cell grain — it carries
     // the cell counts too (no third corpus scan just for n_vecs)
     val within = Tables.embeddings(s, d)
@@ -1438,20 +1391,8 @@ object VectorOps {
       .select($"doc_id".as("vec_id"), $"shard")
     val vecs = Tables.embeddings(s, d).select($"vec_id", $"embedding")
       .join(docShard, Seq("vec_id"))
-    val dims = vecs
-      .select($"shard", posexplode($"embedding").as(Seq("pos", "v")))
-      .withColumn("v", $"v".cast("double"))
-    val cent = dims.groupBy($"shard", $"pos")
-      .agg((sum($"v".cast("decimal(30,8)")).cast("double")
-        / count(lit(1))).as("c"))
-      .groupBy($"shard")
-      .agg(array_sort(collect_list(struct($"pos", $"c"))).as("pc"))
-      .select($"shard", expr("transform(pc, x -> x.c)").as("carr"))
-    val global = dims.groupBy($"pos")
-      .agg((sum($"v".cast("decimal(30,8)")).cast("double")
-        / count(lit(1))).as("c"))
-      .agg(array_sort(collect_list(struct($"pos", $"c"))).as("pc"))
-      .select(expr("transform(pc, x -> x.c)").as("garr"))
+    val cent = centroidArrays(vecs, Seq($"shard"))
+    val global = centroidArrays(vecs, Nil, "garr")
     val within = vecs
       .join(broadcast(cent), Seq("shard"))
       .withColumn("d2", expr("l2sq_native(embedding, carr)"))
@@ -2138,17 +2079,7 @@ object VectorOps {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
       .withColumn("norm", sqrt(expr(dot("embedding", "embedding"))))
-    val packed = emb
-      .select($"label", posexplode($"embedding").as(Seq("pos", "v")))
-      .withColumn("v", $"v".cast("double"))
-      .groupBy($"label".as("c_label"), $"pos")
-      .agg((sum($"v".cast("decimal(30,8)")).cast("double")
-        / count(lit(1))).as("c"))
-      .groupBy($"c_label")
-      .agg(array_sort(collect_list(struct($"pos", $"c"))).as("pc"))
-      .select($"c_label", expr("transform(pc, x -> x.c)").as("carr"))
-      .agg(array_sort(collect_list(struct($"c_label", $"carr")))
-        .as("cents"))
+    val packed = packCentroids(labelCentroids(s, d))
       .localCheckpoint(eager = false) // consumed by routing AND corpus assignment
     val queries0 = emb
       .filter($"vec_id" % 100 === 0 && $"vec_id" < 2500)
@@ -2164,10 +2095,7 @@ object VectorOps {
       .select($"query_id", $"cc.c_label".as("cell"),
         ($"p" + 1).cast("long").as("cellrank"))
     val cands = emb.join(broadcast(packed))
-      .withColumn("cell", expr(
-        """array_min(transform(cents, ct -> named_struct(
-             'd2', l2sq_native(embedding, ct.carr),
-             'c_label', ct.c_label))).c_label"""))
+      .withColumn("cell", expr(s"$nearestCentroid.c_label"))
       .select($"vec_id".as("neighbor_id"), $"embedding".as("n_emb"),
         $"norm".as("n_norm"), $"cell")
     val pairs = cands.join(broadcast(routing), Seq("cell"))
@@ -2310,24 +2238,11 @@ object VectorOps {
     * verbatim. */
   val q248SplitDrift: Q = (s, d) => {
     import s.implicits._
-    val dims = Tables.embeddings(s, d)
+    val vecs = Tables.embeddings(s, d)
       .withColumn("split", CorpusOps.splitAssign($"vec_id"))
-      .select($"split", posexplode($"embedding").as(Seq("pos", "v")))
-      .withColumn("v", $"v".cast("double"))
-    val perSplit = dims.groupBy($"split", $"pos")
-      .agg((sum($"v".cast("decimal(30,8)")).cast("double")
-        / count(lit(1))).as("c"),
-        count(lit(1)).as("nv"))
-    val packed = perSplit.groupBy($"split")
-      .agg(array_sort(collect_list(struct($"pos", $"c"))).as("pc"),
-        max($"nv").cast("long").as("n_vecs"))
-      .select($"split", expr("transform(pc, x -> x.c)").as("carr"),
-        $"n_vecs")
-    val global = dims.groupBy($"pos")
-      .agg((sum($"v".cast("decimal(30,8)")).cast("double")
-        / count(lit(1))).as("g"))
-      .agg(array_sort(collect_list(struct($"pos", $"g"))).as("pg"))
-      .select(expr("transform(pg, x -> x.g)").as("garr"))
+    val packed = centroidArrays(vecs, Seq($"split"))
+      .withColumnRenamed("n", "n_vecs")
+    val global = centroidArrays(vecs, Nil, "garr")
     packed.join(broadcast(global))
       .withColumn("d2_to_global", expr(
         """aggregate(zip_with(carr, garr, (a, b) -> (a - b) * (a - b)),
@@ -2390,22 +2305,9 @@ object VectorOps {
   val q244ClusterBalanced: Q = (s, d) => {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
-    val packed = emb
-      .select($"label", posexplode($"embedding").as(Seq("pos", "v")))
-      .withColumn("v", $"v".cast("double"))
-      .groupBy($"label".as("c_label"), $"pos")
-      .agg((sum($"v".cast("decimal(30,8)")).cast("double")
-        / count(lit(1))).as("c"))
-      .groupBy($"c_label")
-      .agg(array_sort(collect_list(struct($"pos", $"c"))).as("pc"))
-      .select($"c_label", expr("transform(pc, x -> x.c)").as("carr"))
-      .agg(array_sort(collect_list(struct($"c_label", $"carr")))
-        .as("cents"))
+    val packed = packCentroids(labelCentroids(s, d))
     val assigned = emb.join(broadcast(packed))
-      .withColumn("cell", expr(
-        """array_min(transform(cents, ct -> named_struct(
-             'd2', l2sq_native(embedding, ct.carr),
-             'c_label', ct.c_label))).c_label"""))
+      .withColumn("cell", expr(s"$nearestCentroid.c_label"))
       .withColumn("h",
         (pmod($"vec_id", lit(1000000007L)) * lit(2654435761L)
           + lit(44L * 40503L)) % lit(1000000007L))

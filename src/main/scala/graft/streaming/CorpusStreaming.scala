@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import graft.ops.VectorOps
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.functions._
 
 /** Streaming faces of the corpus-curation tier: the intake path of an
@@ -247,51 +248,33 @@ object CorpusStreaming {
     * exactly with a from-scratch recompute over everything ingested —
     * the contract StreamingSpec pins (two batches ≡ one batch).
     *
-    * Layout follows [[graft.ops.Scd2.maintainDim]]: each commit
-    * writes version directory `v<batchId>` (replay of an uncommitted
-    * batch overwrites the SAME version — idempotent), reads the
-    * previous version, never reads what it overwrites. The table is
+    * Each micro-batch is one [[VersionedStore]] commit (idempotent
+    * replay, only `_SUCCESS`-committed versions served). The table is
     * partition-grain (one row per source), so at 100 TB/day intake
     * the maintained state is bytes while the audit it powers (q177
     * against a mirror) would otherwise rescan the corpus. */
   def maintainChecksums(docs: DataFrame, tableDir: String,
-                        checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeChecksums(batch, tableDir, batchId)
-      }
-      .start()
+                        checkpointDir: String): StreamingQuery =
+    VersionedStore.maintain(docs, tableDir, checkpointDir)(
+      (batch, prev, _) => foldChecksums(batch, prev))
 
   /** One merge commit — separated so the incremental ≡ recompute
     * contract is testable without a streaming harness. */
   private[streaming] def mergeChecksums(batch: DataFrame,
                                         tableDir: String,
-                                        batchId: Long): Unit = {
-    val spark = batch.sparkSession
+                                        batchId: Long): Unit =
+    VersionedStore.commit(batch, tableDir, batchId)(
+      foldChecksums(batch, _))
+
+  private def foldChecksums(batch: DataFrame,
+                            prev: Option[DataFrame]): DataFrame = {
     val delta = checksumCensus(batch)
-    // merge against the latest version STRICTLY BEFORE this batch:
-    // a replayed (crashed-uncommitted) batch re-reads its own
-    // predecessor and overwrites its own version — idempotent;
-    // reading `v$batchId` itself would double-merge the delta
-    val conf = spark.sparkContext.hadoopConfiguration
-    val merged = versionIds(tableDir, conf).filter(_ < batchId)
-      .sorted.lastOption match {
-      case Some(v) =>
-        spark.read.parquet(s"$tableDir/v$v").unionByName(delta)
-          .groupBy(col("source"))
-          .agg(sum(col("n_rows")).cast("long").as("n_rows"),
-            expr("bit_xor(xor_fp)").as("xor_fp"),
-            pmod(sum(col("sum_fp")), lit(1000000007L)).cast("long")
-              .as("sum_fp"))
-      case None => delta
-    }
-    merged.write.mode("overwrite").parquet(s"$tableDir/v$batchId")
-    versionIds(tableDir, conf).filter(_ < batchId - 3).foreach { old =>
-      val p = new HPath(s"$tableDir/v$old")
-      p.getFileSystem(conf).delete(p, true)
-    }
+    prev.fold(delta)(_.unionByName(delta)
+      .groupBy(col("source"))
+      .agg(sum(col("n_rows")).cast("long").as("n_rows"),
+        expr("bit_xor(xor_fp)").as("xor_fp"),
+        pmod(sum(col("sum_fp")), lit(1000000007L)).cast("long")
+          .as("sum_fp")))
   }
 
   /** The per-source checksum census (q177's three lanes, with the
@@ -305,35 +288,9 @@ object CorpusStreaming {
           .cast("long").as("sum_fp"))
 
   /** The checksum table as of its latest committed version. */
-  def currentChecksums(spark: org.apache.spark.sql.SparkSession,
+  def currentChecksums(spark: SparkSession,
                        tableDir: String): Option[DataFrame] =
-    latestVersion(tableDir, spark.sparkContext.hadoopConfiguration)
-      .map(v => spark.read.parquet(s"$tableDir/v$v"))
-
-  /** Only COMMITTED versions count: Spark's parquet committer drops
-    * `_SUCCESS` at job completion, so a crash mid-write (or a reader
-    * racing a replay's overwrite) leaves a directory this listing
-    * ignores — both the merge's read-side and [[currentChecksums]]
-    * would otherwise serve a partially-written table as truth.
-    * Listed through the Hadoop FileSystem API, so the versioned layout
-    * works on any supported store (HDFS/S3A/local), not just local FS. */
-  private def versionIds(dir: String,
-                         conf: org.apache.hadoop.conf.Configuration)
-      : Seq[Long] = {
-    val p = new HPath(dir)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v")
-        && fs.exists(new HPath(st.getPath, "_SUCCESS")))
-      .flatMap(st =>
-        scala.util.Try(st.getPath.getName.drop(1).toLong).toOption)
-  }
-
-  private def latestVersion(dir: String,
-                            conf: org.apache.hadoop.conf.Configuration)
-      : Option[Long] =
-    versionIds(dir, conf).sorted.lastOption
+    VersionedStore.latest(spark, tableDir)
 
   // ------------------------------------------- streaming reservoir
   /** Streaming weighted reservoir — the online face of batch q187's
@@ -344,44 +301,31 @@ object CorpusStreaming {
     * homomorphism (topk(A ∪ B) = topk(topk(A) ∪ topk(B))), so the
     * incrementally-maintained sample coincides EXACTLY with batch
     * q187 over everything ingested — StreamingSpec pins stream ≡
-    * batch on the full corpus, split across batches. Versioned commit
-    * layout follows [[maintainChecksums]] (idempotent replay, only
-    * `_SUCCESS`-committed versions served).
+    * batch on the full corpus, split across batches. One
+    * [[VersionedStore]] commit per micro-batch.
     *
     * 100 TB design: per-batch work is one k-bounded TakeOrdered
     * (partial heaps, no sort); maintained state is k rows regardless
     * of intake volume — the "always-fresh eval sample" a continuously
     * ingesting pipeline reads without ever rescanning the corpus. */
   def maintainReservoir(docs: DataFrame, tableDir: String,
-                        checkpointDir: String, k: Int = 100)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeReservoir(batch, tableDir, batchId, k)
-      }
-      .start()
+                        checkpointDir: String,
+                        k: Int = 100): StreamingQuery =
+    VersionedStore.maintain(docs, tableDir, checkpointDir)(
+      (batch, prev, _) => foldReservoir(batch, prev, k))
 
   /** One reservoir merge commit — separated so the incremental ≡
     * batch-q187 contract is testable without a streaming harness. */
   private[streaming] def mergeReservoir(batch: DataFrame,
                                         tableDir: String,
-                                        batchId: Long, k: Int): Unit = {
-    val spark = batch.sparkSession
+                                        batchId: Long, k: Int): Unit =
+    VersionedStore.commit(batch, tableDir, batchId)(
+      foldReservoir(batch, _, k))
+
+  private def foldReservoir(batch: DataFrame, prev: Option[DataFrame],
+                            k: Int): DataFrame = {
     val delta = reservoirCensus(batch, k)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val merged = versionIds(tableDir, conf).filter(_ < batchId)
-      .sorted.lastOption match {
-      case Some(v) =>
-        reservoirTopK(
-          spark.read.parquet(s"$tableDir/v$v").unionByName(delta), k)
-      case None => delta
-    }
-    merged.write.mode("overwrite").parquet(s"$tableDir/v$batchId")
-    versionIds(tableDir, conf).filter(_ < batchId - 3).foreach { old =>
-      val p = new HPath(s"$tableDir/v$old")
-      p.getFileSystem(conf).delete(p, true)
-    }
+    prev.fold(delta)(p => reservoirTopK(p.unionByName(delta), k))
   }
 
   /** Batch-q187 spelling over one intake batch (doc_id + n_chars). */
@@ -410,10 +354,9 @@ object CorpusStreaming {
       .orderBy(col("priority").asc, col("doc_id").asc).limit(k)
 
   /** The reservoir as of its latest committed version. */
-  def currentReservoir(spark: org.apache.spark.sql.SparkSession,
+  def currentReservoir(spark: SparkSession,
                        tableDir: String): Option[DataFrame] =
-    latestVersion(tableDir, spark.sparkContext.hadoopConfiguration)
-      .map(v => spark.read.parquet(s"$tableDir/v$v"))
+    VersionedStore.latest(spark, tableDir)
 
   // ------------------------- incremental IVF centroid maintenance
   /** Online twin of batch q102's Lloyd update through the versioned-
@@ -442,14 +385,10 @@ object CorpusStreaming {
     * never shuffle; the only exchange is the k×64-group stats
     * aggregate). */
   def maintainCentroids(vecs: DataFrame, tableDir: String,
-                        checkpointDir: String, seed: DataFrame)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeCentroids(batch, tableDir, batchId, seed)
-      }
-      .start()
+                        checkpointDir: String,
+                        seed: DataFrame): StreamingQuery =
+    VersionedStore.maintain(vecs, tableDir, checkpointDir)(
+      (batch, prev, _) => foldCentroids(batch, prev, seed))
 
   /** One stats merge commit — separated so stream ≡ batch-q102 is
     * testable without a streaming harness. `seed` is (c_label, carr)
@@ -457,22 +396,14 @@ object CorpusStreaming {
   private[streaming] def mergeCentroids(batch: DataFrame,
                                         tableDir: String,
                                         batchId: Long,
-                                        seed: DataFrame): Unit = {
-    val spark = batch.sparkSession
+                                        seed: DataFrame): Unit =
+    VersionedStore.commit(batch, tableDir, batchId)(
+      foldCentroids(batch, _, seed))
+
+  private def foldCentroids(batch: DataFrame, prev: Option[DataFrame],
+                            seed: DataFrame): DataFrame = {
     val delta = centroidStats(batch, seed)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val merged = versionIds(tableDir, conf).filter(_ < batchId)
-      .sorted.lastOption match {
-      case Some(v) =>
-        mergeStats(
-          spark.read.parquet(s"$tableDir/v$v").unionByName(delta))
-      case None => delta
-    }
-    merged.write.mode("overwrite").parquet(s"$tableDir/v$batchId")
-    versionIds(tableDir, conf).filter(_ < batchId - 3).foreach { old =>
-      val p = new HPath(s"$tableDir/v$old")
-      p.getFileSystem(conf).delete(p, true)
-    }
+    prev.fold(delta)(p => mergeStats(p.unionByName(delta)))
   }
 
   /** Per-cell sufficient statistics of one vector batch under the
@@ -481,17 +412,12 @@ object CorpusStreaming {
     * the merged table reproduce the batch recompute bit-for-bit. */
   private[streaming] def centroidStats(vecs: DataFrame,
                                        seed: DataFrame): DataFrame = {
-    val packed = seed
-      .agg(array_sort(collect_list(struct(col("c_label"), col("carr"))))
-        .as("cents"))
+    val packed = VectorOps.packCentroids(seed)
     val assigned = vecs
       .groupBy(col("vec_id"))
       .agg(min(col("embedding")).as("embedding")) // deterministic
       .join(broadcast(packed))
-      .withColumn("a", expr(
-        """array_min(transform(cents, ct -> named_struct(
-             'd2', l2sq_native(embedding, ct.carr),
-             'c_label', ct.c_label)))"""))
+      .withColumn("a", expr(VectorOps.nearestCentroid))
       .select(col("embedding"), col("a.c_label").as("cell"),
         col("a.d2").as("d2"))
       .localCheckpoint() // feeds the cell census AND the dim sums
@@ -506,12 +432,15 @@ object CorpusStreaming {
       .groupBy(col("cell"), col("pos"))
       .agg(sum(col("v").cast("decimal(30,8)")).cast("decimal(38,8)")
         .as("s"))
-      .groupBy(col("cell"))
+    cells.join(packSums(sums), Seq("cell"))
+  }
+
+  /** (cell, pos, s) → (cell, sums) with `sums` in pos order. */
+  private def packSums(cellPosSums: DataFrame): DataFrame =
+    cellPosSums.groupBy(col("cell"))
       .agg(array_sort(collect_list(struct(col("pos"), col("s"))))
         .as("ps"))
       .select(col("cell"), expr("transform(ps, x -> x.s)").as("sums"))
-    cells.join(sums, Seq("cell"))
-  }
 
   /** Re-collapse a union of stats tables to one row per cell (counts
     * add; inertia adds; sums add element-wise — all exact). */
@@ -523,32 +452,24 @@ object CorpusStreaming {
       .select(col("cell"), posexplode(col("sums")).as(Seq("pos", "s")))
       .groupBy(col("cell"), col("pos"))
       .agg(sum(col("s")).cast("decimal(38,8)").as("s"))
-      .groupBy(col("cell"))
-      .agg(array_sort(collect_list(struct(col("pos"), col("s"))))
-        .as("ps"))
-      .select(col("cell"), expr("transform(ps, x -> x.s)").as("sums"))
-    cells.join(sums, Seq("cell"))
+    cells.join(packSums(sums), Seq("cell"))
   }
 
   /** The maintained table rendered as q102's report — (cell, n_vecs,
     * inertia, movement) plus the re-centered `centroid` a re-index
     * consumes. `seed` must be the same frame the maintenance ran
     * against. */
-  def currentCentroids(spark: org.apache.spark.sql.SparkSession,
-                       tableDir: String,
+  def currentCentroids(spark: SparkSession, tableDir: String,
                        seed: DataFrame): Option[DataFrame] =
-    latestVersion(tableDir, spark.sparkContext.hadoopConfiguration)
-      .map { v =>
-        spark.read.parquet(s"$tableDir/v$v")
-          .withColumn("centroid", expr(
-            "transform(sums, x -> CAST(x AS DOUBLE) / n)"))
-          .join(seed.select(col("c_label").as("cell"), col("carr")),
-            Seq("cell"))
-          .select(col("cell"), col("n").as("n_vecs"),
-            col("inertia").cast("double").as("inertia"),
-            sqrt(expr("l2sq_native(carr, centroid)")).as("movement"),
-            col("centroid"))
-      }
+    VersionedStore.latest(spark, tableDir).map(
+      _.withColumn("centroid", expr(
+          "transform(sums, x -> CAST(x AS DOUBLE) / n)"))
+        .join(seed.select(col("c_label").as("cell"), col("carr")),
+          Seq("cell"))
+        .select(col("cell"), col("n").as("n_vecs"),
+          col("inertia").cast("double").as("inertia"),
+          sqrt(expr("l2sq_native(carr, centroid)")).as("movement"),
+          col("centroid")))
 
   /** Per-source intake census over the deduped stream: docs admitted
     * per (window, source) — the monitoring mart an intake pipeline

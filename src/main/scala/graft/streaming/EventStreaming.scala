@@ -59,6 +59,36 @@ object EventStreaming {
                            session_end: java.sql.Timestamp,
                            n_events: Long, total_value: Double)
 
+  private def toSession(key: Long, s: SessionState): Session =
+    Session(key, new java.sql.Timestamp(s.start),
+      new java.sql.Timestamp(s.lastSeen), s.nEvents, s.totalValue)
+
+  /** The gap rule for one event: `e` extends the `open` session when it
+    * falls within `gapMillis` of its last event; otherwise it starts a
+    * new session and the open one (returned first) closes. */
+  def nextSession(open: Option[SessionState], e: Event,
+                  gapMillis: Long): (Option[SessionState], SessionState) = {
+    val t = e.ts.getTime
+    open match {
+      case Some(s) if t - s.lastSeen <= gapMillis =>
+        (None, s.copy(lastSeen = math.max(s.lastSeen, t),
+          nEvents = s.nEvents + 1, totalValue = s.totalValue + e.value))
+      case closed => (closed, SessionState(t, t, 1, e.value))
+    }
+  }
+
+  /** One key's events folded in time order through [[nextSession]],
+    * starting from `open`: the sessions they closed and the session
+    * left open. */
+  def foldSessions(open: Option[SessionState], rows: Iterator[Event],
+                   gapMillis: Long): (Seq[SessionState], Option[SessionState]) =
+    rows.toSeq.sortBy(_.ts.getTime)
+      .foldLeft((Vector.empty[SessionState], open)) {
+        case ((closed, cur), e) =>
+          val (done, next) = nextSession(cur, e, gapMillis)
+          (closed ++ done, Some(next))
+      }
+
   /** Per-user sessionization with an inactivity gap: custom state via
     * flatMapGroupsWithState (the engine's arbitrary-stateful path).
     * A session closes when a later event arrives past `gapMillis`
@@ -82,43 +112,23 @@ object EventStreaming {
           if (state.hasTimedOut) {
             val s = state.get
             state.remove()
-            Iterator.single(Session(userId,
-              new java.sql.Timestamp(s.start),
-              new java.sql.Timestamp(s.lastSeen), s.nEvents, s.totalValue))
+            Iterator.single(toSession(userId, s))
           } else {
-            val sorted = rows.toSeq.sortBy(_.ts.getTime)
-            var cur = state.getOption
-            val closed = scala.collection.mutable.ListBuffer.empty[Session]
-            sorted.foreach { e =>
-              val t = e.ts.getTime
-              cur match {
-                case Some(s) if t - s.lastSeen <= gapMillis =>
-                  cur = Some(s.copy(lastSeen = math.max(s.lastSeen, t),
-                    nEvents = s.nEvents + 1,
-                    totalValue = s.totalValue + e.value))
-                case Some(s) =>
-                  closed += Session(userId, new java.sql.Timestamp(s.start),
-                    new java.sql.Timestamp(s.lastSeen), s.nEvents,
-                    s.totalValue)
-                  cur = Some(SessionState(t, t, 1, e.value))
-                case None =>
-                  cur = Some(SessionState(t, t, 1, e.value))
-              }
-            }
-            cur match {
+            val (closed, cur) =
+              foldSessions(state.getOption, rows, gapMillis)
+            val flushed = cur match {
               case Some(st) if emitOpen =>
                 // batch mode: each key is visited exactly once, so the
                 // trailing session must flush here or it is lost
                 state.remove()
-                closed += Session(userId, new java.sql.Timestamp(st.start),
-                  new java.sql.Timestamp(st.lastSeen), st.nEvents,
-                  st.totalValue)
+                closed :+ st
               case Some(st) =>
                 state.update(st)
                 if (useTimeout) state.setTimeoutDuration(gapMillis)
-              case None => ()
+                closed
+              case None => closed
             }
-            closed.iterator
+            flushed.iterator.map(toSession(userId, _))
           }
       }
   }
@@ -148,10 +158,6 @@ object EventStreaming {
       state = getHandle.getValueState("session",
         Encoders.product[SessionState], TTLConfig.NONE)
 
-    private def toSession(key: Long, s: SessionState): Session =
-      Session(key, new java.sql.Timestamp(s.start),
-        new java.sql.Timestamp(s.lastSeen), s.nEvents, s.totalValue)
-
     /** One live timer per key, at the current idle deadline. */
     private def armTimer(deadline: Long): Unit = {
       getHandle.listTimers().foreach(getHandle.deleteTimer)
@@ -166,28 +172,13 @@ object EventStreaming {
 
     override def handleInputRows(key: Long, rows: Iterator[Event],
                                  tv: TimerValues): Iterator[Session] = {
-      val sorted = rows.toSeq.sortBy(_.ts.getTime)
-      var cur = if (state.exists) Some(state.get) else None
-      val closed = scala.collection.mutable.ListBuffer.empty[Session]
-      sorted.foreach { e =>
-        val t = e.ts.getTime
-        cur match {
-          case Some(s) if t - s.lastSeen <= gapMillis =>
-            cur = Some(s.copy(lastSeen = math.max(s.lastSeen, t),
-              nEvents = s.nEvents + 1,
-              totalValue = s.totalValue + e.value))
-          case Some(s) =>
-            closed += toSession(key, s)
-            cur = Some(SessionState(t, t, 1, e.value))
-          case None =>
-            cur = Some(SessionState(t, t, 1, e.value))
-        }
-      }
+      val (closed, cur) = foldSessions(
+        if (state.exists) Some(state.get) else None, rows, gapMillis)
       cur.foreach { st =>
         state.update(st)
         armTimer(st.lastSeen + gapMillis)
       }
-      closed.iterator
+      closed.iterator.map(toSession(key, _))
     }
 
     override def handleExpiredTimer(key: Long, tv: TimerValues,
@@ -308,20 +299,11 @@ object EventStreaming {
       val armedAt = if (armed.exists) armed.get else Long.MinValue
       rows.toSeq.sortBy(_.ts.getTime).foreach { e =>
         val ch = e.event_type
-        val t = e.ts.getTime
         val old = Option(state.getValue(ch))
         if (old.exists(_.lastSeen + gapMillis == armedAt))
           minHolderMoved = true
-        val next = old match {
-          case Some(s) if t - s.lastSeen <= gapMillis =>
-            s.copy(lastSeen = math.max(s.lastSeen, t),
-              nEvents = s.nEvents + 1, totalValue = s.totalValue + e.value)
-          case Some(s) =>
-            closed += toSession(key, ch, s)
-            SessionState(t, t, 1, e.value)
-          case None =>
-            SessionState(t, t, 1, e.value)
-        }
+        val (done, next) = nextSession(old, e, gapMillis)
+        closed ++= done.map(toSession(key, ch, _))
         state.updateValue(ch, next)
         touched += ch
       }

@@ -84,4 +84,15 @@ class DriverContractSpec extends AnyFunSuite {
       s"query-name collisions across modules: ${dups.mkString(", ")}"
     })
   }
+
+  test("the SPARK_GRAFT_ONLY rule selects by substring and names " +
+    "every substring that matches no query") {
+    assert(SparkEntry.selectedNames(None) ==
+      SparkEntry.queries.keys.toSeq.sorted)
+    assert(SparkEntry.selectedNames(Some(" q01_agg, ")) ==
+      Seq("q01_agg_pricing"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.selectedNames(Some("q9999,q01_agg,nope")))
+    assert(e.getMessage.contains("'q9999', 'nope'"), e.getMessage)
+  }
 }

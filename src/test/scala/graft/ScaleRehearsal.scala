@@ -396,13 +396,7 @@ object ScaleRehearsal {
     val repeats = sys.env.get("SPARK_GRAFT_SCALE_REPEATS")
       .map(_.toInt).getOrElse(1)
     val names = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .map { pats =>
-        val all = SparkEntry.queries.keys.toSeq.sorted
-        pats.foreach(p =>
-          require(all.exists(_.contains(p)), s"no query matches '$p'"))
-        all.filter(n => pats.exists(n.contains))
-      }
+      .map(p => SparkEntry.selectedNames(Some(p)))
       .getOrElse(RehearsalQueries)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val metrics = new Metrics

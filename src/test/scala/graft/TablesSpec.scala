@@ -13,4 +13,12 @@ class TablesSpec extends AnyFunSuite {
     assert(Tables.scanPartitions(spark, missing) ==
       spark.sparkContext.defaultParallelism)
   }
+
+  test("reading events leaves the caller's session conf unchanged") {
+    val s = TestSession.spark.newSession()
+    val before = s.conf.getAll
+    val ts = Tables.events(s, "/root/testdata/sf0.001").schema("ts")
+    assert(ts.dataType == org.apache.spark.sql.types.TimestampType)
+    assert(s.conf.getAll == before)
+  }
 }

@@ -808,6 +808,30 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("SCD2 maintenance lists versions of a file: URI dimension dir") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dim = "file:" + java.nio.file.Files.createTempDirectory("dim_uri")
+    val ckpt = java.nio.file.Files.createTempDirectory("dim_uri_ckpt").toString
+    val input = MemoryStream[(Long, String)]
+    val q = graft.ops.Scd2.maintainDim(
+      input.toDF().toDF("k", "seg"), dim, ckpt,
+      "k", Seq("seg"), id => s"2024-06-0${id + 1}")
+    try {
+      input.addData((1L, "A"), (2L, "B"))
+      q.processAllAvailable()
+      // batch 1 must merge against batch 0's committed version
+      input.addData((1L, "Z"))
+      q.processAllAvailable()
+      val v1 = graft.ops.Scd2.readDim(spark, dim).collect()
+        .map(r => (r.getAs[Long]("k"), r.getAs[String]("seg"),
+          r.getAs[String]("valid_to"))).toSet
+      assert(v1 == Set((1L, "A", "2024-06-02"), (1L, "Z", null),
+        (2L, "B", "2024-06-02")), v1.mkString(";"))
+    } finally q.stop()
+  }
+
   test("intake census aggregates the deduped stream per window+source") {
     val s = spark
     import s.implicits._
